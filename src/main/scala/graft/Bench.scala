@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: one JSON line with total + per-query seconds.
  *
@@ -66,32 +64,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deployment sizing, mirrored by every graft main: executors of
-      // this memory class (tens of GiB) can hash-broadcast dimensions
-      // well past Spark's conservative 10 MB default; 32 MB keeps the
-      // sf0.1 node-category dimension (~15 MB cached) on the broadcast
-      // side of the build-time denorm joins instead of shuffling the
-      // 1.3 M-row edge table twice. Operators stay stats-adaptive —
-      // genuinely large sides still shuffle.
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      // Codegen class cache sized to the WORKLOAD, not Spark's default
-      // 100 entries: a serving process answering 100+ distinct prepared
-      // queries compiles several generated classes per plan, so the
-      // default LRU churns and every repeat RE-COMPILES its generated
-      // code (janino, 50-200 ms for a large filter) — measured r13 as a
-      // consistent 2-3x p50 inflation on the expression-heavy lookups
-      // (g15 0.33 s in the full 108-key run vs 0.18 s benched alone,
-      // identical plans). Static conf — must be set before the first
-      // session. Memory cost is bounded: compiled classes, not data.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession(cpus)
 
     // Phase 1 — ingest (one-time per corpus drop, a separate batch job in
     // a real deployment): populate the parquet graph store if stale.
@@ -298,31 +272,25 @@ object Bench {
     // abort the run after all queries already completed — the stdout line
     // is the contract, the file is best-effort.
     //
-    // The default path is RUN-STAMPED (cpus + wall clock) rather than a
-    // fixed name: the round-20 driver ran the bench twice per round (32
-    // then 8 cores) and the second run clobbered the first's per-query
-    // detail, leaving PERF_r20.per_query/scaling EMPTY — one noisy total
-    // was the round's only ground truth. A per-run file keyed by the run
-    // itself can never be overwritten; the stdout line carries its exact
-    // path in "detail". (Embedding the 209-key p50 map in the stdout line
-    // instead would blow the driver's 2000-char tail capture and turn the
-    // WHOLE line unparseable — measured: the r20 tail is exactly 2000
-    // chars with the ~700-char compact line barely inside it.) The legacy
-    // fixed path is still written for any consumer that hardcodes it.
+    // The default path is RUN-STAMPED (cpus + wall clock to the
+    // millisecond) under target/, never a fixed name: running the bench
+    // twice (32 then 8 cores) would otherwise lose the first run's
+    // per-query detail to the second. The stdout line carries the exact
+    // path in "detail". (Embedding the 209-key p50 map in the stdout
+    // line instead would overflow a 2000-char tail capture and turn the
+    // WHOLE line unparseable — the ~700-char compact line already fills
+    // a third of it.)
     val detailRef =
       try {
-        val stamped = sys.env.get("SPARK_GRAFT_DETAIL").getOrElse {
-          val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
-            .format(new java.util.Date())
-          s"bench_detail_c${cpus}_$ts.json"
-        }
-        val detailPath = java.nio.file.Paths.get(stamped)
+        val detailPath = java.nio.file.Paths.get(
+          sys.env.getOrElse("SPARK_GRAFT_DETAIL", {
+            val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss_SSS")
+              .format(new java.util.Date())
+            s"target/bench_detail_c${cpus}_$ts.json"
+          }))
+        Option(detailPath.toAbsolutePath.getParent)
+          .foreach(java.nio.file.Files.createDirectories(_))
         java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"))
-        try
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get("bench_detail.json"),
-            detail.getBytes("UTF-8"))
-        catch { case _: Throwable => () }
         jstr(detailPath.toAbsolutePath.toString)
       } catch { case _: Throwable => "null" }
     // The stdout line is COMPACT (r10 advice #4): totals + errors + host

@@ -122,7 +122,8 @@ object PipelineEntry {
    * in session conf). */
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  /** Commit-cost tuning (r20, measured via StreamProbe durationMs): the
+  /** Commit-cost tuning (r20, measured via the micro-batch durationMs
+   * graft.Profile prints): the
    * default RocksDB commit takes a FULL snapshot (checkpoint + zip +
    * upload) of every partition's store on EVERY micro-batch — the
    * state-operator commit was the single largest slice of each drain's
@@ -704,8 +705,9 @@ object PipelineEntry {
 
   /** Keys whose CONSTRUCTION is proven pure — zero Spark jobs beyond the
    * one parquet-footer schema read, no training collect, no export, no
-   * drain, no materialization (`graft.PurityAudit` is the measuring
-   * instrument; PreparedPuritySpec pins the proof per key). For these,
+   * drain, no materialization (the build jobs `graft.Profile` reports
+   * are the measuring instrument; PreparedPuritySpec pins the proof per
+   * key). For these,
    * rebuilding the identical Column tree and re-analyzing it on every
    * bench repeat measures CATALYST, not the operator — so they serve
    * from a prepared-plan cache per (key, session, corpus), exactly the
@@ -3587,7 +3589,7 @@ object PipelineEntry {
       // corpus-scale, the same class as p58/p75/p81's dedup state, so
       // it runs under the RocksDB + changelog-commit posture too (r20;
       // previously HDFS-backed, whose per-batch full-map copy + commit
-      // was the drain's largest slice in the StreamProbe breakdown)
+      // was the drain's largest slice in the durationMs breakdown)
       withStreamShuffle(s) { withRocksDbState(s) {
         val q = graft.streaming.EventStream
           .sessionize(s, stream, gapMinutes = 30, timeout = GroupStateTimeout.NoTimeout())
@@ -3615,7 +3617,7 @@ object PipelineEntry {
       // per-EVENT-ID dedup state is corpus-scale (it grows with the
       // stream, exactly p58/p75/p81's class) — RocksDB + changelog
       // commit, not the heap-bounded HDFS store (r20; the HDFS store's
-      // summed state commit was 3-22 s/batch in the StreamProbe runs)
+      // summed state commit was 3-22 s/batch in the durationMs breakdown)
       withStreamShuffle(s) { withRocksDbState(s) {
         val q = graft.streaming.EventStream
           .windowedCounts(graft.streaming.EventStream.deduped(stream),

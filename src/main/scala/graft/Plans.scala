@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dumps formatted physical plans for the flagship operators to PLANS.md —
  * the reviewable evidence that each plan has the shape §5's scale rules
@@ -13,14 +11,9 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // deployment sizing shared with Bench (see comment there)
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores whatever the host, so the partition counts in PLANS.md
+    // match the ones PlanAuditSpec pins
+    val spark = GraftSession(cores = 4)
 
     val picks = Seq(
       "g03_onehop_fwd" -> "One-hop lookup, literal fast path: ids probe the subject-clustered cache (zone-map batch pruning), dead reverse branch folded away - a plain Filter+Project, zero joins, zero exchanges (r12)",

@@ -1,79 +1,115 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftglue.Bridge
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
- * Per-key profiling harness for the optimization rounds: decomposes a
- * key's repeat cost into BUILD+PLAN (construct the DataFrame fresh, as
- * the bench does every repeat) vs EXECUTE-ONLY (re-count an already
- * planned DataFrame — what a prepared-statement serving path pays), and
- * dumps the formatted physical plan for the evidence trail.
+ * The diagnostic main: where a key's time goes, so a movement on the
+ * bench board is attributable to a layer instead of re-running the bench.
  *
- * Run: SPARK_GRAFT_ONLY=p50,p98 sbt "runMain graft.Profile"
- * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
- *      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROFILE_REPS (default 3),
- *      SPARK_GRAFT_PLANS_DIR (set to dump <key>.txt formatted plans).
+ *   sbt "runMain graft.Profile <sfDir> <key-substr,...> [reps] [plansDir]"
+ *
+ * Prints, in order:
+ *  - the store build seconds (0 when the stored graph is current) and the
+ *    per-step timing of the warm-up Bench runs before its timed region;
+ *  - per key matching any substring: DataFrame construction seconds and
+ *    the Spark jobs construction started. A construction-pure key starts
+ *    at most the one parquet-footer read — the property
+ *    `PipelineEntry.preparedPure` relies on and PreparedPuritySpec pins.
+ *    Then physical-planning seconds, and `reps` (default 3) executions
+ *    of the planned frame, each with the jobs, stages and tasks it ran;
+ *  - every streaming micro-batch's durationMs breakdown and summed state
+ *    commit time, which only streaming keys produce;
+ *  - with plansDir, each key's formatted physical plan as <key>.txt.
  */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    require(args.length >= 2,
+      "usage: graft.Profile <sfDir> <key-substr,...> [reps] [plansDir]")
+    val sfDir = args(0)
+    val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val reps = if (args.length > 2) args(2).toInt else 3
+    val plansDir = args.lift(3).map(Paths.get(_))
+    plansDir.foreach(Files.createDirectories(_))
+    val spark = GraftSession()
 
-    Fixture.ensureStore(spark, sfDir)
-    // warm the shared fixture caches exactly like Bench
-    locally {
-      val g = Fixture.graph(spark, sfDir)
-      g.nodes.count(); g.edges.count(); g.reverseEdges.count()
-      Fixture.closure(spark, sfDir).count()
-      Fixture.metaSummary(spark, sfDir).count()
-    }
+    val jobs, stages, tasks = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+    })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val phases = p.durationMs.asScala.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"$k=$v" }.mkString(" ")
+        val commitMs = Option(p.stateOperators).toSeq.flatten.map(_.commitTimeMs).sum
+        println(s"  stream ${p.name} batch=${p.batchId} rows=${p.numInputRows} " +
+          s"durationMs[$phases] stateCommitMs=$commitMs")
+      }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSeq)
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
-    val plansDir = sys.env.get("SPARK_GRAFT_PLANS_DIR")
-    plansDir.foreach(d => java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(d)))
-
-    def t[A](body: => A): (Double, A) = {
+    def timed[A](body: => A): (Double, A) = {
       val t0 = System.nanoTime()
       val r = body
       ((System.nanoTime() - t0) / 1e9, r)
     }
-    val f3 = (v: Double) => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    /** Seconds, result, and the jobs/stages/tasks the body started. */
+    def counted[A](body: => A): (Double, A, String) = {
+      Bridge.awaitListeners(spark)
+      val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
+      val (sec, r) = timed(body)
+      Bridge.awaitListeners(spark)
+      (sec, r, s"${jobs.get - j0} jobs ${stages.get - s0} stages ${tasks.get - t0} tasks")
+    }
+    def step[A](name: String)(body: => A): A = {
+      val (sec, r) = timed(body)
+      println(f"warm  $name%-20s $sec%8.3f s")
+      r
+    }
 
-    println(f"${"key"}%-32s ${"build+cnt (reps)"}%-28s ${"build"}%-8s ${"plan"}%-8s ${"recount (reps)"}%-28s")
-    for ((name, fn) <- named) {
+    val buildSec = Fixture.ensureStore(spark, sfDir)
+    println(f"store build $buildSec%.3f s")
+    val (warmSec, _) = timed {
+      val g = step("graph load")(Fixture.graph(spark, sfDir))
+      step("nodes")(g.nodes.count())
+      step("edges")(g.edges.count())
+      step("reverse edges")(g.reverseEdges.count())
+      step("closure")(Fixture.closure(spark, sfDir).count())
+      step("meta summary")(Fixture.metaSummary(spark, sfDir).count())
+    }
+    println(f"warm  total                $warmSec%8.3f s")
+
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
+         if keys.exists(name.contains)) {
       try {
+        println(s"== $name")
         spark.sparkContext.setJobDescription(s"profile:$name")
-        // fresh build + count, as the bench does
-        val fresh = (1 to reps).map { _ => t(fn(spark, sfDir).count())._1 }
-        // decompose one more repeat: DataFrame construction (may itself
-        // run jobs for side-effecting keys), then analysis+optimization+
-        // physical planning, then pure re-execution of the planned frame
-        val (buildSec, df) = t(fn(spark, sfDir))
-        val (planSec, _) = t(df.queryExecution.executedPlan)
-        df.count()
-        val re = (1 to reps).map { _ => t(df.count())._1 }
-        plansDir.foreach { d =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(d, s"$name.txt"),
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
+        val (bSec, df, bRun) = counted(fn(spark, sfDir))
+        println(f"  build  $bSec%8.3f s ($bRun)")
+        val (pSec, _) = timed(df.queryExecution.executedPlan)
+        println(f"  plan   $pSec%8.3f s")
+        for (i <- 1 to reps) {
+          val (eSec, rows, eRun) = counted(df.count())
+          println(f"  exec$i  $eSec%8.3f s ($eRun) rows=$rows")
         }
-        println(f"$name%-32s ${fresh.map(f3).mkString(" ")}%-28s ${f3(buildSec)}%-8s ${f3(planSec)}%-8s ${re.map(f3).mkString(" ")}%-28s")
+        plansDir.foreach { d =>
+          Files.write(d.resolve(s"$name.txt"),
+            df.queryExecution.explainString(FormattedMode).getBytes("UTF-8"))
+        }
       } catch { case e: Throwable =>
-        println(f"$name%-32s ERROR ${Option(e.getMessage).getOrElse(e.toString).take(120)}")
+        println(s"  ERROR ${Option(e.getMessage).getOrElse(e.toString).take(200)}")
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Bpe, Corpus, Dedup, TextAnalysis}
 
@@ -25,15 +25,8 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // deployment sizing shared with Bench (see comment there)
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.defaultCores
+    val spark = GraftSession(cores)
 
     // SPARK_GRAFT_SECTIONS=docs,ann (default both) — re-measuring one
     // side after a change shouldn't pay the other's minutes.
@@ -55,7 +48,7 @@ object ScaleSmoke {
     if (sections.contains("docs")) {
     val docs = replicate(
       spark.read.parquet(s"$sfDir/documents.parquet"), n)
-      .repartition(cpus.toInt).cache()
+      .repartition(cores).cache()
     val total = docs.count()
     println(s"corpus: $total docs (${n}x replication of $sfDir)")
 
@@ -104,7 +97,7 @@ object ScaleSmoke {
         Map("dominant" -> 0.7, "rare" -> 0.3), totalTokens = 500000L,
         strataCol = "lang").count())
     time("pack sequences")(
-      Corpus.packSequences(docs, maxTokens = 2048, nShards = cpus.toInt * 4).count())
+      Corpus.packSequences(docs, maxTokens = 2048, nShards = cores * 4).count())
     time("dedup apply") {
       Corpus.dedupApply(docs,
         Dedup.clusters(
@@ -220,7 +213,7 @@ object ScaleSmoke {
     val bigEmbs = embs.select(explode(sequence(lit(0), lit(n - 1))).as("copy"),
         col("vec_id"), col("embedding"))
       .select((col("vec_id") * n + col("copy")).as("vec_id"), col("embedding"))
-      .repartition(cpus.toInt).cache()
+      .repartition(cores).cache()
     println(s"embeddings: ${bigEmbs.count()} vectors")
     val probes = embs.limit(5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))

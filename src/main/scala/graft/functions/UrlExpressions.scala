@@ -3,7 +3,7 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,8 +45,13 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object UrlExpressions {
 
-  case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
+  case class CanonicalizeUrl(child: Expression)
+      extends UnaryExpression with ImplicitCastInputTypes {
     override def dataType: DataType = StringType
+    // The analyzer casts a non-string child to string — the same cast the
+    // composed tree's trim gets — and rejects a type with no cast at
+    // analysis, so nullSafeEval only ever sees a UTF8String.
+    override def inputTypes = Seq(StringType)
     override def prettyName: String = "canonicalize_url"
 
     // addReferenceObj + instance call (the repo-wide reference pattern;

@@ -29,4 +29,10 @@ object Bridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** Block until every event posted so far has reached its listeners
+   * (listenerBus is private[spark]), so a counting listener read right
+   * after a job reports that job. */
+  def awaitListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

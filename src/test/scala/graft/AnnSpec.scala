@@ -442,8 +442,7 @@ class AnnSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val ps = many.where(col("vec_id") < 6)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val root = "/root/repo/target/test-ann-stream"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = java.nio.file.Files.createTempDirectory("test-ann-stream").toString
     val cents = Ann.trainCentroids(many, nCenters = 4, sampleN = 24, iters = 2)
     Ann.ivfIndex(many, cents).write.parquet(s"$root/index")
     val index = spark.read.parquet(s"$root/index")

@@ -4,24 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
- * run sequentially in the forked test JVM). */
+ * run sequentially in the forked test JVM). Pinned at 4 cores whatever
+ * the host has, so the partition counts PlanAuditSpec asserts hold. */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // deployment sizing shared with Bench (see comment there) so plan
-      // pins assert the same join strategies the bench plans use
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

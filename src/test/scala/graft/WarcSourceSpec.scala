@@ -7,6 +7,10 @@ class WarcSourceSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** A path that does not exist yet, inside a new temp directory. */
+  private def freshDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).resolve(name).toString
+
   private def rec(headers: Seq[(String, String)], payload: String): Array[Byte] = {
     val p = payload.getBytes("UTF-8")
     (("WARC/1.0" +: headers.map { case (k, v) => s"$k: $v" })
@@ -135,8 +139,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("revisit records: ISO 28500 linkage parses, captures collapse to one digest") {
-    val dir = "/root/repo/target/test-warc-revisit"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("test-warc-revisit")
     val docs = Seq((1L, "alpha"), (9L, "beta"), (18L, "gamma"))
       .toDF("doc_id", "text")
     WarcSource.export(docs, dir, docsPerFile = 100, revisitEvery = 9)
@@ -203,8 +206,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("cdxLookup: canonicalized point probes, pushed scan, no join") {
-    val dir = "/root/repo/target/test-cdx-lookup"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("test-cdx-lookup")
     Seq.tabulate(40)(i =>
       (s"org,example)/doc/$i", s"example.org/doc/$i", 200L, s"d$i", 5L))
       .toDF("urlkey", "url", "status", "digest", "n_bytes")
@@ -312,10 +314,8 @@ class WarcSourceSpec extends SparkSpec {
       (2L, "<html><head></head><body>no links, no title</body></html>",
         "https://site.org/2")
     ).toDF("doc_id", "text", "url")
-    val dir = "/root/repo/target/wat-spec-src"
-    val watDir = "/root/repo/target/wat-spec-out"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(watDir))
+    val dir = freshDir("wat-spec-src")
+    val watDir = freshDir("wat-spec-out")
     WarcSource.export(docs, dir, urlCol = Some("url"),
       mime = "text/html; charset=utf-8")
     val wat = WarcSource.watRecords(WarcSource.records(spark, dir))
@@ -333,8 +333,7 @@ class WarcSourceSpec extends SparkSpec {
     assert(j2.contains("\"Head\":{},\"Links\":[]"), j2)
     assert(!j2.contains("Title"), j2)
     // a NON-html response gets no HTML-Metadata key at all
-    val plainDir = "/root/repo/target/wat-spec-plain"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(plainDir))
+    val plainDir = freshDir("wat-spec-plain")
     WarcSource.export(docs.select(col("doc_id"),
       lit("just text with <a href=x>ignored</a>").as("text"), col("url")),
       plainDir, urlCol = Some("url"))
@@ -360,8 +359,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("http_headers capture + X-Robots-Tag directives + safe content-length") {
-    val dir = "/root/repo/target/warc-xr-spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("warc-xr-spec")
     val docs = Seq(
       (1L, "one", "X-Robots-Tag: noindex, nofollow"),
       (2L, "two", "X-Robots-Tag: googlebot: noindex"),
@@ -389,8 +387,7 @@ class WarcSourceSpec extends SparkSpec {
     // REPEATED header lines join per RFC 9110 list semantics, so a
     // second X-Robots-Tag still governs (review-caught); Content-Type
     // keeps its first occurrence
-    val repDir = "/root/repo/target/warc-xr-rep"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(repDir))
+    val repDir = freshDir("warc-xr-rep")
     WarcSource.export(Seq((1L, "r", "X-Robots-Tag: noarchive\r\n" +
       "X-Robots-Tag: noindex")).toDF("doc_id", "text", "xhdr"),
       repDir, httpHeaderCol = Some("xhdr"))
@@ -420,8 +417,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("HTTP transport decode: chunked framing, gzip/deflate bodies, degradation") {
-    val dir = "/root/repo/target/warc-transport-unit"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("warc-transport-unit")
     // multi-byte UTF-8 (2-, 3-, 4-byte sequences) + length > several
     // chunks, so the 7-byte chunk boundaries fall INSIDE sequences
     val txt = "transport body é € 𝄞 and a tail that spans chunks"
@@ -520,8 +516,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("transport decode composes with HTML consumers (p92/p127 shape)") {
-    val dir = "/root/repo/target/warc-transport-html"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("warc-transport-html")
     val html = "<html><head><title>T1</title>" +
       "<meta name=robots content=\"noindex\"></head>" +
       "<body><p>Long enough paragraph of real prose content here.</p>" +
@@ -542,8 +537,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("redirectEdges: 3xx + Location become resolved edges; others don't") {
-    val dir = "/root/repo/target/warc-redirect-unit"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("warc-redirect-unit")
     val docs = Seq(
       (1L, "ok", "200 OK", ""),
       (2L, "moved", "301 Moved Permanently",

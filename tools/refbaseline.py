@@ -62,7 +62,9 @@ def ensure_inputs() -> None:
         sbt("graft.OntologyExport", str(ONTOLOGY_JSON))
     if not (store_dir() / "edges.parquet" / "_SUCCESS").exists():
         print(f"[refbaseline] populating graph store for {SF_DIR} ...")
-        sbt("graft.WarmProbe", SF_DIR)
+        # a key filter that matches nothing: Profile ingests and warms
+        # the store, then exits
+        sbt("graft.Profile", SF_DIR, "__none__")
 
 
 STUBS = {
