@@ -89,17 +89,22 @@ object Bench {
     // computes each partition once). The tail the replica needs BEYOND
     // the primary warm is reported as replica_warm_sec — nothing is
     // off the books, it just no longer serializes startup.
+    // Warmed on the serving session: the graph keys read the fixture
+    // through it, so warming the batch session's entries left the first
+    // key to re-cache the frames and re-run the closure and meta jobs.
+    val sv = Fixture.serving(spark)
     val tWarm0 = System.nanoTime()
     val replicaWarm = locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.DurationInt
-      val g = Fixture.graph(spark, sfDir)
+      val g = Fixture.graph(sv, sfDir)
       val replica = Future(g.reverseEdges.count())
       Await.result(Future.sequence(Seq(
         Future(g.nodes.count()), Future(g.edges.count()),
-        Future(Fixture.closure(spark, sfDir).count()),
-        Future(Fixture.metaSummary(spark, sfDir).count()))), 30.minutes)
+        Future(Fixture.closure(sv, sfDir).count()),
+        Future(Fixture.metaSummary(sv, sfDir).count()))), 30.minutes)
+      Fixture.closureIndex(sv, sfDir)
       replica
     }
     val warmSec = (System.nanoTime() - tWarm0) / 1e9
@@ -119,7 +124,7 @@ object Bench {
     // reading can be decomposed into floor + work (r10 advice #1).
     val floorSec = {
       import org.apache.spark.sql.functions.col
-      val g = Fixture.graph(spark, sfDir)
+      val g = Fixture.graph(sv, sfDir)
       val runs = (1 to 5).map { _ =>
         val t0 = System.nanoTime()
         g.edges.where(col("subject") === "__floor__").count()

@@ -178,7 +178,7 @@ object PipelineEntry {
     val stem = file.takeWhile(_ != '.')
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val streamDir = Paths.get(s"target/stream-$stem-$tag")
+    val streamDir = Paths.get(TargetDir(s"stream-$stem-$tag"))
     Files.createDirectories(streamDir)
     val target = Paths.get(dir, file).toAbsolutePath
     val link = streamDir.resolve(file)
@@ -208,8 +208,8 @@ object PipelineEntry {
     import java.nio.file.{Files, Paths}
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val out = Paths.get(s"/root/repo/target/$stem-$tag")
-    val sentinel = Paths.get(s"/root/repo/target/$stem-$tag.ok")
+    val out = Paths.get(TargetDir(s"$stem-$tag"))
+    val sentinel = Paths.get(TargetDir(s"$stem-$tag.ok"))
     if (!Files.exists(sentinel)) {
       org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
       write(out.toString)
@@ -227,7 +227,7 @@ object PipelineEntry {
     import java.nio.file.{Files, Paths}
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val out = Paths.get(s"target/stream-docs-split$parts-$tag")
+    val out = Paths.get(TargetDir(s"stream-docs-split$parts-$tag"))
     if (!Files.exists(out.resolve("_SUCCESS")))
       s.read.parquet(s"$dir/documents.parquet").repartition(parts)
         .write.mode("overwrite").parquet(out.toString)
@@ -1274,7 +1274,7 @@ object PipelineEntry {
     // planted formula.
     "p145_xrobots" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-xrobots-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-xrobots-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val m = pmod(col("doc_id"), lit(6))
       val pages = docs(s, dir).select(col("doc_id"), col("text"),
@@ -1399,7 +1399,7 @@ object PipelineEntry {
     // Content-Length slicing, and member-gzip.
     "p85_warc_ingest" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-ingest-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-ingest-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       WarcSource.export(docs(s, dir), out, docsPerFile = 100)
       WarcSource.records(s, out)
@@ -1421,7 +1421,7 @@ object PipelineEntry {
     // composed end-to-end, one ground truth.
     "p86_crawl_dedup" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-crawl-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-crawl-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val withText = messyUrls(docs(s, dir))
         .join(docs(s, dir).select("doc_id", "text"), "doc_id")
@@ -1500,7 +1500,7 @@ object PipelineEntry {
     // recovery means identical predictions and hit counts.
     "p91_wet_langid" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/wet-langid-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"wet-langid-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       WarcSource.export(docs(s, dir), out, docsPerFile = 100, wet = true)
       val recovered = WarcSource.records(s, out)
@@ -1531,7 +1531,7 @@ object PipelineEntry {
     // every field from the doc table + URL formula independently.
     "p93_cdx_index" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/cdx-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"cdx-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       WarcSource.export(pageUrls(docs(s, dir)), out, docsPerFile = 100,
         urlCol = Some("url"))
@@ -1553,8 +1553,8 @@ object PipelineEntry {
     "p131_crawl_diff" -> ((s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
-      val outA = s"/root/repo/target/cdx-diff-a-$tag"
-      val outB = s"/root/repo/target/cdx-diff-b-$tag"
+      val outA = TargetDir(s"cdx-diff-a-$tag")
+      val outB = TargetDir(s"cdx-diff-b-$tag")
       Seq(outA, outB).foreach(o =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(o)))
       val d = docs(s, dir)
@@ -1588,7 +1588,7 @@ object PipelineEntry {
     "p133_warc_revisit" -> ((s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
-      val out = s"/root/repo/target/warc-revisit-$tag"
+      val out = TargetDir(s"warc-revisit-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       WarcSource.export(docs(s, dir), out, docsPerFile = 100,
         revisitEvery = 9)
@@ -1737,7 +1737,7 @@ object PipelineEntry {
     // JSON escaping round-trips byte-exactly into the analysis ops.
     "p102_jsonl_roundtrip" -> ((s, dir) => {
       val tag = dir.replaceAll("[^0-9]", "_")
-      val out = s"/root/repo/target/jsonl-$tag"
+      val out = TargetDir(s"jsonl-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val d = docs(s, dir)
       d.select("doc_id", "text", "lang", "source", "n_chars")
@@ -1852,7 +1852,7 @@ object PipelineEntry {
     "p109_web_pipeline" -> ((s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9]", "_")
-      val out = s"/root/repo/target/webpipe-$tag"
+      val out = TargetDir(s"webpipe-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val d = docs(s, dir)
       val pages = htmlPages(d).select(col("doc_id"), col("html"))
@@ -2324,7 +2324,7 @@ object PipelineEntry {
     "p111_warc_binary" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-binary-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-binary-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val images = docs(s, dir).select(col("doc_id")).as[Long]
         .flatMap { d =>
@@ -2361,7 +2361,7 @@ object PipelineEntry {
     // shuffles.
     "p150_http_decode" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-transport-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-transport-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit(""), lit("chunked"), lit("gzip"),
@@ -2392,7 +2392,7 @@ object PipelineEntry {
     // unknown-coding degrade: raw bytes kept, text suppressed.
     "p159_content_codings" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-zstd-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-zstd-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit(""), lit("zstd"), lit("chunked+zstd")),
@@ -2555,7 +2555,7 @@ object PipelineEntry {
     "p118_pdf_extract" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-pdf-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-pdf-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -2621,7 +2621,7 @@ object PipelineEntry {
     "p124_pdf_pipeline" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-pdfq-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-pdfq-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -2691,8 +2691,8 @@ object PipelineEntry {
     "p140_wat" -> ((s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
-      val warcOut = s"/root/repo/target/warc-wat-src-$tag"
-      val watOut = s"/root/repo/target/warc-wat-$tag"
+      val warcOut = TargetDir(s"warc-wat-src-$tag")
+      val watOut = TargetDir(s"warc-wat-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warcOut))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(watOut))
       WarcSource.export(htmlPages(docs(s, dir)), warcOut,
@@ -3097,7 +3097,7 @@ object PipelineEntry {
     "p163_warc_pdf_images" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-pdfimg-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-pdfimg-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val base = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -3142,7 +3142,7 @@ object PipelineEntry {
     // load-bearing); the oracle re-derives each edge closed-form.
     "p155_redirect_edges" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-redirect-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-redirect-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit("200 OK"), lit("301 Moved Permanently"),
@@ -3249,7 +3249,7 @@ object PipelineEntry {
     "p154_charset_decode" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-charset-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-charset-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val in = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -3353,7 +3353,7 @@ object PipelineEntry {
     "p134_streaming_ann" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val tag = dir.replaceAll("[^0-9]", "_")
-      val root = s"/root/repo/target/ann-serve-$tag"
+      val root = TargetDir(s"ann-serve-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       val e = embs(s, dir)
       val cents = Ann.trainCentroids(e, nCenters = 16, sampleN = 256,
@@ -3389,7 +3389,7 @@ object PipelineEntry {
       import s.implicits._
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
-      val out = s"/root/repo/target/cdx-lookup-$tag"
+      val out = TargetDir(s"cdx-lookup-$tag")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val d = docs(s, dir)
       WarcSource.export(pageUrls(d), s"$out/warc", docsPerFile = 100,
@@ -3521,7 +3521,7 @@ object PipelineEntry {
     "p130_warc_video" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = s"/root/repo/target/warc-mp4-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"warc-mp4-${dir.replaceAll("[^0-9.]", "")}")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val vids = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(d => (d, Mp4.fixtureMp4(d))))

@@ -81,13 +81,16 @@ object Profile {
 
     val buildSec = Fixture.ensureStore(spark, sfDir)
     println(f"store build $buildSec%.3f s")
+    // the serving session's entries: graph keys read the fixture through it
+    val sv = Fixture.serving(spark)
     val (warmSec, _) = timed {
-      val g = step("graph load")(Fixture.graph(spark, sfDir))
+      val g = step("graph load")(Fixture.graph(sv, sfDir))
       step("nodes")(g.nodes.count())
       step("edges")(g.edges.count())
       step("reverse edges")(g.reverseEdges.count())
-      step("closure")(Fixture.closure(spark, sfDir).count())
-      step("meta summary")(Fixture.metaSummary(spark, sfDir).count())
+      step("closure")(Fixture.closure(sv, sfDir).count())
+      step("meta summary")(Fixture.metaSummary(sv, sfDir).count())
+      step("closure index")(Fixture.closureIndex(sv, sfDir))
     }
     println(f"warm  total                $warmSec%8.3f s")
 

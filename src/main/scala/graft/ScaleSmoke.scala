@@ -672,7 +672,7 @@ object ScaleSmoke {
         lit(200L).as("status"),
         md5(col("id").cast("string")).as("digest"),
         lit(100L).as("n_bytes"))
-      val dir = "/root/repo/target/scale-cdx-index"
+      val dir = TargetDir("scale-cdx-index")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       index.repartitionByRange(32, col("urlkey"))
         .sortWithinPartitions("urlkey").write.parquet(dir)

@@ -132,7 +132,7 @@ object Fixture {
     })
 }
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
   private val ont = O.ontology
@@ -399,7 +399,7 @@ object SparkEntry {
     // test.
     "g35_equiv_map_dump" -> ((s, dir) => {
       val g = Fixture.graph(s, dir)
-      val dump = s"target/nodenorm-dump-${dir.replaceAll("[^0-9.]", "")}"
+      val dump = TargetDir(s"nodenorm-dump-${dir.replaceAll("[^0-9.]", "")}")
       g.nodes.select(col("id"), col("equiv_ids").as("equivalent_identifiers"))
         .coalesce(1).write.mode("overwrite").json(dump)
       normalizeMerge(g, Normalizer.equivMapFromDump(s, dump, "jsonl"))
@@ -502,7 +502,7 @@ object SparkEntry {
     // equivalent ids remap to preferred ids, a source allowlist filters,
     // superclass_of flips, and duplicate triples collapse.
     "g32_subclass_from_file" -> ((s, dir) => {
-      val out = s"target/subclass-file-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"subclass-file-${dir.replaceAll("[^0-9.]", "")}")
       val c = s.read.parquet(s"$dir/customer.parquet")
       def row(idPfx: String, subj: Column, obj: Column, pred: String,
               src: String)(rows: DataFrame) = rows.select(
@@ -554,7 +554,7 @@ object SparkEntry {
     // and emit the canonical edge table + re-typed attributes.
     "g25_kgx_roundtrip" -> ((s, dir) => {
       import graft.sources.KgxSource
-      val out = s"/root/repo/target/kgx-roundtrip-${dir.replaceAll("[^0-9.]", "")}"
+      val out = TargetDir(s"kgx-roundtrip-${dir.replaceAll("[^0-9.]", "")}")
       val g = Fixture.graph(s, dir)
       KgxSource.writeTsv(g, out, attrColumns = Seq("mktsegment", "acctbal", "tags"),
         compress = true)
@@ -579,13 +579,13 @@ object SparkEntry {
     "g34_kgx_url_spool" -> ((s, dir) => {
       import graft.sources.KgxSource
       val sfx = dir.replaceAll("[^0-9.]", "")
-      val out = s"/root/repo/target/kgx-url-src-$sfx"
+      val out = TargetDir(s"kgx-url-src-$sfx")
       val g = Fixture.graph(s, dir)
       KgxSource.writeTsv(g, out, attrColumns = Seq("mktsegment", "acctbal", "tags"),
         compress = true)
       // fresh spool per drop: writeTsv emits new UUID part names each run,
       // and a spool that accumulates across drops would double-read
-      val spool = s"/root/repo/target/kgx-url-spool-$sfx"
+      val spool = TargetDir(s"kgx-url-spool-$sfx")
       val old = new java.io.File(spool).listFiles()
       if (old != null) old.foreach(_.delete())
       val parts = new java.io.File(s"$out/edges").listFiles()
@@ -650,7 +650,7 @@ object SparkEntry {
     // the oracle is the original ontology rendered as literal VALUES).
     "g30_ontology_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val path = "target/ontology-roundtrip.tsv"
+      val path = TargetDir("ontology-roundtrip.tsv")
       graft.sources.OntologyLoader.writeTsv(ont, path)
       val ont2 = graft.sources.OntologyLoader.fromFile(s, path, "tsv")
       ontologyTermTable(ont2).toDF(

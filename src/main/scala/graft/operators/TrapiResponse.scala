@@ -203,41 +203,56 @@ object TrapiResponse {
    * empty strings for absent qualifier fields and the literal string
    * "False" mirror the legacy wire shape exactly (the reference comments
    * "silly to have these in strings, but that's the old format").
-   * Columnar like `assemble`: no driver loop; the only shuffle is the
-   * per-node query-id grouping the slim node tuple demands.
+   * Columnar like `assemble`, and one lazy plan: building it runs no
+   * Spark job and persists nothing. Each match row fans out once (one
+   * explode) into its six tagged (part, key, query id, edge tuple) rows,
+   * so the one-hop scans run once; ONE groupBy(part, key) dedups every
+   * part and collects the sorted query-id set; ONE inner join to the node
+   * table fills in name and first category. That join BUILDS (broadcasts)
+   * the answer-sized side and streams the node table, which grows with
+   * the corpus and must never be the build side. Its key is (true, id)
+   * for `slim_node:*` rows and (false, "") for every other part, matched
+   * by a one-row sentinel streamed beside the nodes: node parts keep
+   * inner-join semantics (an id missing from the node table gets no
+   * `slim_node` row, though its `ids_node` row stays) and the other parts
+   * pass through.
    */
   def slim(res: OneHop.Result, graph: PropertyGraph,
            edgeKey: String = "e1"): DataFrame = {
-    // Six part builders fan out from the matches frame (two query-id
-    // groupings, an edge dedup, three id-list distincts); materialize it
-    // once so the one-hop join executes once, not six times.
-    val m = SelfJoinMaterialize(res.matches)
-    def nodeSide(idCol: String, qidCol: String, qnodeKey: String): DataFrame =
-      m.groupBy(col(idCol).as("id"))
-        .agg(array_sort(collect_set(col(qidCol))).as("query_ids"))
-        .join(graph.nodes.select("id", "name", "categories"), Seq("id"))
-        .select(lit(s"slim_node:$qnodeKey").as("part"), col("id").as("key"),
-          concat(lit("[\""), col("name"), lit("\",\""),
-            element_at(col("categories"), 1), lit("\","),
-            to_json(col("query_ids")), lit("]")).as("json"))
-    val slimEdges = m.dropDuplicates("edge_id")
-      .select(lit(s"slim_edge:$edgeKey").as("part"), col("edge_id").as("key"),
-        to_json(array(col("subject"), col("object"), col("predicate"),
-          col("primary_knowledge_source"),
-          coalesce(col("qualified_predicate"), lit("")),
-          coalesce(col("object_direction"), lit("")),
-          coalesce(col("object_aspect"), lit("")),
-          lit("False"))).as("json"))
-    def idsRows(part: String, idCol: String): DataFrame =
-      m.select(col(idCol).as("key")).distinct()
-        .select(lit(part).as("part"), col("key"),
-          lit(null).cast("string").as("json"))
-    nodeSide("input_id", "input_query_id", res.inputKey)
-      .unionAll(nodeSide("output_id", "output_query_id", res.outputKey))
-      .unionAll(slimEdges)
-      .unionAll(idsRows(s"ids_node:${res.inputKey}", "input_id"))
-      .unionAll(idsRows(s"ids_node:${res.outputKey}", "output_id"))
-      .unionAll(idsRows(s"ids_edge:$edgeKey", "edge_id"))
+    val noStr = lit(null).cast("string")
+    def tagged(part: String, key: String, qid: Column, json: Column): Column =
+      struct(lit(part).as("part"), col(key).as("key"), qid.as("qid"),
+        json.as("json"))
+    val edgeTuple = to_json(array(col("subject"), col("object"),
+      col("predicate"), col("primary_knowledge_source"),
+      coalesce(col("qualified_predicate"), lit("")),
+      coalesce(col("object_direction"), lit("")),
+      coalesce(col("object_aspect"), lit("")),
+      lit("False")))
+    val parts = res.matches.select(explode(array(
+      tagged(s"slim_node:${res.inputKey}", "input_id", col("input_query_id"), noStr),
+      tagged(s"slim_node:${res.outputKey}", "output_id", col("output_query_id"), noStr),
+      tagged(s"slim_edge:$edgeKey", "edge_id", noStr, edgeTuple),
+      tagged(s"ids_node:${res.inputKey}", "input_id", noStr, noStr),
+      tagged(s"ids_node:${res.outputKey}", "output_id", noStr, noStr),
+      tagged(s"ids_edge:$edgeKey", "edge_id", noStr, noStr))).as("t"))
+      .select("t.*")
+      .groupBy("part", "key")
+      .agg(array_sort(collect_set(col("qid"))).as("query_ids"),
+        max(col("json")).as("json"))
+    val isNode = col("part").startsWith("slim_node:")
+    val answer = parts.select(col("*"), isNode.as("is_node"),
+      when(isNode, col("key")).otherwise(lit("")).as("node_id"))
+    val nodes = graph.nodes.select(lit(true).as("is_node"),
+        col("id").as("node_id"), col("name"), col("categories"))
+      .unionByName(graph.nodes.sparkSession.range(0, 1, 1, 1).select(
+        lit(false).as("is_node"), lit("").as("node_id"),
+        noStr.as("name"), lit(null).cast("array<string>").as("categories")))
+    broadcast(answer).join(nodes, Seq("is_node", "node_id"))
+      .select(col("part"), col("key"),
+        when(col("is_node"), concat(lit("[\""), col("name"), lit("\",\""),
+          element_at(col("categories"), 1), lit("\","),
+          to_json(col("query_ids")), lit("]"))).otherwise(col("json")).as("json"))
   }
 
   /**

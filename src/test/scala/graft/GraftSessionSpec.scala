@@ -6,9 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps `GraftSession` the only place a SparkSession is configured: a
- * second builder under `src/` is where deployment settings start to drift
- * (a main without the codegen cache or UTC measures a different system). */
+/** Source-tree guards. `GraftSession` stays the only place a SparkSession
+ * is configured: a second builder under `src/` is where deployment
+ * settings start to drift (a main without the codegen cache or UTC
+ * measures a different system). And no code names a fixed checkout path:
+ * scratch output goes through `TargetDir`, so a second checkout never
+ * writes into the first one's tree. */
 class GraftSessionSpec extends AnyFunSuite {
 
   // whitespace allowed around the dot, so a builder split across lines
@@ -22,14 +25,32 @@ class GraftSessionSpec extends AnyFunSuite {
       if (t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")) "" else l
     }.mkString("\n")
 
-  test("GraftSession.scala holds the only session builder under src/") {
+  /** Every Scala file under src/main and src/test. */
+  private def sources: Seq[Path] = {
     val roots = Seq("src/main", "src/test").map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r),
       s"$r not found from ${Paths.get("").toAbsolutePath}"))
-    val hits = roots.flatMap(r => Files.walk(r).iterator.asScala
-        .filter(_.toString.endsWith(".scala")).toSeq)
+    roots.flatMap(r => Files.walk(r).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq)
+  }
+
+  test("GraftSession.scala holds the only session builder under src/") {
+    val hits = sources
       .flatMap(f => Seq.fill(Builder.findAllMatchIn(code(f)).size)(f))
     assert(hits.map(_.getFileName.toString) == Seq("GraftSession.scala"),
       s"expected one builder, in GraftSession.scala; found: ${hits.mkString(", ")}")
+  }
+
+  test("no code under src/ hardcodes the checkout path") {
+    // this checkout's own root, and an absolute path into any target/ dir
+    // (the pattern's own source text does not match it)
+    val checkout = Paths.get("").toAbsolutePath.toString
+    val absTarget = """"/[^"\s]*/target/""".r
+    val hits = sources.flatMap(f => code(f).linesIterator.zipWithIndex.collect {
+      case (l, i) if l.contains(checkout) || absTarget.findFirstIn(l).isDefined =>
+        s"$f:${i + 1}: ${l.trim}"
+    })
+    if (hits.nonEmpty)
+      fail(s"use TargetDir instead of a fixed path:\n${hits.mkString("\n")}")
   }
 }

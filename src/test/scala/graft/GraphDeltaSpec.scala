@@ -136,11 +136,8 @@ class GraphDeltaSpec extends SparkSpec {
     import graft.sources.GraphStore
     // a zone-map store table: globally range-partitioned + sorted on
     // subject, many files so the fixture delta leaves most untouched
-    val dir = java.nio.file.Paths.get(
-      "target/test-delta-store/edges.parquet")
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      dir.getParent.toFile)
-    java.nio.file.Files.createDirectories(dir.getParent)
+    val dir = java.nio.file.Files.createTempDirectory("test-delta-store")
+      .resolve("edges.parquet")
     val base0 = TpchGraph.build(spark, Sf)
     base0.edges.repartitionByRange(16, col("subject"))
       .sortWithinPartitions("subject")
@@ -189,10 +186,8 @@ class GraphDeltaSpec extends SparkSpec {
 
   test("store delta rewrite: nodes table via touchedNodeIds") {
     import graft.sources.GraphStore
-    val dir = java.nio.file.Paths.get(
-      "target/test-delta-store/nodes.parquet")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    java.nio.file.Files.createDirectories(dir.getParent)
+    val dir = java.nio.file.Files.createTempDirectory("test-delta-store")
+      .resolve("nodes.parquet")
     val base0 = TpchGraph.build(spark, Sf)
     base0.nodes.repartitionByRange(16, col("id"))
       .sortWithinPartitions("id")
@@ -216,10 +211,8 @@ class GraphDeltaSpec extends SparkSpec {
     // exactly once, while non-null untouched ranges still carry.
     import graft.sources.GraphStore
     import spark.implicits._
-    val dir = java.nio.file.Paths.get(
-      "target/test-delta-store/nullkeys.parquet")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    java.nio.file.Files.createDirectories(dir.getParent)
+    val dir = java.nio.file.Files.createTempDirectory("test-delta-store")
+      .resolve("nullkeys.parquet")
     val base = (Seq((null: String, "n1"), (null: String, "n2")) ++
       (0 until 64).map(i => (f"K$i%03d", s"v$i"))).toDF("k", "v")
     // nulls sort FIRST: file 1 holds them (+ smallest keys)

@@ -347,8 +347,8 @@ class HtmlSpec extends SparkSpec {
 
   test("cdxIndex: export -> records -> index round trip, field exactness") {
     import graft.sources.WarcSource
-    val dir = "target/html-spec-cdx"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = java.nio.file.Files.createTempDirectory("html-spec-cdx")
+      .resolve("cdx").toString
     val docs = Seq(
       (1L, "alpha beta", "https://www.Site.com:443/One/1?b=2&a=1#f"),
       (2L, "gamma", "http://other.org/x/")).toDF("doc_id", "text", "url")

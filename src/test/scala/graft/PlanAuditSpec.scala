@@ -536,6 +536,72 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("slim response is one lazy pass: no job to build, one scan per replica, node table streamed") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.graftglue.Bridge
+    // The serving shape: the store-backed fixture with its object-clustered
+    // replica, on the serving session. A symmetric predicate keeps both
+    // one-hop directions live, so both edge replicas are scanned.
+    Fixture.ensureStore(spark, sfDir)
+    val sv = Fixture.serving(spark)
+    val g = Fixture.graph(sv, sfDir)
+    val res = OneHop.answer(sv, g, ont, QueryGraph.oneHop(
+      QNode("n0", ids = Seq("NAT:1")),
+      QNode("n1"),
+      QEdge("n0", "n1", predicates = Seq(O.AdjacentTo))),
+      closure = None, expandSubclasses = false)
+
+    // construction runs no Spark job (nothing persisted, nothing counted)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val slim = try {
+      Bridge.awaitListeners(spark)
+      val before = jobs.get
+      val df = TrapiResponse.slim(res, g)
+      Bridge.awaitListeners(spark)
+      assert(jobs.get - before == 0, "building slim ran Spark jobs")
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    def builder(df: DataFrame) = df.queryExecution.optimizedPlan.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.getOrElse(fail("fixture frame is not cached"))
+    val (nodesB, edgesB, reverseB) = (builder(g.nodes), builder(g.edges), builder(g.reverseEdges))
+    assert(!(edgesB eq reverseB), "fixture has no separate edge replica")
+
+    // every cached relation in the plan is a fixture cache: no per-request
+    // materialization of the answer
+    val relations = slim.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }
+    assert(relations.forall(b => Seq(nodesB, edgesB, reverseB).exists(_ eq b)),
+      s"slim caches something beyond the fixture:\n${slim.queryExecution.optimizedPlan}")
+
+    // exactly one scan of each edge replica and of the node table
+    val exec = slim.queryExecution.executedPlan
+    val scans = exec.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+    Seq("edges" -> edgesB, "reverse edges" -> reverseB, "nodes" -> nodesB).foreach {
+      case (name, b) => assert(scans.count(_ eq b) == 1,
+        s"$name scanned ${scans.count(_ eq b)} times:\n$exec")
+    }
+
+    // the answer side is the build (broadcast) side; the node table streams
+    def scansNodes(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.collect { case s: InMemoryTableScanExec => s }.exists(_.relation.cacheBuilder eq nodesB)
+    val joins = exec.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, s"expected one node-table join:\n$exec")
+    val j = joins.head
+    val (build, stream) = if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
+    assert(!scansNodes(build) && scansNodes(stream),
+      s"node table is on the build side:\n$exec")
+  }
+
   test("warm path is scan-only: stored artifacts load without joins or aggregation") {
     // Build-time materialization (GraphStore) exists so service startup
     // reads columnar data instead of re-running the build pipeline. Pin:

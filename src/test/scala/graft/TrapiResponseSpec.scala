@@ -105,6 +105,59 @@ class TrapiResponseSpec extends SparkSpec {
     assert(rows.size == 8)
   }
 
+  test("slim: row for row over shared, symmetric, expanded, missing and empty answers") {
+    val kg = PropertyGraph(Seq(
+      ("ORD:1", "Order#1", Seq("graft:Order")),
+      ("PART:1", "part one", Seq("graft:Part", "graft:Tradeable")),
+      ("NAT:1", "nation one", Seq("graft:Nation", "graft:Place"))
+    ).toDF("id", "name", "categories"), edges)
+    // (edge, subject, object, predicate, input, output, input qid, output qid)
+    val m = Seq(
+      // S1 is symmetric and matched in both directions, so NAT:1 and
+      // PART:1 are each both an input and an output node
+      ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "NAT:1", "PART:1",
+        Option("REG:0"), Option.empty[String]),
+      ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "PART:1", "NAT:1",
+        Option.empty[String], Option.empty[String]),
+      // NAT:1 reached by subclass expansion of a second query id; ORD:1
+      // reached by expansion on the output side
+      ("E11", "NAT:1", "ORD:1", "graft:located_in", "NAT:1", "ORD:1",
+        Option("REG:1"), Option("ORD:0")),
+      // a repeated query id; GHOST:1 is absent from the node table
+      ("E12", "NAT:1", "GHOST:1", "graft:located_in", "NAT:1", "GHOST:1",
+        Option("REG:0"), Option.empty[String])
+    ).toDF("edge_id", "subject", "object", "predicate", "input_id", "output_id",
+        "input_query_id", "output_query_id")
+      .withColumn("qualified_predicate", lit(null).cast("string"))
+      .withColumn("object_direction", lit(null).cast("string"))
+      .withColumn("object_aspect", lit(null).cast("string"))
+      .withColumn("primary_knowledge_source", lit("infores:x"))
+    def rows(r: OneHop.Result) = TrapiResponse.slim(r, kg).collect()
+      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSeq.sorted
+    def edge(s: String, o: String, p: String) =
+      Some(s"""["$s","$o","$p","infores:x","","","","False"]""")
+    assert(rows(OneHop.Result(m, "n_in", "n_out")) == Seq(
+      ("ids_edge:e1", "E11", None),
+      ("ids_edge:e1", "E12", None),
+      ("ids_edge:e1", "S1", None),
+      ("ids_node:n_in", "NAT:1", None),
+      ("ids_node:n_in", "PART:1", None),
+      ("ids_node:n_out", "GHOST:1", None),
+      ("ids_node:n_out", "NAT:1", None),
+      ("ids_node:n_out", "ORD:1", None),
+      ("ids_node:n_out", "PART:1", None),
+      ("slim_edge:e1", "E11", edge("NAT:1", "ORD:1", "graft:located_in")),
+      ("slim_edge:e1", "E12", edge("NAT:1", "GHOST:1", "graft:located_in")),
+      ("slim_edge:e1", "S1", edge("NAT:1", "PART:1", "graft:adjacent_to")),
+      ("slim_node:n_in", "NAT:1", Some("""["nation one","graft:Nation",["REG:0","REG:1"]]""")),
+      ("slim_node:n_in", "PART:1", Some("""["part one","graft:Part",[]]""")),
+      ("slim_node:n_out", "NAT:1", Some("""["nation one","graft:Nation",[]]""")),
+      ("slim_node:n_out", "ORD:1", Some("""["Order#1","graft:Order",["ORD:0"]]""")),
+      ("slim_node:n_out", "PART:1", Some("""["part one","graft:Part",[]]"""))))
+    // an empty answer renders no rows at all
+    assert(rows(OneHop.Result(m.where(lit(false)), "n_in", "n_out")).isEmpty)
+  }
+
   test("envelope folds parts into one valid reference-shaped document") {
     val parts = TrapiResponse.assemble(res, graph, Map.empty, "infores:graft")
     // non-empty QG: Spark's JSON schema inference drops empty-object fields

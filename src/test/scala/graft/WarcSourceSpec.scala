@@ -119,8 +119,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("recordsStream: file-stream ingest yields exactly the batch records") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = "target/warc-spec-stream"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = freshDir("warc-spec-stream")
     val docs = Seq((1L, "alpha"), (2L, "beta\r\nWARC/1.0 trap"), (3L, "γ"))
       .toDF("doc_id", "text")
     WarcSource.export(docs, dir, docsPerFile = 2, wet = true)
