@@ -291,7 +291,7 @@ object Bench {
           sys.env.getOrElse("SPARK_GRAFT_DETAIL", {
             val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss_SSS")
               .format(new java.util.Date())
-            s"target/bench_detail_c${cpus}_$ts.json"
+            Spool.target(s"bench_detail_c${cpus}_$ts.json")
           }))
         Option(detailPath.toAbsolutePath.getParent)
           .foreach(java.nio.file.Files.createDirectories(_))

@@ -166,73 +166,20 @@ object PipelineEntry {
     if (df.inputFiles.length >= target) df else df.repartition(target)
   }
 
-  /** Per-corpus directory for file-source streaming keys: a stable dir
-   * under target/ holding a symlink to the corpus's `file`. Keyed by an
-   * md5 of the FULL dir path (two corpora whose paths share a digit/dot
-   * pattern — .../a/sf0.1 vs .../b/sf0.1 — must not collide), and the
-   * symlink is re-created if it does not resolve to the requested file
-   * (a stale key would silently stream the wrong dataset). Returns
-   * (stream dir, tag for memory-sink query names). */
-  private def streamingSourceDir(dir: String, file: String): (String, String) = {
+  /** `Spool.once` writer for file-source streams, which need a
+   * DIRECTORY: a dir holding one symlink to the corpus's `file`. */
+  private def linkTo(dir: String, file: String)(out: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val stem = file.takeWhile(_ != '.')
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val streamDir = Paths.get(TargetDir(s"stream-$stem-$tag"))
-    Files.createDirectories(streamDir)
-    val target = Paths.get(dir, file).toAbsolutePath
-    val link = streamDir.resolve(file)
-    if (Files.isSymbolicLink(link) && Files.readSymbolicLink(link) != target)
-      Files.delete(link)
-    if (!Files.exists(link)) Files.createSymbolicLink(link, target)
-    (streamDir.toString, tag)
-  }
-  private def streamingDocsDir(dir: String): (String, String) =
-    streamingSourceDir(dir, "documents.parquet")
-
-  /** Once-per-corpus streaming spool (r21, r20-verdict #5): the
-   * `streamingDocsSplitDir` write-once discipline generalized to the
-   * streaming keys whose SOURCE fixture must first be exported in a
-   * non-parquet shape (WET/WARC segments, sitemap parquet). The export
-   * is a pure function of the corpus dir, so deleting and re-writing it
-   * on every call only re-measured the batch export, not the drain under
-   * test — the same repeat-reuse posture the bench already applies to
-   * batch keys via the prepared-plan cache. The STREAM itself (a fresh
-   * query, fresh temp checkpoint, full re-drain) still runs per call.
-   * Keyed by an md5 of the corpus dir (collision-safe across corpora);
-   * the sentinel lives BESIDE the spool so no file source ever lists it.
-   * Bump `stem` when the export shape changes — a stale spool must never
-   * masquerade as the new shape. */
-  private def spooledOnce(dir: String, stem: String)
-                         (write: String => Unit): (String, String) = {
-    import java.nio.file.{Files, Paths}
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val out = Paths.get(TargetDir(s"$stem-$tag"))
-    val sentinel = Paths.get(TargetDir(s"$stem-$tag.ok"))
-    if (!Files.exists(sentinel)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
-      write(out.toString)
-      Files.write(sentinel, stem.getBytes("UTF-8"))
-    }
-    (out.toString, tag)
+    Files.createDirectories(Paths.get(out))
+    Files.createSymbolicLink(Paths.get(out, file), Paths.get(dir, file).toAbsolutePath)
   }
 
-  /** Multi-file streaming source: the corpus split into `parts` parquet
-   * files (written once per sf dir, reused after), so maxFilesPerTrigger=1
-   * yields genuinely separate micro-batches — the fixture for drain modes
-   * whose semantics only show across batches (p75's update mode). */
-  private def streamingDocsSplitDir(s: SparkSession, dir: String,
-                                    parts: Int): (String, String) = {
-    import java.nio.file.{Files, Paths}
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val out = Paths.get(TargetDir(s"stream-docs-split$parts-$tag"))
-    if (!Files.exists(out.resolve("_SUCCESS")))
-      s.read.parquet(s"$dir/documents.parquet").repartition(parts)
-        .write.mode("overwrite").parquet(out.toString)
-    (out.toString, tag)
-  }
+  /** `Spool.once` writer for multi-batch drains: the corpus split into
+   * `parts` parquet files, so maxFilesPerTrigger=1 yields genuinely
+   * separate micro-batches — the fixture for drain modes whose semantics
+   * only show across batches (p75's update mode). */
+  private def splitDocs(s: SparkSession, dir: String, parts: Int)(out: String): Unit =
+    s.read.parquet(s"$dir/documents.parquet").repartition(parts).write.parquet(out)
 
   /** Batch-side `spread`'s STREAMING twin: the harness drops the corpus
    * as ONE parquet file, and FileStreamSource hands AvailableNow
@@ -745,26 +692,12 @@ object PipelineEntry {
     "p165_jpeg_exif", "p166_id3_tags", "p168_subtitles",
     "p169_canonical_meta")
 
-  /** Prepared plans for the pure keys (build-once, re-execute per call —
-   * SparkEntry's lifecycle notes apply; the key space is bounded by
-   * |pure keys| x |sessions| x |corpora|). */
-  private val prepared = new java.util.concurrent.ConcurrentHashMap[
-    (String, SparkSession, String), DataFrame]()
-
+  /** The pure keys serve from SparkEntry's prepared-plan map
+   * (build-once, re-execute per call; its lifecycle notes apply). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (k, f) =>
       if (!preparedPure(k)) k -> f
-      else
-        k -> ((s: SparkSession, d: String) => {
-          val key = (k, s, d)
-          val hit = prepared.get(key)
-          if (hit != null) hit
-          else {
-            val df = f(s, d) // built outside the bin lock (r11 advice)
-            val raced = prepared.putIfAbsent(key, df)
-            if (raced != null) raced else df
-          }
-        })
+      else k -> ((s: SparkSession, d: String) => SparkEntry.prepare(k, s, d)(f(s, d)))
     }
 
   private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1003,7 +936,8 @@ object PipelineEntry {
     // statement that batch and streaming curation agree.
     "p42_streaming_curation" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema).parquet(streamDir)
       val dirty = stream.withColumn("text",
@@ -1030,7 +964,8 @@ object PipelineEntry {
     // the micro-batch plan is the same single fused scan as batch.
     "p45_streaming_gopher" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema).parquet(streamDir)
       val planted = stream.withColumn("text",
@@ -1106,7 +1041,8 @@ object PipelineEntry {
     // in_corpus values, hash-matched to a batch-derived oracle).
     "p53_streaming_incremental" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema).parquet(streamDir)
         .select("doc_id", "text")
@@ -1182,7 +1118,8 @@ object PipelineEntry {
     // the full five-stage pipeline, dedup included.
     "p58_streaming_pipeline" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = spreadStream(s.readStream.schema(schema).parquet(streamDir))
       val out = Corpus.curationDedupAgg(
@@ -1274,8 +1211,7 @@ object PipelineEntry {
     // planted formula.
     "p145_xrobots" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-xrobots-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-xrobots", dir)
       val m = pmod(col("doc_id"), lit(6))
       val pages = docs(s, dir).select(col("doc_id"), col("text"),
         when(m === 0, lit("X-Robots-Tag: noindex"))
@@ -1344,7 +1280,8 @@ object PipelineEntry {
     // Hash-matches p78's batch oracle on the same corpus.
     "p81_streaming_url_dedup" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsSplitDir(s, dir, parts = 2)
+      val (streamDir, tag) =
+        Spool.once("stream-docs-split2", dir)(splitDocs(s, dir, parts = 2))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = spreadStream(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir))
@@ -1399,8 +1336,7 @@ object PipelineEntry {
     // Content-Length slicing, and member-gzip.
     "p85_warc_ingest" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-ingest-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-ingest", dir)
       WarcSource.export(docs(s, dir), out, docsPerFile = 100)
       WarcSource.records(s, out)
         .where(col("warc_type") === "response")
@@ -1421,8 +1357,7 @@ object PipelineEntry {
     // composed end-to-end, one ground truth.
     "p86_crawl_dedup" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-crawl-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-crawl", dir)
       val withText = messyUrls(docs(s, dir))
         .join(docs(s, dir).select("doc_id", "text"), "doc_id")
       WarcSource.export(withText, out, docsPerFile = 100,
@@ -1500,8 +1435,7 @@ object PipelineEntry {
     // recovery means identical predictions and hit counts.
     "p91_wet_langid" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"wet-langid-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("wet-langid", dir)
       WarcSource.export(docs(s, dir), out, docsPerFile = 100, wet = true)
       val recovered = WarcSource.records(s, out)
         .where(col("warc_type") === "conversion")
@@ -1531,8 +1465,7 @@ object PipelineEntry {
     // every field from the doc table + URL formula independently.
     "p93_cdx_index" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"cdx-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("cdx", dir)
       WarcSource.export(pageUrls(docs(s, dir)), out, docsPerFile = 100,
         urlCol = Some("url"))
       WarcSource.cdxIndex(WarcSource.records(s, out)).orderBy("urlkey")
@@ -1552,11 +1485,8 @@ object PipelineEntry {
     // slip changes rows.
     "p131_crawl_diff" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val tag = dir.replaceAll("[^0-9.]", "")
-      val outA = TargetDir(s"cdx-diff-a-$tag")
-      val outB = TargetDir(s"cdx-diff-b-$tag")
-      Seq(outA, outB).foreach(o =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(o)))
+      val outA = Spool.fresh("cdx-diff-a", dir)
+      val outB = Spool.fresh("cdx-diff-b", dir)
       val d = docs(s, dir)
       val aDocs = d.unionByName(d.where(pmod(col("doc_id"), lit(19)) === 0)
         .withColumn("text", concat(col("text"), lit(" v2"))))
@@ -1587,9 +1517,7 @@ object PipelineEntry {
     // digest-prefix slip, or a phantom/lost revisit all change rows.
     "p133_warc_revisit" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val tag = dir.replaceAll("[^0-9.]", "")
-      val out = TargetDir(s"warc-revisit-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-revisit", dir)
       WarcSource.export(docs(s, dir), out, docsPerFile = 100,
         revisitEvery = 9)
       WarcSource.cdxCaptures(WarcSource.records(s, out))
@@ -1736,9 +1664,7 @@ object PipelineEntry {
     // language ID — SHARES p08's oracle, so matching hashes prove the
     // JSON escaping round-trips byte-exactly into the analysis ops.
     "p102_jsonl_roundtrip" -> ((s, dir) => {
-      val tag = dir.replaceAll("[^0-9]", "_")
-      val out = TargetDir(s"jsonl-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("jsonl", dir)
       val d = docs(s, dir)
       d.select("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").option("compression", "gzip").json(out)
@@ -1806,7 +1732,8 @@ object PipelineEntry {
     "p106_streaming_sketch" -> ((s, dir) => withStreamShuffle(s) {
       import org.apache.spark.sql.streaming.Trigger
       import graft.functions.{TextFunctions => TF}
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val d = docs(s, dir)
       val stream = spreadStream(
         s.readStream.schema(d.schema).parquet(streamDir))
@@ -1851,9 +1778,7 @@ object PipelineEntry {
     // dedup all have to be right at once.
     "p109_web_pipeline" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val tag = dir.replaceAll("[^0-9]", "_")
-      val out = TargetDir(s"webpipe-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("webpipe", dir)
       val d = docs(s, dir)
       val pages = htmlPages(d).select(col("doc_id"), col("html"))
         .join(messyUrls(d).select("doc_id", "url"), "doc_id")
@@ -1881,10 +1806,10 @@ object PipelineEntry {
     "p110_streaming_cdx" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.WarcSource
-      // WARC segment spool is a pure function of the corpus — written
-      // once per sf dir (spooledOnce), so each call measures the DRAIN,
-      // not a repeated batch export (r21, r20-verdict #5)
-      val (out, tag) = spooledOnce(dir, "cdx-stream") { o =>
+      // the WARC segments are a pure function of the corpus, spooled
+      // once per corpus content, so each call measures the DRAIN, not a
+      // repeated batch export
+      val (out, tag) = Spool.once("cdx-stream", dir) { o =>
         WarcSource.export(pageUrls(docs(s, dir)), o, docsPerFile = 100,
           urlCol = Some("url"))
       }
@@ -1903,8 +1828,8 @@ object PipelineEntry {
     "p99_streaming_wet" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.WarcSource
-      // once-per-corpus WET spool (r21, r20-verdict #5) — see p110
-      val (out, tag) = spooledOnce(dir, "wet-stream") { o =>
+      // WET segments spooled once per corpus content; each call drains
+      val (out, tag) = Spool.once("wet-stream", dir) { o =>
         WarcSource.export(docs(s, dir), o, docsPerFile = 100, wet = true)
       }
       val recovered = WarcSource.recordsStream(s, out)
@@ -1980,7 +1905,8 @@ object PipelineEntry {
     // emission across 4 batches — the mode is exercised, not vacuous).
     "p75_streaming_update_dedup" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsSplitDir(s, dir, parts = 2)
+      val (streamDir, tag) =
+        Spool.once("stream-docs-split2", dir)(splitDocs(s, dir, parts = 2))
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = spreadStream(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir))
@@ -2135,7 +2061,8 @@ object PipelineEntry {
     // proved for the curation chains.
     "p67_streaming_dsir" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       // train on the SPREAD batch read (docs) — the raw single-file read
       // would serialize the md5-per-bigram count on one task (r12: the
       // whole key was ~5 s of 1-task training + 4 s of 1-task drain)
@@ -2324,8 +2251,7 @@ object PipelineEntry {
     "p111_warc_binary" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-binary-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-binary", dir)
       val images = docs(s, dir).select(col("doc_id")).as[Long]
         .flatMap { d =>
           val variants = Seq(0) ++
@@ -2361,8 +2287,7 @@ object PipelineEntry {
     // shuffles.
     "p150_http_decode" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-transport-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-transport", dir)
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit(""), lit("chunked"), lit("gzip"),
             lit("deflate"), lit("chunked+gzip")),
@@ -2392,8 +2317,7 @@ object PipelineEntry {
     // unknown-coding degrade: raw bytes kept, text suppressed.
     "p159_content_codings" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-zstd-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-zstd", dir)
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit(""), lit("zstd"), lit("chunked+zstd")),
           (col("doc_id") % 3 + 1).cast("int")).as("enc"))
@@ -2555,8 +2479,7 @@ object PipelineEntry {
     "p118_pdf_extract" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-pdf-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-pdf", dir)
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, t) =>
@@ -2621,8 +2544,7 @@ object PipelineEntry {
     "p124_pdf_pipeline" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-pdfq-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-pdfq", dir)
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, t) =>
@@ -2690,11 +2612,8 @@ object PipelineEntry {
     // extraction semantics (quoted/unquoted, fragment stop) all pinned.
     "p140_wat" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val tag = dir.replaceAll("[^0-9.]", "")
-      val warcOut = TargetDir(s"warc-wat-src-$tag")
-      val watOut = TargetDir(s"warc-wat-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warcOut))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(watOut))
+      val warcOut = Spool.fresh("warc-wat-src", dir)
+      val watOut = Spool.fresh("warc-wat", dir)
       WarcSource.export(htmlPages(docs(s, dir)), warcOut,
         idCol = "doc_id", textCol = "html", urlCol = Some("url"),
         mime = "text/html; charset=utf-8")
@@ -3097,8 +3016,7 @@ object PipelineEntry {
     "p163_warc_pdf_images" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-pdfimg-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-pdfimg", dir)
       val base = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
       // Same single-encode discipline as p161: one JPEG per doc rides
@@ -3142,8 +3060,7 @@ object PipelineEntry {
     // load-bearing); the oracle re-derives each edge closed-form.
     "p155_redirect_edges" -> ((s, dir) => {
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-redirect-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-redirect", dir)
       val in = docs(s, dir).select(col("doc_id"), col("text"),
         element_at(array(lit("200 OK"), lit("301 Moved Permanently"),
             lit("302 Found"), lit("308 Permanent Redirect")),
@@ -3249,8 +3166,7 @@ object PipelineEntry {
     "p154_charset_decode" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-charset-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-charset", dir)
       val in = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, t) =>
@@ -3352,9 +3268,7 @@ object PipelineEntry {
     // drain hash-matches p17's oracle: train-once, serve-forever.
     "p134_streaming_ann" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val tag = dir.replaceAll("[^0-9]", "_")
-      val root = TargetDir(s"ann-serve-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      val root = Spool.fresh("ann-serve", dir)
       val e = embs(s, dir)
       val cents = Ann.trainCentroids(e, nCenters = 16, sampleN = 256,
         iters = 2)
@@ -3388,9 +3302,7 @@ object PipelineEntry {
     "p135_cdx_lookup" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val tag = dir.replaceAll("[^0-9.]", "")
-      val out = TargetDir(s"cdx-lookup-$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("cdx-lookup", dir)
       val d = docs(s, dir)
       WarcSource.export(pageUrls(d), s"$out/warc", docsPerFile = 100,
         urlCol = Some("url"))
@@ -3521,8 +3433,7 @@ object PipelineEntry {
     "p130_warc_video" -> ((s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
-      val out = TargetDir(s"warc-mp4-${dir.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val out = Spool.fresh("warc-mp4", dir)
       val vids = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(d => (d, Mp4.fixtureMp4(d))))
         .toDF("id", "payload")
@@ -3559,8 +3470,8 @@ object PipelineEntry {
     "p126_streaming_sitemaps" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val sm = sitemapDocs(docs(s, dir))
-      // once-per-corpus sitemap-doc spool (r21, r20-verdict #5) — see p110
-      val (out, tag) = spooledOnce(dir, "sitemaps-stream") { o =>
+      // sitemap docs spooled once per corpus content; each call drains
+      val (out, tag) = Spool.once("sitemaps-stream", dir) { o =>
         sm.repartition(8).write.mode("overwrite").parquet(o)
       }
       val name = "p126_sitemaps_" + tag
@@ -3582,7 +3493,7 @@ object PipelineEntry {
     "p15_streaming" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
       // file streaming sources need a DIRECTORY; symlink the single file
-      val (streamDir, tag) = streamingSourceDir(dir, "events.parquet")
+      val (streamDir, tag) = Spool.once("stream-events", dir)(linkTo(dir, "events.parquet"))
       val stream = graft.streaming.EventStream.read(s, streamDir)
       val name = "p15_sessions_" + tag
       // per-USER session state grows with the user population —
@@ -3611,7 +3522,7 @@ object PipelineEntry {
     // deliberately excluded from the compared columns.
     "p18_streaming_windows" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingSourceDir(dir, "events.parquet")
+      val (streamDir, tag) = Spool.once("stream-events", dir)(linkTo(dir, "events.parquet"))
       val stream = graft.streaming.EventStream.read(s, streamDir)
       val name = "p18_windows_" + tag
       // per-EVENT-ID dedup state is corpus-scale (it grows with the
@@ -3694,7 +3605,8 @@ object PipelineEntry {
     // on the same corpus.
     "p73_streaming_perplexity" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val (streamDir, tag) = streamingDocsDir(dir)
+      val (streamDir, tag) =
+        Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val batch = docs(s, dir)
       val model = TextAnalysis.perplexityTrain(batch,
         refFilter = col("source").isin("src0", "src1", "src2", "src3", "src4"),

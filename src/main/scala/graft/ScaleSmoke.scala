@@ -463,7 +463,7 @@ object ScaleSmoke {
         operators.TextAnalysis.boilerplateRemove(withDomain, "domain").count())
       // WARC round-trip at corpus scale: executor-side segment write,
       // one parse task per .warc.gz file (the Common Crawl shape)
-      val warcDir = java.nio.file.Files.createTempDirectory("graft-warc-smoke").toString
+      val warcDir = Spool.fresh("scale-warc", sfDir)
       time("warc export")(
         { sources.WarcSource.export(docs, warcDir, docsPerFile = 2000); 0L })
       time("warc ingest")(
@@ -474,7 +474,7 @@ object ScaleSmoke {
       time("cdx index")(
         sources.WarcSource.cdxIndex(sources.WarcSource.records(spark, warcDir))
           .orderBy("urlkey").count())
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warcDir))
+      Spool.wipe(java.nio.file.Paths.get(warcDir))
       // HTML extraction + link graph at corpus scale: each doc becomes
       // a page with chrome, entities, and two hrefs (one root-relative)
       val pages = docs
@@ -672,8 +672,7 @@ object ScaleSmoke {
         lit(200L).as("status"),
         md5(col("id").cast("string")).as("digest"),
         lit(100L).as("n_bytes"))
-      val dir = TargetDir("scale-cdx-index")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Spool.fresh("scale-cdx-index", sfDir)
       index.repartitionByRange(32, col("urlkey"))
         .sortWithinPartitions("urlkey").write.parquet(dir)
       val idx = spark.read.parquet(dir)
@@ -866,8 +865,7 @@ object ScaleSmoke {
       // the touched-subset rewrite.
       locally {
         import graft.sources.GraphStore
-        val storeDir = java.nio.file.Paths.get("target/scale-delta-store")
-        org.apache.commons.io.FileUtils.deleteQuietly(storeDir.toFile)
+        val storeDir = java.nio.file.Paths.get(Spool.fresh("scale-delta-store", sfDir))
         java.nio.file.Files.createDirectories(storeDir)
         val tdir = storeDir.resolve("edges.parquet")
         base.edges.sort(org.apache.spark.sql.functions.col("subject"))

@@ -114,11 +114,12 @@ object Fixture {
     })
 
   /** Retire the serving session derived from `spark`: drops it from the
-   * registry and evicts its prepared plans (the shared cached fixture
-   * frames belong to the SparkContext's CacheManager and stay valid for
-   * other sessions). */
+   * registry and evicts the prepared plans of both sessions (the shared
+   * cached fixture frames belong to the SparkContext's CacheManager and
+   * stay valid for other sessions). */
   def closeServing(spark: SparkSession): Unit = {
     val sv = servingSessions.remove(spark)
+    SparkEntry.evictPrepared(spark)
     if (sv != null) SparkEntry.evictPrepared(sv)
   }
 
@@ -237,9 +238,25 @@ object SparkEntry {
    * and `evictPrepared` drops a session's entries when serving ends so a
    * long-lived process doesn't pin dead sessions' plans (and whatever
    * intermediates they persist) forever. The key space is otherwise
-   * bounded by design: |query keys| x |live serving sessions| x |stores|. */
+   * bounded by design: |query keys| x |live sessions| x |stores|. The
+   * construction-pure pipeline keys (`PipelineEntry.preparedPure`) serve
+   * from the same map, keyed on the caller's batch session. */
   private val prepared = new java.util.concurrent.ConcurrentHashMap[
     (String, SparkSession, String), DataFrame]()
+
+  /** The prepared plan of `key` on (`session`, `dir`), built by `build`
+   * on the first call. */
+  private[graft] def prepare(key: String, session: SparkSession, dir: String)
+                            (build: => DataFrame): DataFrame = {
+    val k = (key, session, dir)
+    val hit = prepared.get(k)
+    if (hit != null) hit
+    else {
+      val df = build // built outside the bin lock
+      val raced = prepared.putIfAbsent(k, df)
+      if (raced != null) raced else df
+    }
+  }
 
   /** Drop all prepared plans bound to `session` (call when a serving
    * session is retired); unpersists any operator-materialized frames the
@@ -268,14 +285,7 @@ object SparkEntry {
       else
         k -> ((s: SparkSession, d: String) => {
           val sv = Fixture.serving(s)
-          val key = (k, sv, d)
-          val hit = prepared.get(key)
-          if (hit != null) hit
-          else {
-            val df = f(sv, d) // built outside the bin lock
-            val raced = prepared.putIfAbsent(key, df)
-            if (raced != null) raced else df
-          }
+          prepare(k, sv, d)(f(sv, d))
         })
     } ++ PipelineEntry.queries
 
@@ -399,7 +409,7 @@ object SparkEntry {
     // test.
     "g35_equiv_map_dump" -> ((s, dir) => {
       val g = Fixture.graph(s, dir)
-      val dump = TargetDir(s"nodenorm-dump-${dir.replaceAll("[^0-9.]", "")}")
+      val dump = Spool.fresh("nodenorm-dump", dir)
       g.nodes.select(col("id"), col("equiv_ids").as("equivalent_identifiers"))
         .coalesce(1).write.mode("overwrite").json(dump)
       normalizeMerge(g, Normalizer.equivMapFromDump(s, dump, "jsonl"))
@@ -502,7 +512,7 @@ object SparkEntry {
     // equivalent ids remap to preferred ids, a source allowlist filters,
     // superclass_of flips, and duplicate triples collapse.
     "g32_subclass_from_file" -> ((s, dir) => {
-      val out = TargetDir(s"subclass-file-${dir.replaceAll("[^0-9.]", "")}")
+      val out = Spool.fresh("subclass-file", dir)
       val c = s.read.parquet(s"$dir/customer.parquet")
       def row(idPfx: String, subj: Column, obj: Column, pred: String,
               src: String)(rows: DataFrame) = rows.select(
@@ -554,7 +564,7 @@ object SparkEntry {
     // and emit the canonical edge table + re-typed attributes.
     "g25_kgx_roundtrip" -> ((s, dir) => {
       import graft.sources.KgxSource
-      val out = TargetDir(s"kgx-roundtrip-${dir.replaceAll("[^0-9.]", "")}")
+      val out = Spool.fresh("kgx-roundtrip", dir)
       val g = Fixture.graph(s, dir)
       KgxSource.writeTsv(g, out, attrColumns = Seq("mktsegment", "acctbal", "tags"),
         compress = true)
@@ -578,16 +588,13 @@ object SparkEntry {
     // drop twin of g25, sharing its oracle.
     "g34_kgx_url_spool" -> ((s, dir) => {
       import graft.sources.KgxSource
-      val sfx = dir.replaceAll("[^0-9.]", "")
-      val out = TargetDir(s"kgx-url-src-$sfx")
+      val out = Spool.fresh("kgx-url-src", dir)
       val g = Fixture.graph(s, dir)
       KgxSource.writeTsv(g, out, attrColumns = Seq("mktsegment", "acctbal", "tags"),
         compress = true)
       // fresh spool per drop: writeTsv emits new UUID part names each run,
       // and a spool that accumulates across drops would double-read
-      val spool = TargetDir(s"kgx-url-spool-$sfx")
-      val old = new java.io.File(spool).listFiles()
-      if (old != null) old.foreach(_.delete())
+      val spool = Spool.fresh("kgx-url-spool", dir)
       val parts = new java.io.File(s"$out/edges").listFiles()
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       parts.foreach(f => KgxSource.fetchToSpool(f.toURI.toString, spool))
@@ -650,7 +657,7 @@ object SparkEntry {
     // the oracle is the original ontology rendered as literal VALUES).
     "g30_ontology_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val path = TargetDir("ontology-roundtrip.tsv")
+      val path = Spool.target("ontology-roundtrip.tsv")
       graft.sources.OntologyLoader.writeTsv(ont, path)
       val ont2 = graft.sources.OntologyLoader.fromFile(s, path, "tsv")
       ontologyTermTable(ont2).toDF(

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -26,9 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * semantics) rebuilds. The check costs one directory listing — no data is
  * read to validate.
  *
- * Concurrency: writes are guarded per-JVM (the library's mains are
- * single-process); a multi-writer deployment would stage to a temp dir and
- * rename, which object stores expose as atomic publish.
+ * Concurrency: table writes are serialized per JVM and the manifest is
+ * written after the data, so a torn build never reads as fresh (a missing
+ * or mismatched manifest rebuilds). Two processes building one table at
+ * once would still overwrite each other's files: the store keeps its
+ * in-place layout (`<md5(path)>/<table>.parquet` plus `.manifest`)
+ * because readers locate tables by it. Corpus-derived scratch spools
+ * publish by one atomic rename instead (`graft.Spool.once`).
  */
 object GraphStore {
 
@@ -42,31 +45,17 @@ object GraphStore {
    * ingest cost and the per-session startup cost are never conflated. */
   def buildSeconds: Double = buildNanosAcc / 1e9
 
+  /** 8 MB of parquet per cached serving-table partition. */
+  private val PartBytes = 8L << 20
+
   private def root: Path =
-    Paths.get(sys.env.getOrElse("SPARK_GRAFT_STORE", "target/graph-store"))
+    Paths.get(sys.env.getOrElse("SPARK_GRAFT_STORE", graft.Spool.target("graph-store")))
 
-  private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-
-  private def md5(s: String): String =
-    hex(MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
-
-  /** Digest of the corpus inputs + format version. Name/size/mtime of the
-   * dir's regular files — the parquet-level identity of the corpus drop. */
-  private def fingerprint(sfDir: String): String = {
-    val dir = Paths.get(sfDir)
-    val entries =
-      if (!Files.isDirectory(dir)) Seq.empty
-      else {
-        val s = Files.list(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
-            s"${p.getFileName}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-          }.toSeq.sorted
-        } finally s.close()
-      }
-    md5((s"v$FormatVersion" +: entries).mkString("\n"))
-  }
+  /** Manifest text: digest of the format version plus the corpus dir's
+   * `Spool.fingerprint` lines (name/size/mtime of its regular files) —
+   * the parquet-level identity of the corpus drop. */
+  private[graft] def fingerprint(sfDir: String): String =
+    graft.Spool.md5((s"v$FormatVersion" +: graft.Spool.fingerprint(sfDir)).mkString("\n"))
 
   /** Read table `name` for corpus `sfDir` from the store, building and
    * writing it first when absent or stale. `build` is by-name: a fresh
@@ -86,7 +75,7 @@ object GraphStore {
   def table(spark: SparkSession, sfDir: String, name: String,
             clusterBy: Seq[String] = Nil)
            (build: => DataFrame): DataFrame = synchronized {
-    val dir = root.resolve(md5(sfDir))
+    val dir = root.resolve(graft.Spool.md5(sfDir))
     val data = dir.resolve(s"$name.parquet")
     val manifest = dir.resolve(s"$name.manifest")
     val fp = fingerprint(sfDir)
@@ -110,14 +99,12 @@ object GraphStore {
     // 600 KB partitions (the store write's shuffle width), so every point
     // lookup scheduled ~50 tasks against 27 MB — the task-launch constant,
     // not the scan, was the latency floor. Target ~8 MB of parquet per
-    // cached partition (overridable), capped at defaultParallelism so a
+    // cached partition, capped at defaultParallelism so a
     // fixture-sized table still encodes/scans in parallel; a real
     // corpus's store (size >= cores x target) takes the no-op branch and
     // keeps the planner's file-packed partitioning — at 100 TB that is
     // thousands of full-size partitions, exactly right for cluster scans.
     // (Filters/projections still push through a round-robin repartition.)
-    val targetBytes = sys.env.getOrElse("SPARK_GRAFT_STORE_PART_BYTES",
-      (8L << 20).toString).toLong
     val par = spark.sparkContext.defaultParallelism
     val bytes =
       try {
@@ -127,10 +114,10 @@ object GraphStore {
           s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
         } finally s.close()
       } catch { case _: Throwable => Long.MaxValue }
-    if (bytes >= par.toLong * targetBytes) df
+    if (bytes >= par.toLong * PartBytes) df
     else {
       val n =
-        math.max(1L, math.min(par.toLong, (bytes + targetBytes - 1) / targetBytes)).toInt
+        math.max(1L, math.min(par.toLong, (bytes + PartBytes - 1) / PartBytes)).toInt
       if (clusterBy.isEmpty) df.repartition(n)
       else {
         // A round-robin repartition would interleave the writer's sorted
@@ -335,7 +322,7 @@ object GraphStore {
       .reduceOption(_ || _).getOrElse(lit(false))
     val staging = tableDir.resolveSibling(
       tableDir.getFileName.toString + ".delta-tmp")
-    org.apache.commons.io.FileUtils.deleteQuietly(staging.toFile)
+    graft.Spool.wipe(staging)
     // null-keyed rows are NOT covered by any range: include them
     // explicitly (NOT(null-valued predicate) would silently drop them)
     postDelta.where(not(untouchedPred) || col(keyCol).isNull)
@@ -351,7 +338,7 @@ object GraphStore {
           s"part-${java.util.UUID.randomUUID}-${p.getFileName}")
       Files.move(p, dst)
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(staging.toFile)
+    graft.Spool.wipe(staging)
     DeltaWriteStats(
       filesTotal = infos.size,
       filesRewritten = touched.size,

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * is configured: a second builder under `src/` is where deployment
  * settings start to drift (a main without the codegen cache or UTC
  * measures a different system). And no code names a fixed checkout path:
- * scratch output goes through `TargetDir`, so a second checkout never
- * writes into the first one's tree. */
+ * scratch output goes through `Spool`, so a second checkout never writes
+ * into the first one's tree, and `Spool` alone names a `target/` path,
+ * tags a corpus and deletes a scratch dir. */
 class GraftSessionSpec extends AnyFunSuite {
 
   // whitespace allowed around the dot, so a builder split across lines
@@ -51,6 +52,18 @@ class GraftSessionSpec extends AnyFunSuite {
         s"$f:${i + 1}: ${l.trim}"
     })
     if (hits.nonEmpty)
-      fail(s"use TargetDir instead of a fixed path:\n${hits.mkString("\n")}")
+      fail(s"use Spool instead of a fixed path:\n${hits.mkString("\n")}")
+  }
+
+  test("only Spool.scala names target/, tags a corpus or deletes a scratch dir") {
+    // a relative target/ literal, a hand-rolled scratch delete, a path-digit tag
+    val banned = Seq("\"target/", "deleteQuietly", "replaceAll(\"[^0-9")
+    val hits = sources
+      .filter(f => f.startsWith("src/main") && f.getFileName.toString != "Spool.scala")
+      .flatMap(f => code(f).linesIterator.zipWithIndex.collect {
+        case (l, i) if banned.exists(l.contains) => s"$f:${i + 1}: ${l.trim}"
+      })
+    if (hits.nonEmpty)
+      fail(s"go through graft.Spool (target, tag, once, fresh):\n${hits.mkString("\n")}")
   }
 }

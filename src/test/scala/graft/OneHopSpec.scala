@@ -102,12 +102,17 @@ class OneHopSpec extends SparkSpec {
     val df1 = q(spark, sfDir)
     assert(q(spark, sfDir) eq df1) // prepared-plan hit: same instance
     assert(df1.count() > 0)
+    // a pipeline key's plan is bound to the caller's batch session
+    val p = SparkEntry.queries("p50_curation_pipeline")
+    val pdf1 = p(spark, sfDir)
+    assert(p(spark, sfDir) eq pdf1)
     Fixture.closeServing(spark)
     val sv2 = Fixture.serving(spark)
     assert(!(sv2 eq sv1)) // a fresh serving session after retirement
     val df2 = q(spark, sfDir)
     assert(!(df2 eq df1)) // evicted: rebuilt against the new session
     assert(df2.count() == df1.count())
+    assert(!(p(spark, sfDir) eq pdf1)) // the batch session's plans go too
   }
 
   test("requires at least one pinned qnode") {
