@@ -692,8 +692,8 @@ object PipelineEntry {
     "p165_jpeg_exif", "p166_id3_tags", "p168_subtitles",
     "p169_canonical_meta")
 
-  /** The pure keys serve from SparkEntry's prepared-plan map
-   * (build-once, re-execute per call; its lifecycle notes apply). */
+  /** The pure keys serve from `SparkEntry.prepare` (build-once,
+   * re-execute per call; its lifecycle notes apply). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (k, f) =>
       if (!preparedPure(k)) k -> f

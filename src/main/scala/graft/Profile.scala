@@ -1,13 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
@@ -40,13 +37,6 @@ object Profile {
     plansDir.foreach(Files.createDirectories(_))
     val spark = GraftSession()
 
-    val jobs, stages, tasks = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
-    })
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
@@ -66,12 +56,9 @@ object Profile {
       ((System.nanoTime() - t0) / 1e9, r)
     }
     /** Seconds, result, and the jobs/stages/tasks the body started. */
-    def counted[A](body: => A): (Double, A, String) = {
-      Bridge.awaitListeners(spark)
-      val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
-      val (sec, r) = timed(body)
-      Bridge.awaitListeners(spark)
-      (sec, r, s"${jobs.get - j0} jobs ${stages.get - s0} stages ${tasks.get - t0} tasks")
+    def counted[A](body: => A): (Double, A, JobCount) = {
+      val ((sec, r), run) = JobCount.during(spark)(timed(body))
+      (sec, r, run)
     }
     def step[A](name: String)(body: => A): A = {
       val (sec, r) = timed(body)

@@ -4,134 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{GraftOntology => O, PropertyGraph}
 import graft.operators._
-import graft.sources.{GraphStore, TpchGraph}
-
-/** Cached fixture state per (session, sf-dir): graph, subclass closure,
- * and the meta summary that /meta_knowledge_graph + /sri_test_triples
- * share (one shuffle, cached — the long-lived-service posture).
- *
- * All four artifacts load through GraphStore: the build pipeline runs at
- * most ONCE per corpus drop (a batch ingest job writing parquet), and
- * every session after it — including this JVM after a driver restart —
- * warms by scanning columnar data. That split is what keeps service
- * startup flat as the data grows 100x (re-deriving the edge cache was
- * 20-30 s at sf0.1 and scales with the corpus; scanning it does not). */
-object Fixture {
-  private val closures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val closureIdxs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      Option[graft.operators.ClosureIndex]]()
-  private val metaSummaries =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val graphs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PropertyGraph]()
-
-  /** Store-backed nodes/edges, UNCACHED — the shared loader for graph()
-   * and for store-side derivations (closure, meta), so populating the
-   * store never touches session caches and build-vs-warm timing stays
-   * honest. The lazy build plan is constructed only when a table is
-   * stale. */
-  private def storeFrames(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    lazy val built = graft.sources.TpchGraph.build(spark, sfDir)
-    // Zone-map clustering (r12): nodes by id, edges by subject — literal
-    // point probes prune to the batches/row-groups holding the probed
-    // keys (see GraphStore.table's scaladoc).
-    val nodes = GraphStore.table(spark, sfDir, "nodes", clusterBy = Seq("id"))(built.nodes)
-    val edges = GraphStore.table(spark, sfDir, "edges", clusterBy = Seq("subject"))(built.edges)
-    // the endpoint-category dimension persisted inside the build is dead
-    // once the denormalized table is on disk
-    PropertyGraph.unpersistBuildCaches()
-    (nodes, edges)
-  }
-
-  /** OBJECT-clustered edge replica (reverse-direction probes, see
-   * PropertyGraph.reverseEdges). Built by re-sorting the stored edge
-   * table — the primary is always written first by storeFrames, so the
-   * replica's build never re-runs the graph construction pipeline. */
-  private def reverseStoreFrame(spark: SparkSession, sfDir: String,
-                                edges: DataFrame): DataFrame =
-    GraphStore.table(spark, sfDir, "edges_by_object", clusterBy = Seq("object"))(edges)
-
-  /** Populate every store table for `sfDir` without warming this session's
-   * caches (the ingest job's entry point). Returns seconds spent building
-   * — 0.0 when the store was already fresh. */
-  def ensureStore(spark: SparkSession, sfDir: String): Double = {
-    val before = GraphStore.buildSeconds
-    val (nodes, edges) = storeFrames(spark, sfDir)
-    reverseStoreFrame(spark, sfDir, edges)
-    val g = PropertyGraph(nodes, edges)
-    GraphStore.table(spark, sfDir, "closure")(
-      SubclassClosure.fromGraph(g, O.ontology))
-    GraphStore.table(spark, sfDir, "meta_summary")(GraphOps.metaSummary(g))
-    GraphStore.buildSeconds - before
-  }
-
-  def graph(spark: SparkSession, sfDir: String): PropertyGraph =
-    graphs.computeIfAbsent((spark, sfDir), { _ =>
-      val (nodes, edges) = storeFrames(spark, sfDir)
-      PropertyGraph(nodes.cache(), edges.cache(),
-        Some(reverseStoreFrame(spark, sfDir, edges).cache()))
-    })
-
-  def closure(spark: SparkSession, sfDir: String): DataFrame =
-    closures.computeIfAbsent((spark, sfDir), { _ =>
-      val (nodes, edges) = storeFrames(spark, sfDir)
-      val c = GraphStore.table(spark, sfDir, "closure")(
-        SubclassClosure.fromGraph(PropertyGraph(nodes, edges), O.ontology)).cache()
-      c.count()
-      c
-    })
-
-  /** Driver-side closure index for the point-lookup fast path (built once
-   * per session from the cached closure; None when the closure exceeds
-   * the driver-size guard — lookups then use the broadcast-join path). */
-  def closureIndex(spark: SparkSession, sfDir: String): Option[graft.operators.ClosureIndex] =
-    closureIdxs.computeIfAbsent((spark, sfDir), { _ =>
-      graft.operators.ClosureIndex.fromClosure(closure(spark, sfDir))
-    })
-
-  private val servingSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  /** The SERVING session for interactive graph lookups: a `newSession()`
-   * of the caller's (shared SparkContext + CacheManager — the cached
-   * graph frames are reused, nothing is re-encoded) with its own SQLConf
-   * tuned for answer-sized work: AQE off (its stage-by-stage re-planning
-   * is pure latency when every post-match shuffle is answer-sized) and
-   * ONE shuffle partition. That is the honest 100 TB shape too: in a
-   * lookup the corpus-sized work is the SCAN, whose parallelism comes
-   * from the cached table's partitioning; everything after the match is
-   * bounded by the answer-size cutoff guard (G22), so distinct/groupBy/
-   * sort on it wants answer-scale, not corpus-scale, partitioning.
-   * Batch/pipeline operators keep the caller's session untouched. */
-  def serving(spark: SparkSession): SparkSession =
-    servingSessions.computeIfAbsent(spark, { s =>
-      val sv = s.newSession()
-      sv.conf.set("spark.sql.adaptive.enabled", "false")
-      sv.conf.set("spark.sql.shuffle.partitions", "1")
-      sv
-    })
-
-  /** Retire the serving session derived from `spark`: drops it from the
-   * registry and evicts the prepared plans of both sessions (the shared
-   * cached fixture frames belong to the SparkContext's CacheManager and
-   * stay valid for other sessions). */
-  def closeServing(spark: SparkSession): Unit = {
-    val sv = servingSessions.remove(spark)
-    SparkEntry.evictPrepared(spark)
-    if (sv != null) SparkEntry.evictPrepared(sv)
-  }
-
-  def metaSummary(spark: SparkSession, sfDir: String): DataFrame =
-    metaSummaries.computeIfAbsent((spark, sfDir), { _ =>
-      val (nodes, edges) = storeFrames(spark, sfDir)
-      val m = GraphStore.table(spark, sfDir, "meta_summary")(
-        GraphOps.metaSummary(PropertyGraph(nodes, edges))).cache()
-      m.count()
-      m
-    })
-}
+import graft.sources.TpchGraph
 
 /** Driver contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
@@ -176,9 +49,6 @@ object SparkEntry {
     df.select(col("edge_id"), col("input_id"), col("output_id"))
       .orderBy("edge_id", "input_id")
 
-  private val zippedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Synthetic raw edges with zipped list properties + trial-phase enums
    * run through the full ingest-transform chain, MATERIALIZED once per
    * session (shared by g24 and g31). Ingest-transform output is a stored
@@ -186,12 +56,12 @@ object SparkEntry {
    * transform would re-inline the zip expressions into every constraint
    * reference (the projection-collapse trap — see SelfJoinMaterialize). */
   private def zippedEdges(s: SparkSession, dir: String): DataFrame =
-    zippedCache.computeIfAbsent((s, dir), { _ =>
+    Fixture.memo(s, dir, "zipped_edges") {
       val df = buildZippedEdges(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
+    }
 
   private def buildZippedEdges(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.GraphBuilder
@@ -232,40 +102,15 @@ object SparkEntry {
    * against prebuilt dicts); each call still runs a fresh Spark job
    * over the shared cached graph, so results always reflect the store.
    *
-   * Lifecycle (r11 advice): entries are built OUTSIDE the map's bin lock
-   * (putIfAbsent — a racing duplicate build is harmless, both plans are
-   * pure) so a slow plan construction never blocks unrelated lookups,
-   * and `evictPrepared` drops a session's entries when serving ends so a
-   * long-lived process doesn't pin dead sessions' plans (and whatever
-   * intermediates they persist) forever. The key space is otherwise
-   * bounded by design: |query keys| x |live sessions| x |stores|. The
-   * construction-pure pipeline keys (`PipelineEntry.preparedPure`) serve
-   * from the same map, keyed on the caller's batch session. */
-  private val prepared = new java.util.concurrent.ConcurrentHashMap[
-    (String, SparkSession, String), DataFrame]()
-
-  /** The prepared plan of `key` on (`session`, `dir`), built by `build`
-   * on the first call. */
+   * The plans live in Fixture's memo, so they share its lifecycle: built
+   * once outside the map's lock, dropped by `Fixture.closeServing` (which
+   * also unpersists the operator-materialized frames they pinned) and
+   * when their session's SparkContext stops. The construction-pure
+   * pipeline keys (`PipelineEntry.preparedPure`) are prepared the same
+   * way, keyed on the caller's batch session. */
   private[graft] def prepare(key: String, session: SparkSession, dir: String)
-                            (build: => DataFrame): DataFrame = {
-    val k = (key, session, dir)
-    val hit = prepared.get(k)
-    if (hit != null) hit
-    else {
-      val df = build // built outside the bin lock
-      val raced = prepared.putIfAbsent(k, df)
-      if (raced != null) raced else df
-    }
-  }
-
-  /** Drop all prepared plans bound to `session` (call when a serving
-   * session is retired); unpersists any operator-materialized frames the
-   * evicted plans pinned. */
-  def evictPrepared(session: SparkSession): Unit = {
-    val it = prepared.keySet.iterator()
-    while (it.hasNext) if (it.next()._2 eq session) it.remove()
-    graft.operators.OperatorCaches.drainMaterialized()
-  }
+                            (build: => DataFrame): DataFrame =
+    Fixture.memo(session, dir, s"prepared:$key")(build)
 
   /** Keys whose CONSTRUCTION is the operation under test — a file
    * export/spool/roundtrip or an eager guard probe. Serving them from
@@ -801,22 +646,16 @@ object SparkEntry {
         .select(col("id"), col("name"), sortedCats).orderBy("id"))
   )
 
-  private val deltaApplieds = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.sources.GraphDelta.Applied]()
-
   /** Cached delta application for g39/g40 (the two keys project one
    * apply). The base graph and closure come from the shared Fixture
    * caches — applying a delta never rebuilds them. */
   private def deltaApplied(s: SparkSession, dir: String)
       : graft.sources.GraphDelta.Applied =
-    deltaApplieds.computeIfAbsent((s, dir), { _ =>
+    Fixture.memo(s, dir, "delta_applied") {
       graft.sources.GraphDelta.apply(
         Fixture.graph(s, dir), Fixture.closure(s, dir),
         TpchGraph.fixtureDelta(s, dir), ont)
-    })
-
-  private val multiGraphs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.serving.MultiGraph]()
+    }
 
   /** Two-graph registry for g37: "alpha" hosts the full store-backed
    * graph (sharing the Fixture caches with every single-graph key —
@@ -826,7 +665,7 @@ object SparkEntry {
    * alpha. Both get the store's closure + driver index (same node
    * hierarchy). */
   private def multiGraph(s: SparkSession, dir: String): graft.serving.MultiGraph =
-    multiGraphs.computeIfAbsent((s, dir), { _ =>
+    Fixture.memo(s, dir, "multi_graph") {
       import graft.serving.{HostedGraph, MultiGraph}
       val mg = new MultiGraph(s, ont)
       val g = Fixture.graph(s, dir)
@@ -839,7 +678,7 @@ object SparkEntry {
         PropertyGraph(g.nodes, betaEdges, Some(betaRev)), closure, idx,
         owned = Seq(betaEdges, betaRev)))
       mg
-    })
+    }
 
   /** The g17/g35 normalize+merge body: duplicate CUST->NAT edges under
    * their alias id, then remap through `prefMap` and merge — shared so

@@ -75,9 +75,13 @@ object PropertyGraph {
 
   /** Unpersist every registered build-stage cache (idempotent; safe while
    * no query over a registered graph is mid-flight — Spark recomputes
-   * lazily if one is). */
+   * lazily if one is). A frame of a stopped SparkContext is just dropped:
+   * its cache went with the context, and unpersisting it would throw. */
   def unpersistBuildCaches(): Unit = {
     var df = buildCaches.poll()
-    while (df != null) { df.unpersist(); df = buildCaches.poll() }
+    while (df != null) {
+      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
+      df = buildCaches.poll()
+    }
   }
 }

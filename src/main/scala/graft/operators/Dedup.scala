@@ -71,11 +71,16 @@ object OperatorCaches {
 
   /** Unpersist every registered frame; returns how many were dropped.
    * Safe while queries are mid-flight (lazy recompute), intended after
-   * results are consumed. */
+   * results are consumed. A frame of a stopped SparkContext is dropped
+   * without an unpersist (its cache went with the context). */
   def drainMaterialized(): Int = {
     var n = 0
     var df = frames.poll()
-    while (df != null) { df.unpersist(); n += 1; df = frames.poll() }
+    while (df != null) {
+      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
+      n += 1
+      df = frames.poll()
+    }
     n
   }
 }

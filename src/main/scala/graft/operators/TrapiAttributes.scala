@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
  * value_url template (`{value}` substituted).
  *
  * The reference renders attributes per edge in Python at response time;
- * here rendering is one explode + literal-map lookups (codegen'd, no
- * shuffle), producing a flat (edge_id, attribute) frame that response
- * assembly can re-group or stream out directly.
+ * here rendering is one per-row array of literal-map lookups (codegen'd,
+ * no shuffle) that response assembly sorts in place, or one explode of
+ * it into a flat (edge_id, attribute) frame.
  */
 object TrapiAttributes {
 
@@ -38,13 +38,12 @@ object TrapiAttributes {
   }
 
   /**
-   * Flatten every non-core attribute of every edge into one row:
-   * (edge_id, name, attribute_type_id, value, value_type_id,
-   * attribute_source, value_url). Numeric values render via double
-   * cast; list values join on ",".
+   * Every non-core attribute of an edge row as one array of
+   * (name, attribute_type_id, value, value_type_id, attribute_source,
+   * value_url) structs, attrs then num_attrs then list_attrs. Numeric
+   * values render via double cast; list values join on ",".
    */
-  def render(edges: DataFrame, shells: Map[String, AttributeShell],
-             kpInforesCurie: String): DataFrame = {
+  def attributes(shells: Map[String, AttributeShell], kpInforesCurie: String): Column = {
     val typeMap = typedLit(shells.map { case (k, s) => k -> s.attributeTypeId })
     val vtMap = typedLit(shells.collect { case (k, s) if s.valueTypeId.nonEmpty =>
       k -> s.valueTypeId.get })
@@ -53,34 +52,36 @@ object TrapiAttributes {
     val urlMap = typedLit(shells.collect { case (k, s) if s.valueUrl.nonEmpty =>
       k -> s.valueUrl.get })
 
-    def rendered(kv: DataFrame): DataFrame = {
-      val key = col("name")
+    def rendered(key: Column, value: Column): Column = {
       val srcTemplate = element_at(srcMap, key)
-      kv.select(
-        col("edge_id"), key,
+      struct(key.as("name"),
         coalesce(element_at(typeMap, key), key).as("attribute_type_id"),
-        col("value"),
+        value.as("value"),
         element_at(vtMap, key).as("value_type_id"),
         when(srcTemplate === "{kp_infores_curie}", lit(kpInforesCurie))
           .when(srcTemplate === "{primary_knowledge_source}",
             col("primary_knowledge_source"))
           .otherwise(srcTemplate).as("attribute_source"),
         when(element_at(urlMap, key).isNotNull,
-          replace(element_at(urlMap, key), lit("{value}"), col("value")))
+          replace(element_at(urlMap, key), lit("{value}"), value))
           .as("value_url"))
     }
+    // a null map has no attributes (and must not null the whole concat)
+    def entries(m: String, empty: Column)(value: Column => Column): Column =
+      transform(map_entries(coalesce(col(m), empty)),
+        e => rendered(e.getField("key"), value(e.getField("value"))))
 
-    val base = edges.select(col("edge_id"), col("primary_knowledge_source"),
-      col("attrs"), col("num_attrs"), col("list_attrs"))
-    val strKv = base.select(col("edge_id"), col("primary_knowledge_source"),
-      explode(col("attrs")).as(Seq("name", "value")))
-    val numKv = base.select(col("edge_id"), col("primary_knowledge_source"),
-      explode(col("num_attrs")).as(Seq("name", "raw")))
-      .withColumn("value", col("raw").cast("string")).drop("raw")
-    val listKv = base.select(col("edge_id"), col("primary_knowledge_source"),
-      explode(col("list_attrs")).as(Seq("name", "raw")))
-      .withColumn("value", concat_ws(",", col("raw"))).drop("raw")
-
-    rendered(strKv).unionByName(rendered(numKv)).unionByName(rendered(listKv))
+    concat(
+      entries("attrs", typedLit(Map.empty[String, String]))(identity),
+      entries("num_attrs", typedLit(Map.empty[String, Double]))(_.cast("string")),
+      entries("list_attrs", typedLit(Map.empty[String, Seq[String]]))(concat_ws(",", _)))
   }
+
+  /** `attributes` flattened to one row per attribute: (edge_id, name,
+   * attribute_type_id, value, value_type_id, attribute_source,
+   * value_url). */
+  def render(edges: DataFrame, shells: Map[String, AttributeShell],
+             kpInforesCurie: String): DataFrame =
+    edges.select(col("edge_id"), explode(attributes(shells, kpInforesCurie)).as("a"))
+      .select(col("edge_id"), col("a.*"))
 }

@@ -61,14 +61,10 @@ object TrapiResponse {
   def edgeParts(matches: DataFrame, shells: Map[String, AttributeShell],
                 kpInforesCurie: String,
                 sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
-    val edges = matches.dropDuplicates("edge_id")
-    val attrs = TrapiAttributes.render(edges, shells, kpInforesCurie)
-      .groupBy("edge_id")
-      .agg(array_sort(collect_list(struct(col("name"), struct(
-        col("attribute_type_id"), col("value"), col("value_type_id"),
-        col("attribute_source"), col("value_url")).as("a")))).as("sorted"))
-      .select(col("edge_id"),
-        transform(col("sorted"), x => x.getField("a")).as("attributes"))
+    // sorted by property name (then by the rendered fields), name dropped
+    val attributes = transform(
+      array_sort(TrapiAttributes.attributes(shells, kpInforesCurie)),
+      _.dropFields("name"))
 
     // sources: per-predicate template when configured (with "default"
     // fallback, plover.py:2200-2207), else crafted from the edge's
@@ -93,12 +89,12 @@ object TrapiResponse {
         col("object_aspect").as("qualifier_value"))),
       q => q.getField("qualifier_value").isNotNull)
 
-    edges.join(attrs, Seq("edge_id"), "left")
+    matches.dropDuplicates("edge_id")
       .select(col("edge_id").as("key"),
         to_json(struct(
           col("subject"), col("object"), col("predicate"),
           sources.as("sources"),
-          coalesce(col("attributes"), noAttrObjs).as("attributes"),
+          attributes.as("attributes"),
           when(size(qualifiers) > 0, qualifiers).as("qualifiers"))).as("json"))
   }
 
@@ -111,8 +107,8 @@ object TrapiResponse {
    */
   def nodeParts(matches: DataFrame, graph: PropertyGraph,
                 nodeAttrColumns: Seq[String] = Seq.empty): DataFrame = {
-    val ids = matches.select(col("input_id").as("id"))
-      .unionAll(matches.select(col("output_id").as("id"))).distinct()
+    val ids = matches.select(explode(array(col("input_id"), col("output_id"))).as("id"))
+      .distinct()
     val attrObjs: Column =
       if (nodeAttrColumns.isEmpty) noAttrObjs
       else filter(array(nodeAttrColumns.map(c =>
@@ -167,7 +163,10 @@ object TrapiResponse {
           lit(kpInforesCurie).as("resource_id"))).as("json"))
   }
 
-  /** Full columnar envelope: one row per part, ("part", "key", "json"). */
+  /** Full columnar envelope: one row per part, ("part", "key", "json").
+   * One lazy plan, like `slim`: building it runs no Spark job and
+   * persists nothing. Each part builder reads the matches once, so an
+   * execution runs the one-hop match three times, over the cached graph. */
   def assemble(res: OneHop.Result, graph: PropertyGraph,
                shells: Map[String, AttributeShell], kpInforesCurie: String,
                edgeKey: String = "e1", inputIsSet: Boolean = false,
@@ -176,15 +175,11 @@ object TrapiResponse {
                sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
     def tag(part: String, df: DataFrame) =
       df.select(lit(part).as("part"), col("key"), col("json"))
-    // The three part builders each re-read the matches frame; materialize
-    // it once (stats-carrying persist) so the one-hop join executes once,
-    // not three times. A long-running service unpersists after serving.
-    val shared = res.copy(matches = SelfJoinMaterialize(res.matches))
-    tag("node", nodeParts(shared.matches, graph, nodeAttrColumns))
+    tag("node", nodeParts(res.matches, graph, nodeAttrColumns))
       .unionAll(tag("edge",
-        edgeParts(shared.matches, shells, kpInforesCurie, sourcesTemplate)))
+        edgeParts(res.matches, shells, kpInforesCurie, sourcesTemplate)))
       .unionAll(tag("result",
-        resultParts(shared, kpInforesCurie, edgeKey, inputIsSet, outputIsSet)))
+        resultParts(res, kpInforesCurie, edgeKey, inputIsSet, outputIsSet)))
   }
 
   /**

@@ -29,14 +29,12 @@ import graft.model.{GraftOntology => O, PropertyGraph}
  */
 object TpchGraph {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PropertyGraph]()
-
+  /** The built graph, cached once per (session, sf-dir). */
   def apply(spark: SparkSession, sfDir: String): PropertyGraph =
-    cache.computeIfAbsent((spark, sfDir), { _ =>
+    graft.Fixture.memo(spark, sfDir, "tpch_graph") {
       val g = build(spark, sfDir)
       PropertyGraph(g.nodes.cache(), g.edges.cache())
-    })
+    }
 
   private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

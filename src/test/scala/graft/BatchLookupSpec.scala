@@ -92,20 +92,10 @@ class BatchLookupSpec extends SparkSpec {
   }
 
   test("one job answers the whole batch") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val df = OneHop.answerBatch(spark, graph, ont, probes,
       closure = Some(closure), index = ix)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      df.count()
-      Thread.sleep(500) // listener events are async; let the bus drain
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 2, s"batch ran ${jobs.get()} jobs") // count may AQE-split once
+    val (_, run) = JobCount.during(spark)(df.count())
+    assert(run.jobs <= 2, s"batch ran ${run.jobs} jobs") // count may AQE-split once
   }
 
   test("qualified direction folding: symmetric-free ontology drops the dead gate") {

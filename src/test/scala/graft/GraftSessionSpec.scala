@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * measures a different system). And no code names a fixed checkout path:
  * scratch output goes through `Spool`, so a second checkout never writes
  * into the first one's tree, and `Spool` alone names a `target/` path,
- * tags a corpus and deletes a scratch dir. */
+ * tags a corpus and deletes a scratch dir. Per-session state lives in
+ * one map, `Fixture`'s memo, so it has one lifecycle. */
 class GraftSessionSpec extends AnyFunSuite {
 
   // whitespace allowed around the dot, so a builder split across lines
@@ -53,6 +54,19 @@ class GraftSessionSpec extends AnyFunSuite {
     })
     if (hits.nonEmpty)
       fail(s"use Spool instead of a fixed path:\n${hits.mkString("\n")}")
+  }
+
+  test("one session-keyed map under src/main: Fixture's memo") {
+    // a ConcurrentHashMap whose key type names SparkSession, alone or in a
+    // tuple; `\s*` spans a declaration split across lines
+    val SessionKeyed = """ConcurrentHashMap\s*\[\s*(\([^)\]]*)?\bSparkSession\b""".r
+    val hits = sources.filter(_.startsWith("src/main")).flatMap { f =>
+      val src = code(f)
+      SessionKeyed.findAllMatchIn(src).map(m =>
+        s"${f.getFileName}:${src.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(hits.size == 1 && hits.head.startsWith("Fixture.scala:"),
+      s"keep per-session state in Fixture.memo; session-keyed maps:\n${hits.mkString("\n")}")
   }
 
   test("only Spool.scala names target/, tags a corpus or deletes a scratch dir") {

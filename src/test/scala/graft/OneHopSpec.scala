@@ -106,6 +106,8 @@ class OneHopSpec extends SparkSpec {
     val p = SparkEntry.queries("p50_curation_pipeline")
     val pdf1 = p(spark, sfDir)
     assert(p(spark, sfDir) eq pdf1)
+    val (g1, c1) = (Fixture.graph(sv1, sfDir), Fixture.closure(sv1, sfDir))
+    assert(Fixture.graph(sv1, sfDir) eq g1)
     Fixture.closeServing(spark)
     val sv2 = Fixture.serving(spark)
     assert(!(sv2 eq sv1)) // a fresh serving session after retirement
@@ -113,6 +115,22 @@ class OneHopSpec extends SparkSpec {
     assert(!(df2 eq df1)) // evicted: rebuilt against the new session
     assert(df2.count() == df1.count())
     assert(!(p(spark, sfDir) eq pdf1)) // the batch session's plans go too
+    // every artifact of the retired session goes, not just its plans
+    assert(!(Fixture.graph(sv1, sfDir) eq g1))
+    assert(!(Fixture.closure(sv1, sfDir) eq c1))
+    Fixture.closeServing(sv1)
+  }
+
+  test("a memo build that throws leaves no entry; the next call rebuilds") {
+    var builds = 0
+    def probe(): Int = Fixture.memo(spark, "", "throwing-build") {
+      builds += 1
+      if (builds == 1) throw new IllegalStateException("first build fails")
+      builds
+    }
+    assert(intercept[IllegalStateException](probe()).getMessage == "first build fails")
+    assert(probe() == 2) // rebuilt, not the failed cell
+    assert(probe() == 2 && builds == 2) // then built once
   }
 
   test("requires at least one pinned qnode") {

@@ -536,12 +536,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("TRAPI envelope is one lazy plan: no job to build, nothing persisted") {
+    val res = OneHop.answer(spark, graph, ont, QueryGraph.oneHop(
+      QNode("n_out"),
+      QNode("n_in", ids = Seq("NAT:0", "NAT:1")),
+      QEdge("n_out", "n_in", predicates = Seq(O.LocatedIn))),
+      closure = None, expandSubclasses = false)
+    OperatorCaches.drainMaterialized()
+    val (parts, run) = JobCount.during(spark)(
+      TrapiResponse.assemble(res, graph, Map.empty, "infores:graft"))
+    assert(run.jobs == 0, s"building assemble ran Spark jobs ($run)")
+    assert(OperatorCaches.drainMaterialized() == 0,
+      "building assemble registered a materialized frame")
+    assert(parts.count() > 0)
+  }
+
   test("slim response is one lazy pass: no job to build, one scan per replica, node table streamed") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-    import org.apache.spark.sql.graftglue.Bridge
     // The serving shape: the store-backed fixture with its object-clustered
     // replica, on the serving session. A symmetric predicate keeps both
     // one-hop directions live, so both edge replicas are scanned.
@@ -555,19 +568,8 @@ class PlanAuditSpec extends SparkSpec {
       closure = None, expandSubclasses = false)
 
     // construction runs no Spark job (nothing persisted, nothing counted)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val slim = try {
-      Bridge.awaitListeners(spark)
-      val before = jobs.get
-      val df = TrapiResponse.slim(res, g)
-      Bridge.awaitListeners(spark)
-      assert(jobs.get - before == 0, "building slim ran Spark jobs")
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (slim, run) = JobCount.during(spark)(TrapiResponse.slim(res, g))
+    assert(run.jobs == 0, s"building slim ran Spark jobs ($run)")
 
     def builder(df: DataFrame) = df.queryExecution.optimizedPlan.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Pins the r21 prepared-pure contract: a pipeline key may serve from the
  * prepared-plan cache ONLY if constructing its DataFrame does no work —
  * at most the one parquet-footer schema-inference job, no training
@@ -20,20 +16,10 @@ class PreparedPuritySpec extends SparkSpec {
     val raw = PipelineEntry.rawQueries
     assert(PipelineEntry.preparedPure.subsetOf(raw.keySet),
       "preparedPure names a key that does not exist")
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     for (k <- PipelineEntry.preparedPure.toSeq.sorted) {
-      // drain the async listener bus between keys
-      Thread.sleep(150)
-      val before = jobs.get()
-      raw(k)(spark, sfDir)
-      Thread.sleep(150)
-      val n = jobs.get() - before
-      if (n > 1) offenders += s"$k built with $n jobs"
+      val (_, run) = JobCount.during(spark)(raw(k)(spark, sfDir))
+      if (run.jobs > 1) offenders += s"$k built with ${run.jobs} jobs"
     }
     assert(offenders.isEmpty,
       s"construction no longer pure (remove from preparedPure or make " +

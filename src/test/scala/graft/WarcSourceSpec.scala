@@ -242,43 +242,18 @@ class WarcSourceSpec extends SparkSpec {
     // surt its own literal arguments (r19-verdict-caught): the batch
     // rides a LocalRelation, ConvertToLocalRelation folds the
     // deterministic surtKey projection at optimization time, and the
-    // collect is a driver-side LocalTableScan. Pin: run construction +
-    // one sentinel job under a DEDICATED job group and count only that
-    // group's job starts — any job the construction launched would
-    // inherit the group, while stale async-bus events from earlier
-    // tests carry other groups and are ignored (review-caught: a raw
-    // job count races the listener bus). Events are delivered in
-    // order, so once the sentinel's start arrives the count is final.
+    // collect is a driver-side LocalTableScan. Pin: construction starts
+    // no Spark job (JobCount drains the listener bus before and after, so
+    // stale events from earlier tests are not counted).
     val index = Seq(("org,example)/doc/1", "example.org/doc/1"))
       .toDF("urlkey", "url")
-    val group = "cdx-lookup-driver-side-pin"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(js.properties)
-          .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "cdxLookup zero-jobs pin")
-    try {
+    val (_, run) = JobCount.during(spark) {
       WarcSource.cdxLookup(index,
         (0 until 4).map(i => s"https://example.org/doc/$i"))
       WarcSource.cdxLookup(index,
         (0 until 40).map(i => s"https://example.org/doc/$i"))
-      spark.sparkContext.parallelize(Seq(1)).count() // sentinel
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.get() == 1,
-        s"expected only the sentinel job in group, saw ${jobs.get()}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    assert(run.jobs == 0, s"cdxLookup construction ran ${run.jobs} jobs")
   }
 
   test("cdxDiff: added/removed/changed/same classification on urlkey") {
