@@ -3,15 +3,18 @@ package graft
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
+import scala.jdk.CollectionConverters._
+
 /** Every scratch dir, write-once spool and `target/` path of the library.
  *
  * A corpus is identified by its content, the way the ingest layer
  * (`GraphStore`'s manifests) has always identified it: the name, size
  * and mtime of each regular file in the corpus dir. A spool derived from
- * a corpus is named `target/<stem>-<tag>`, where the tag also covers the
- * corpus dir's absolute path, so regenerating a corpus in place yields
- * a new spool and two corpora at `.../a/sf0.01` and `.../b/sf0.01`
- * never share one. Outputs land under `target/` of the working
+ * a corpus is named `target/<stem>-<tag>`, where the tag is a path part
+ * (the corpus dir's absolute path) followed by a content part, so two
+ * corpora at `.../a/sf0.01` and `.../b/sf0.01` never share a spool, and
+ * regenerating a corpus in place yields a new spool that replaces the
+ * one of the old content. Outputs land under `target/` of the working
  * directory (the checkout root under sbt's forked runs), so two
  * checkouts never write into each other's tree. */
 object Spool {
@@ -24,27 +27,29 @@ object Spool {
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
+  /** The entries of `dir`; none if it is not a directory. */
+  private def list(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }
+
   /** `name|size|mtime` of each regular file in `dir`, sorted: the
    * identity of a corpus drop, read from one directory listing. */
-  private[graft] def fingerprint(dir: String): Seq[String] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val s = Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
-          s"${p.getFileName}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-        }.toSeq.sorted
-      } finally s.close()
-    }
-  }
+  private[graft] def fingerprint(dir: String): Seq[String] =
+    list(Paths.get(dir)).filter(Files.isRegularFile(_)).map { p =>
+      s"${p.getFileName}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
+    }.sorted
 
-  /** Content tag of a corpus dir: its absolute path plus its fingerprint.
-   * Also the suffix of memory-sink query names built over the corpus. */
+  private val PartHex = 8 // hex digits of each of a tag's two parts
+
+  /** Content tag of a corpus dir: a digest of its absolute path, then a
+   * digest of its fingerprint. Also the suffix of memory-sink query names
+   * built over the corpus. */
   def tag(corpusDir: String): String =
-    md5((Paths.get(corpusDir).toAbsolutePath.normalize.toString +:
-      fingerprint(corpusDir)).mkString("\n")).take(16)
+    md5(Paths.get(corpusDir).toAbsolutePath.normalize.toString).take(PartHex) +
+      md5(fingerprint(corpusDir).mkString("\n")).take(PartHex)
 
   private val locks = new java.util.concurrent.ConcurrentHashMap[Path, AnyRef]()
 
@@ -65,6 +70,7 @@ object Spool {
         try {
           write(tmp.toString)
           Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE)
+          prune(stem, t)
         } catch {
           case _: java.io.IOException if Files.exists(out) => // published by another process
         } finally wipe(tmp)
@@ -76,9 +82,22 @@ object Spool {
   /** Per-call export dir `target/<stem>-<tag>`, deleted before it is
    * returned: for keys whose export IS the operation under test. */
   def fresh(stem: String, corpusDir: String): String = {
-    val out = target(s"$stem-${tag(corpusDir)}")
+    val t = tag(corpusDir)
+    val out = target(s"$stem-$t")
     wipe(Paths.get(out))
+    prune(stem, t)
     out
+  }
+
+  /** Delete the `stem` spools of the same corpus path with another
+   * content part: what a regenerated corpus superseded. Temp siblings
+   * (longer names) are left to the writer that owns them. */
+  private def prune(stem: String, t: String): Unit = {
+    val (keep, pathPart) = (s"$stem-$t", s"$stem-${t.take(PartHex)}")
+    list(Paths.get(target(""))).filter { p =>
+      val n = p.getFileName.toString
+      n.length == keep.length && n.startsWith(pathPart) && n != keep
+    }.foreach(wipe)
   }
 
   /** Delete a scratch file or dir tree, if present. */

@@ -3,11 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Catalyst expressions for the content-hashing hot path (SURVEY.md
@@ -1218,27 +1219,24 @@ object HashExpressions {
    * keys per row; subclass expansions reach tens of thousands of entries,
    * so map literals need the same treatment isin gets from InSet: a hash
    * table built once per executor, referenced from codegen. Returns null
-   * for keys not in the map (and for null keys).
+   * for keys not in the map (and for null keys). A non-string key is cast
+   * to string at analysis, so the table only ever sees a UTF8String.
    */
   case class MapProbe(child: Expression, entries: Map[String, String])
-      extends UnaryExpression {
+      extends UnaryExpression with ImplicitCastInputTypes {
     override def dataType: DataType = StringType
+    override def inputTypes = Seq(StringType)
     override def nullable: Boolean = true
     override def prettyName: String = "map_probe"
 
     // rebuilt once per deserialized instance (per executor), not per row
-    @transient private lazy val table: java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, org.apache.spark.unsafe.types.UTF8String] = {
-      val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, org.apache.spark.unsafe.types.UTF8String](
-        math.max(16, entries.size * 2))
-      entries.foreach { case (k, v) =>
-        m.put(org.apache.spark.unsafe.types.UTF8String.fromString(k),
-          org.apache.spark.unsafe.types.UTF8String.fromString(v))
-      }
+    @transient private lazy val table: java.util.HashMap[UTF8String, UTF8String] = {
+      val m = new java.util.HashMap[UTF8String, UTF8String](math.max(16, entries.size * 2))
+      entries.foreach { case (k, v) => m.put(UTF8String.fromString(k), UTF8String.fromString(v)) }
       m
     }
 
-    def lookup(key: Any): Any =
-      table.get(key.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    def lookup(key: Any): Any = table.get(key.asInstanceOf[UTF8String])
 
     override def nullSafeEval(input: Any): Any = lookup(input)
 
@@ -1264,18 +1262,19 @@ object HashExpressions {
    * 7k-id subclass expansion put ~30k literal nodes in front of the
    * analyzer — seconds of driver time per query. This expression carries
    * the set as ONE object (like InSet's hash set, but shared across all
-   * plan references). Null key -> null, like isin.
+   * plan references). Null key -> null, like isin. A non-string key is
+   * cast to string at analysis, so the set only ever sees a UTF8String.
    */
   case class SetProbe(child: Expression, values: Set[String])
-      extends UnaryExpression {
+      extends UnaryExpression with ImplicitCastInputTypes {
     override def dataType: DataType = BooleanType
+    override def inputTypes = Seq(StringType)
     override def prettyName: String = "set_probe"
 
     // rebuilt once per deserialized instance (per executor), not per row
-    @transient private lazy val table: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
-      val m = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](
-        math.max(16, values.size * 2))
-      values.foreach(v => m.add(org.apache.spark.unsafe.types.UTF8String.fromString(v)))
+    @transient private lazy val table: java.util.HashSet[UTF8String] = {
+      val m = new java.util.HashSet[UTF8String](math.max(16, values.size * 2))
+      values.foreach(v => m.add(UTF8String.fromString(v)))
       m
     }
 

@@ -20,7 +20,7 @@ import graft.operators.TrapiAttributes.AttributeShell
  *   ("edge",   edge_id,            edge JSON)
  *   ("result", in_key--out_key,    result JSON)
  * — each JSON built with `to_json(struct(...))` inside codegen, no driver
- * loop and no shuffle beyond the per-result grouping the semantics demand.
+ * loop, in the one plan shape (`fanOut`) that `slim` shares.
  * A serving layer streams the parts straight into the HTTP response;
  * `envelope` folds them into the reference's single nested document when a
  * client genuinely needs one (a one-row aggregation — the only inherently
@@ -39,13 +39,7 @@ object TrapiResponse {
 
   /** Typed empty list for "attributes must be an empty list if none". */
   private val noAttrs = typedLit(Seq.empty[String])
-
-  /** One TRAPI attribute object as rendered into edge/node JSON. */
-  final case class Attr(attribute_type_id: String, value: String,
-                        value_type_id: Option[String],
-                        attribute_source: Option[String],
-                        value_url: Option[String])
-  private val noAttrObjs = typedLit(Seq.empty[Attr])
+  private val noStr = lit(null).cast("string")
 
   /** One entry of a per-predicate sources template
    * (ref: plover.py:1773-1789 `_load_edge_sources`, :2200-2207 template
@@ -53,14 +47,44 @@ object TrapiResponse {
   final case class TrapiSource(resource_id: String, resource_role: String,
                                upstream_resource_ids: Option[Seq[String]] = None)
 
-  /**
-   * Knowledge-graph edge JSON per distinct answer edge:
-   * (edge_id, json) with subject/object/predicate/sources/attributes
-   * [/qualifiers] keys, attributes sorted by property name.
-   */
-  def edgeParts(matches: DataFrame, shells: Map[String, AttributeShell],
-                kpInforesCurie: String,
-                sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
+  /** Full columnar envelope: one row per part, ("part", "key", "json").
+   * Rides `fanOut`: each match row becomes its node, edge and result rows,
+   * and the one groupBy collects each result group's sorted binding
+   * structs and edge ids. An is_set side collapses to the key "*". */
+  def assemble(res: OneHop.Result, graph: PropertyGraph,
+               shells: Map[String, AttributeShell], kpInforesCurie: String,
+               edgeKey: String = "e1", inputIsSet: Boolean = false,
+               outputIsSet: Boolean = false,
+               nodeAttrColumns: Seq[String] = Seq.empty,
+               sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
+    val noBinding = lit(null).cast("struct<id:string,query_id:string>")
+    def row(part: String, key: Column, json: Column = noStr, in: Column = noBinding,
+            out: Column = noBinding, edge: Column = noStr): Column =
+      tag(part, key, json.as("json"), in.as("in"), out.as("out"), edge.as("edge"))
+    def side(isSet: Boolean, id: String) = if (isSet) lit("*") else col(id)
+    def binding(id: String, qid: String) = struct(col(id).as("id"), col(qid).as("query_id"))
+    fanOut(res.matches, graph, Seq(
+        row("node", col("input_id")),
+        row("node", col("output_id")),
+        row("edge", col("edge_id"), json = edgeJson(shells, kpInforesCurie, sourcesTemplate)),
+        row("result", concat_ws("--", side(inputIsSet, "input_id"), side(outputIsSet, "output_id")),
+          in = binding("input_id", "input_query_id"),
+          out = binding("output_id", "output_query_id"), edge = col("edge_id"))),
+      Seq(max(col("json")).as("json"),
+        array_sort(collect_set(col("in"))).as("in_nodes"),
+        array_sort(collect_set(col("out"))).as("out_nodes"),
+        array_sort(collect_set(col("edge"))).as("edge_ids")),
+      isNode = col("part") === "node", "name" +: "categories" +: nodeAttrColumns)(
+      when(col("is_node"), nodeJson(nodeAttrColumns))
+        .when(col("part") === "result", resultJson(res, kpInforesCurie, edgeKey))
+        .otherwise(col("json")))
+  }
+
+  /** Knowledge-graph edge JSON of a match row: subject/object/predicate/
+   * sources/attributes[/qualifiers] keys, attributes sorted by property
+   * name. */
+  private def edgeJson(shells: Map[String, AttributeShell], kpInforesCurie: String,
+                       sourcesTemplate: Map[String, Seq[TrapiSource]]): Column = {
     // sorted by property name (then by the rendered fields), name dropped
     val attributes = transform(
       array_sort(TrapiAttributes.attributes(shells, kpInforesCurie)),
@@ -80,106 +104,55 @@ object TrapiResponse {
         struct(lit(kpInforesCurie).as("resource_id"),
           lit("aggregator_knowledge_source").as("resource_role"),
           array(col("primary_knowledge_source")).as("upstream_resource_ids")))
-    val qualifiers = filter(array(
-      struct(lit("biolink:qualified_predicate").as("qualifier_type_id"),
-        col("qualified_predicate").as("qualifier_value")),
-      struct(lit("biolink:object_direction_qualifier").as("qualifier_type_id"),
-        col("object_direction").as("qualifier_value")),
-      struct(lit("biolink:object_aspect_qualifier").as("qualifier_type_id"),
-        col("object_aspect").as("qualifier_value"))),
-      q => q.getField("qualifier_value").isNotNull)
+    val qualifiers = filter(array(Seq("qualified_predicate" -> "qualified_predicate",
+        "object_direction_qualifier" -> "object_direction",
+        "object_aspect_qualifier" -> "object_aspect").map { case (t, c) =>
+      struct(lit(s"biolink:$t").as("qualifier_type_id"), col(c).as("qualifier_value"))
+    }: _*), q => q.getField("qualifier_value").isNotNull)
 
-    matches.dropDuplicates("edge_id")
-      .select(col("edge_id").as("key"),
-        to_json(struct(
-          col("subject"), col("object"), col("predicate"),
-          sources.as("sources"),
-          attributes.as("attributes"),
-          when(size(qualifiers) > 0, qualifiers).as("qualifiers"))).as("json"))
+    to_json(struct(
+      col("subject"), col("object"), col("predicate"),
+      sources.as("sources"),
+      attributes.as("attributes"),
+      when(size(qualifiers) > 0, qualifiers).as("qualifiers")))
   }
 
-  /**
-   * Knowledge-graph node JSON per answer node: (node_id, json) with
-   * name/categories/attributes keys. `nodeAttrColumns` names
-   * array<string> node property columns rendered as default attributes
-   * (attribute_type_id = property name, like the reference's un-mapped
-   * fallback plover.py:2256-2262); empty arrays are skipped.
-   */
-  def nodeParts(matches: DataFrame, graph: PropertyGraph,
-                nodeAttrColumns: Seq[String] = Seq.empty): DataFrame = {
-    val ids = matches.select(explode(array(col("input_id"), col("output_id"))).as("id"))
-      .distinct()
+  /** Knowledge-graph node JSON of a joined node row: name/categories/
+   * attributes keys. `nodeAttrColumns` names array<string> node property
+   * columns rendered as default attributes (attribute_type_id = property
+   * name, like the reference's un-mapped fallback plover.py:2256-2262);
+   * empty arrays are skipped. */
+  private def nodeJson(nodeAttrColumns: Seq[String]): Column = {
     val attrObjs: Column =
-      if (nodeAttrColumns.isEmpty) noAttrObjs
+      if (nodeAttrColumns.isEmpty) noAttrs
       else filter(array(nodeAttrColumns.map(c =>
         struct(lit(c).as("attribute_type_id"),
           concat_ws(",", col(c)).as("value"),
-          lit(null).cast("string").as("value_type_id"),
-          lit(null).cast("string").as("attribute_source"),
-          lit(null).cast("string").as("value_url"))): _*),
+          noStr.as("value_type_id"),
+          noStr.as("attribute_source"),
+          noStr.as("value_url"))): _*),
         a => length(a.getField("value")) > 0)
-    graph.nodes.join(ids, Seq("id"), "left_semi")
-      .select(col("id").as("key"),
-        to_json(struct(col("name"),
-          array_sort(col("categories")).as("categories"),
-          attrObjs.as("attributes"))).as("json"))
+    to_json(struct(col("name"),
+      array_sort(col("categories")).as("categories"),
+      attrObjs.as("attributes")))
   }
 
-  /**
-   * TRAPI result JSON per (input, output) binding group:
-   * (in_key--out_key, json). An is_set side collapses to one "*" group;
-   * node bindings are sorted by id and carry query_id when the node was
-   * reached via subclass expansion.
-   */
-  def resultParts(res: OneHop.Result, kpInforesCurie: String,
-                  edgeKey: String = "e1", inputIsSet: Boolean = false,
-                  outputIsSet: Boolean = false): DataFrame = {
-    val inKey = if (inputIsSet) lit("*") else col("input_id")
-    val outKey = if (outputIsSet) lit("*") else col("output_id")
-
+  /** TRAPI result JSON of a binding group: node bindings sorted by id,
+   * carrying query_id when the node was reached via subclass expansion. */
+  private def resultJson(res: OneHop.Result, kpInforesCurie: String,
+                         edgeKey: String): Column = {
     def bindings(sorted: Column): Column = transform(sorted, x =>
       struct(x.getField("id").as("id"), noAttrs.as("attributes"),
         x.getField("query_id").as("query_id")))
-
-    res.matches
-      .withColumn("in_key", inKey).withColumn("out_key", outKey)
-      .groupBy("in_key", "out_key")
-      .agg(
-        array_sort(collect_set(struct(col("input_id").as("id"),
-          col("input_query_id").as("query_id")))).as("in_nodes"),
-        array_sort(collect_set(struct(col("output_id").as("id"),
-          col("output_query_id").as("query_id")))).as("out_nodes"),
-        array_sort(collect_set(col("edge_id"))).as("edge_ids"))
-      .select(
-        concat_ws("--", col("in_key"), col("out_key")).as("key"),
-        to_json(struct(
-          struct(bindings(col("in_nodes")).as(res.inputKey),
-            bindings(col("out_nodes")).as(res.outputKey)).as("node_bindings"),
-          array(struct(
-            struct(transform(col("edge_ids"), e =>
-              struct(e.as("id"), noAttrs.as("attributes"))).as(edgeKey))
-              .as("edge_bindings"),
-            lit(kpInforesCurie).as("resource_id"))).as("analyses"),
-          lit(kpInforesCurie).as("resource_id"))).as("json"))
-  }
-
-  /** Full columnar envelope: one row per part, ("part", "key", "json").
-   * One lazy plan, like `slim`: building it runs no Spark job and
-   * persists nothing. Each part builder reads the matches once, so an
-   * execution runs the one-hop match three times, over the cached graph. */
-  def assemble(res: OneHop.Result, graph: PropertyGraph,
-               shells: Map[String, AttributeShell], kpInforesCurie: String,
-               edgeKey: String = "e1", inputIsSet: Boolean = false,
-               outputIsSet: Boolean = false,
-               nodeAttrColumns: Seq[String] = Seq.empty,
-               sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
-    def tag(part: String, df: DataFrame) =
-      df.select(lit(part).as("part"), col("key"), col("json"))
-    tag("node", nodeParts(res.matches, graph, nodeAttrColumns))
-      .unionAll(tag("edge",
-        edgeParts(res.matches, shells, kpInforesCurie, sourcesTemplate)))
-      .unionAll(tag("result",
-        resultParts(res, kpInforesCurie, edgeKey, inputIsSet, outputIsSet)))
+    to_json(struct(
+      struct(bindings(col("in_nodes")).as(res.inputKey),
+        bindings(col("out_nodes")).as(res.outputKey)).as("node_bindings"),
+      array(struct(
+        struct(transform(col("edge_ids"), e =>
+          struct(e.as("id"), noAttrs.as("attributes"))).as(edgeKey))
+          .as("edge_bindings"),
+        lit(kpInforesCurie).as("resource_id"))).as("analyses"),
+      lit(kpInforesCurie).as("resource_id")))
   }
 
   /**
@@ -198,56 +171,64 @@ object TrapiResponse {
    * empty strings for absent qualifier fields and the literal string
    * "False" mirror the legacy wire shape exactly (the reference comments
    * "silly to have these in strings, but that's the old format").
-   * Columnar like `assemble`, and one lazy plan: building it runs no
-   * Spark job and persists nothing. Each match row fans out once (one
-   * explode) into its six tagged (part, key, query id, edge tuple) rows,
-   * so the one-hop scans run once; ONE groupBy(part, key) dedups every
-   * part and collects the sorted query-id set; ONE inner join to the node
-   * table fills in name and first category. That join BUILDS (broadcasts)
-   * the answer-sized side and streams the node table, which grows with
-   * the corpus and must never be the build side. Its key is (true, id)
-   * for `slim_node:*` rows and (false, "") for every other part, matched
-   * by a one-row sentinel streamed beside the nodes: node parts keep
-   * inner-join semantics (an id missing from the node table gets no
-   * `slim_node` row, though its `ids_node` row stays) and the other parts
-   * pass through.
+   * Rides `fanOut`: each match row becomes its six tagged rows, and the
+   * one groupBy collects each slim node's sorted query-id set.
    */
   def slim(res: OneHop.Result, graph: PropertyGraph,
            edgeKey: String = "e1"): DataFrame = {
-    val noStr = lit(null).cast("string")
-    def tagged(part: String, key: String, qid: Column, json: Column): Column =
-      struct(lit(part).as("part"), col(key).as("key"), qid.as("qid"),
-        json.as("json"))
+    def row(part: String, key: String, qid: Column, json: Column): Column =
+      tag(part, col(key), qid.as("qid"), json.as("json"))
     val edgeTuple = to_json(array(col("subject"), col("object"),
       col("predicate"), col("primary_knowledge_source"),
       coalesce(col("qualified_predicate"), lit("")),
       coalesce(col("object_direction"), lit("")),
       coalesce(col("object_aspect"), lit("")),
       lit("False")))
-    val parts = res.matches.select(explode(array(
-      tagged(s"slim_node:${res.inputKey}", "input_id", col("input_query_id"), noStr),
-      tagged(s"slim_node:${res.outputKey}", "output_id", col("output_query_id"), noStr),
-      tagged(s"slim_edge:$edgeKey", "edge_id", noStr, edgeTuple),
-      tagged(s"ids_node:${res.inputKey}", "input_id", noStr, noStr),
-      tagged(s"ids_node:${res.outputKey}", "output_id", noStr, noStr),
-      tagged(s"ids_edge:$edgeKey", "edge_id", noStr, noStr))).as("t"))
+    fanOut(res.matches, graph, Seq(
+        row(s"slim_node:${res.inputKey}", "input_id", col("input_query_id"), noStr),
+        row(s"slim_node:${res.outputKey}", "output_id", col("output_query_id"), noStr),
+        row(s"slim_edge:$edgeKey", "edge_id", noStr, edgeTuple),
+        row(s"ids_node:${res.inputKey}", "input_id", noStr, noStr),
+        row(s"ids_node:${res.outputKey}", "output_id", noStr, noStr),
+        row(s"ids_edge:$edgeKey", "edge_id", noStr, noStr)),
+      Seq(array_sort(collect_set(col("qid"))).as("query_ids"),
+        max(col("json")).as("json")),
+      isNode = col("part").startsWith("slim_node:"), Seq("name", "categories"))(
+      when(col("is_node"), concat(lit("[\""), col("name"), lit("\",\""),
+        element_at(col("categories"), 1), lit("\","),
+        to_json(col("query_ids")), lit("]"))).otherwise(col("json")))
+  }
+
+  /** One tagged fan-out row: its part, its key, then format fields. */
+  private def tag(part: String, key: Column, fields: Column*): Column =
+    struct(lit(part).as("part") +: key.as("key") +: fields: _*)
+
+  /** The one plan behind both reply formats; building it runs no Spark
+   * job and persists nothing. Each match row explodes once into its
+   * tagged `rows`, so the one-hop scans run once; ONE groupBy(part, key)
+   * dedups every part and computes `aggs`; ONE inner join adds the node
+   * table's `nodeCols` to the `isNode` rows, then `render` makes the json.
+   * The join BUILDS (broadcasts) the answer-sized side and streams the
+   * node table, which grows with the corpus. Its key is (true, id) for
+   * node rows and (false, "") for the rest, matched by a one-row sentinel
+   * with null node columns streamed beside the nodes: an id missing from
+   * the node table gets no node row, and the other parts pass through. */
+  private def fanOut(matches: DataFrame, graph: PropertyGraph, rows: Seq[Column],
+                     aggs: Seq[Column], isNode: Column, nodeCols: Seq[String])(
+                     render: Column): DataFrame = {
+    val parts = matches.select(explode(array(rows: _*)).as("t"))
       .select("t.*")
       .groupBy("part", "key")
-      .agg(array_sort(collect_set(col("qid"))).as("query_ids"),
-        max(col("json")).as("json"))
-    val isNode = col("part").startsWith("slim_node:")
+      .agg(aggs.head, aggs.tail: _*)
     val answer = parts.select(col("*"), isNode.as("is_node"),
       when(isNode, col("key")).otherwise(lit("")).as("node_id"))
-    val nodes = graph.nodes.select(lit(true).as("is_node"),
-        col("id").as("node_id"), col("name"), col("categories"))
+    val nodes = graph.nodes.select(lit(true).as("is_node") +:
+        col("id").as("node_id") +: nodeCols.map(col): _*)
       .unionByName(graph.nodes.sparkSession.range(0, 1, 1, 1).select(
-        lit(false).as("is_node"), lit("").as("node_id"),
-        noStr.as("name"), lit(null).cast("array<string>").as("categories")))
+        lit(false).as("is_node") +: lit("").as("node_id") +:
+          nodeCols.map(c => lit(null).cast(graph.nodes.schema(c).dataType).as(c)): _*))
     broadcast(answer).join(nodes, Seq("is_node", "node_id"))
-      .select(col("part"), col("key"),
-        when(col("is_node"), concat(lit("[\""), col("name"), lit("\",\""),
-          element_at(col("categories"), 1), lit("\","),
-          to_json(col("query_ids")), lit("]"))).otherwise(col("json")).as("json"))
+      .select(col("part"), col("key"), render.as("json"))
   }
 
   /**

@@ -283,4 +283,24 @@ class HashExpressionsSpec extends SparkSpec {
       .select(col("v.n"), col("v.best"), col("v.top")).collect()(0)
     assert(out.getLong(0) == 2L)
   }
+
+  test("set_probe casts a non-string key at analysis, and a string key not at all") {
+    val ids = (0L to 3L).toDF("doc_id")
+    val probed = ids.select(col("doc_id"), HE.setProbe(col("doc_id"), Set("1", "3")))
+    assert(probed.orderBy("doc_id").collect().map(_.getBoolean(1)).toSeq ==
+      Seq(false, true, false, true))
+    val str = Seq("1", "2").toDF("id")
+      .select(HE.setProbe(col("id"), Set("1")), HE.mapProbe(col("id"), Map("1" -> "one")))
+    assert(str.queryExecution.analyzed.expressions.forall(_.collectFirst {
+      case c: org.apache.spark.sql.catalyst.expressions.Cast => c }.isEmpty),
+      s"a string key gained a cast:\n${str.queryExecution.analyzed}")
+  }
+
+  test("map_probe casts a non-string key at analysis instead of failing at run time") {
+    val ids = Seq(Option(1L), Option(2L), None).toDF("doc_id")
+    val probed = ids.select(col("doc_id"),
+      HE.mapProbe(col("doc_id"), Map("1" -> "one")).as("name"))
+    assert(probed.collect().map(r => Option(r.getString(1))).toSeq.sorted ==
+      Seq(None, None, Some("one")))
+  }
 }

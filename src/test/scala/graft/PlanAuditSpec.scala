@@ -551,57 +551,77 @@ class PlanAuditSpec extends SparkSpec {
     assert(parts.count() > 0)
   }
 
-  test("slim response is one lazy pass: no job to build, one scan per replica, node table streamed") {
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-    // The serving shape: the store-backed fixture with its object-clustered
-    // replica, on the serving session. A symmetric predicate keeps both
-    // one-hop directions live, so both edge replicas are scanned.
+  /** The serving shape for the response pins: the store-backed fixture
+   * with its object-clustered replica, on the serving session. A
+   * symmetric predicate keeps both one-hop directions live, so both edge
+   * replicas are scanned. */
+  private def servingAnswer(): (model.PropertyGraph, OneHop.Result) = {
     Fixture.ensureStore(spark, sfDir)
     val sv = Fixture.serving(spark)
     val g = Fixture.graph(sv, sfDir)
-    val res = OneHop.answer(sv, g, ont, QueryGraph.oneHop(
+    (g, OneHop.answer(sv, g, ont, QueryGraph.oneHop(
       QNode("n0", ids = Seq("NAT:1")),
       QNode("n1"),
       QEdge("n0", "n1", predicates = Seq(O.AdjacentTo))),
-      closure = None, expandSubclasses = false)
+      closure = None, expandSubclasses = false))
+  }
 
-    // construction runs no Spark job (nothing persisted, nothing counted)
-    val (slim, run) = JobCount.during(spark)(TrapiResponse.slim(res, g))
-    assert(run.jobs == 0, s"building slim ran Spark jobs ($run)")
-
+  /** A response plan over `g` is one pass over the fixture: every cached
+   * relation in it is a fixture cache (no per-request materialization of
+   * the answer), it scans each edge replica and the node table exactly
+   * once, and its one node join builds (broadcasts) the answer side and
+   * streams the node table. */
+  private def assertOnePass(name: String, df: DataFrame, g: model.PropertyGraph): Unit = {
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     def builder(df: DataFrame) = df.queryExecution.optimizedPlan.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder
     }.getOrElse(fail("fixture frame is not cached"))
     val (nodesB, edgesB, reverseB) = (builder(g.nodes), builder(g.edges), builder(g.reverseEdges))
     assert(!(edgesB eq reverseB), "fixture has no separate edge replica")
 
-    // every cached relation in the plan is a fixture cache: no per-request
-    // materialization of the answer
-    val relations = slim.queryExecution.optimizedPlan.collect {
+    val relations = df.queryExecution.optimizedPlan.collect {
       case r: InMemoryRelation => r.cacheBuilder
     }
     assert(relations.forall(b => Seq(nodesB, edgesB, reverseB).exists(_ eq b)),
-      s"slim caches something beyond the fixture:\n${slim.queryExecution.optimizedPlan}")
+      s"$name caches something beyond the fixture:\n${df.queryExecution.optimizedPlan}")
 
-    // exactly one scan of each edge replica and of the node table
-    val exec = slim.queryExecution.executedPlan
+    val exec = df.queryExecution.executedPlan
     val scans = exec.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
     Seq("edges" -> edgesB, "reverse edges" -> reverseB, "nodes" -> nodesB).foreach {
-      case (name, b) => assert(scans.count(_ eq b) == 1,
-        s"$name scanned ${scans.count(_ eq b)} times:\n$exec")
+      case (table, b) => assert(scans.count(_ eq b) == 1,
+        s"$name: $table scanned ${scans.count(_ eq b)} times:\n$exec")
     }
 
-    // the answer side is the build (broadcast) side; the node table streams
     def scansNodes(p: org.apache.spark.sql.execution.SparkPlan) =
       p.collect { case s: InMemoryTableScanExec => s }.exists(_.relation.cacheBuilder eq nodesB)
     val joins = exec.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.size == 1, s"expected one node-table join:\n$exec")
+    assert(joins.size == 1, s"$name: expected one node-table join:\n$exec")
     val j = joins.head
     val (build, stream) = if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
     assert(!scansNodes(build) && scansNodes(stream),
-      s"node table is on the build side:\n$exec")
+      s"$name: node table is on the build side:\n$exec")
+  }
+
+  test("slim response is one lazy pass: no job to build, one scan per replica, node table streamed") {
+    val (g, res) = servingAnswer()
+    // construction runs no Spark job (nothing persisted, nothing counted)
+    val (slim, run) = JobCount.during(spark)(TrapiResponse.slim(res, g))
+    assert(run.jobs == 0, s"building slim ran Spark jobs ($run)")
+    assertOnePass("slim", slim, g)
+  }
+
+  test("TRAPI envelope is one pass: one scan per replica, one aggregate, node table streamed") {
+    val (g, res) = servingAnswer()
+    val parts = TrapiResponse.assemble(res, g, Map.empty, "infores:graft",
+      nodeAttrColumns = Seq("equiv_ids"))
+    assertOnePass("assemble", parts, g)
+    val aggregates = parts.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+    assert(aggregates.size == 1,
+      s"assemble groups ${aggregates.size} times:\n${parts.queryExecution.optimizedPlan}")
   }
 
   test("warm path is scan-only: stored artifacts load without joins or aggregation") {

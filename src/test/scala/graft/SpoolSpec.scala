@@ -75,6 +75,25 @@ class SpoolSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files(out3) == Seq("part-1", "part-2", "part-3"))
   }
 
+  test("a regenerated corpus's spool replaces the old content's, not another corpus's") {
+    val dir = corpus("prune/a/sf0.01")
+    val other = corpus("prune/b/sf0.01")
+    val runs = new AtomicInteger()
+    val (old, _) = Spool.once(s"$prefix-p", dir)(writer(runs))
+    val (kept, _) = Spool.once(s"$prefix-p", other)(writer(runs))
+    val exported = Spool.fresh(s"$prefix-q", dir)
+    writer(runs)(exported)
+    // rewritten in place: a new size, so a new content tag
+    Files.write(Paths.get(dir, "documents.parquet"), "new rows".getBytes("UTF-8"))
+    val (now, _) = Spool.once(s"$prefix-p", dir)(writer(runs))
+    val fresh = Spool.fresh(s"$prefix-q", dir)
+    assert(now != old && fresh != exported)
+    assert(!Files.exists(Paths.get(old)), "the old content's spool survived")
+    assert(!Files.exists(Paths.get(exported)), "the old content's export survived")
+    assert(files(now) == Seq("part-1", "part-2", "part-3"))
+    assert(files(kept) == Seq("part-1", "part-2", "part-3"))
+  }
+
   test("two corpora whose paths share their digits get different dirs") {
     val a = corpus("a/sf0.01")
     val b = corpus("b/sf0.01")

@@ -2,6 +2,7 @@ package graft
 
 import graft.model.PropertyGraph
 import graft.operators.{OneHop, TrapiAttributes, TrapiResponse}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TRAPI envelope assembly: qualifier rendering, sources, binding shape,
@@ -37,8 +38,12 @@ class TrapiResponseSpec extends SparkSpec {
   private val res = OneHop.Result(matches, "n_in", "n_out")
   private val graph = PropertyGraph(nodes, edges)
 
+  /** `assemble`'s (key, json) rows of one part. */
+  private def part(name: String, parts: DataFrame): DataFrame =
+    parts.where(col("part") === name).select("key", "json")
+
   test("edge JSON: qualifiers only when present, sources chain, default attribute shell") {
-    val parts = TrapiResponse.edgeParts(matches, Map.empty, "infores:graft")
+    val parts = part("edge", TrapiResponse.assemble(res, graph, Map.empty, "infores:graft"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val e1 = parts("E1")
     assert(e1.contains(""""qualifiers":[{"qualifier_type_id":"biolink:qualified_predicate","qualifier_value":"graft:ships"},{"qualifier_type_id":"biolink:object_direction_qualifier","qualifier_value":"graft:returned"}]"""))
@@ -63,7 +68,8 @@ class TrapiResponseSpec extends SparkSpec {
     val withPred = matches.withColumn("predicate",
       when(col("edge_id") === "E1", lit("graft:contains_item"))
         .otherwise(lit("graft:other")))
-    val parts = TrapiResponse.edgeParts(withPred, Map.empty, "infores:graft", tmpl)
+    val parts = part("edge", TrapiResponse.assemble(OneHop.Result(withPred, "n_in", "n_out"),
+        graph, Map.empty, "infores:graft", sourcesTemplate = tmpl))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(parts("E1").contains(
       """"sources":[{"resource_id":"infores:special","resource_role":"primary_knowledge_source"}]"""))
@@ -72,7 +78,7 @@ class TrapiResponseSpec extends SparkSpec {
   }
 
   test("result JSON: query_id on expanded bindings, is_set collapse") {
-    val one = TrapiResponse.resultParts(res, "infores:graft")
+    val one = part("result", TrapiResponse.assemble(res, graph, Map.empty, "infores:graft"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(one.keySet == Set("ORD:1--PART:1"))
     assert(one("ORD:1--PART:1").contains(
@@ -81,8 +87,8 @@ class TrapiResponseSpec extends SparkSpec {
       """"n_out":[{"id":"PART:1","attributes":[]}]"""))
     assert(one("ORD:1--PART:1").contains(
       """"edge_bindings":{"e1":[{"id":"E1","attributes":[]},{"id":"E2","attributes":[]}]"""))
-    val collapsed = TrapiResponse.resultParts(res, "infores:graft",
-      inputIsSet = true, outputIsSet = true).collect()
+    val collapsed = part("result", TrapiResponse.assemble(res, graph, Map.empty,
+      "infores:graft", inputIsSet = true, outputIsSet = true)).collect()
     assert(collapsed.length == 1 && collapsed(0).getString(0) == "*--*")
   }
 
@@ -105,33 +111,41 @@ class TrapiResponseSpec extends SparkSpec {
     assert(rows.size == 8)
   }
 
+  /** Shared, symmetric, expanded, missing and empty answers: one node
+   * table and one match table that `slim` and `assemble` are pinned on. */
+  private lazy val kg = PropertyGraph(Seq(
+    ("ORD:1", "Order#1", Seq("graft:Order"), Seq.empty[String]),
+    ("PART:1", "part one", Seq("graft:Part", "graft:Tradeable"), Seq("SKU:9")),
+    ("NAT:1", "nation one", Seq("graft:Nation", "graft:Place"), Seq("GEO:1", "ISO:N1"))
+  ).toDF("id", "name", "categories", "equiv_ids"), edges)
+  // (edge, subject, object, predicate, input, output, input qid, output qid)
+  private lazy val m = Seq(
+    // S1 is symmetric and matched in both directions, so NAT:1 and
+    // PART:1 are each both an input and an output node
+    ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "NAT:1", "PART:1",
+      Option("REG:0"), Option.empty[String]),
+    ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "PART:1", "NAT:1",
+      Option.empty[String], Option.empty[String]),
+    // NAT:1 reached by subclass expansion of a second query id; ORD:1
+    // reached by expansion on the output side
+    ("E11", "NAT:1", "ORD:1", "graft:located_in", "NAT:1", "ORD:1",
+      Option("REG:1"), Option("ORD:0")),
+    // a repeated query id; GHOST:1 is absent from the node table
+    ("E12", "NAT:1", "GHOST:1", "graft:located_in", "NAT:1", "GHOST:1",
+      Option("REG:0"), Option.empty[String])
+  ).toDF("edge_id", "subject", "object", "predicate", "input_id", "output_id",
+      "input_query_id", "output_query_id")
+    .withColumn("qualified_predicate", lit(null).cast("string"))
+    .withColumn("object_direction", lit(null).cast("string"))
+    .withColumn("object_aspect", lit(null).cast("string"))
+    .withColumn("primary_knowledge_source", lit("infores:x"))
+    .withColumn("attrs", when(col("edge_id") === "E11",
+      typedLit(Map("since" -> "1994"))))
+    .withColumn("num_attrs", typedLit(Map("weight" -> 0.5)))
+    .withColumn("list_attrs", when(col("edge_id") =!= "E12",
+      typedLit(Map("via" -> Seq("a", "b")))))
+
   test("slim: row for row over shared, symmetric, expanded, missing and empty answers") {
-    val kg = PropertyGraph(Seq(
-      ("ORD:1", "Order#1", Seq("graft:Order")),
-      ("PART:1", "part one", Seq("graft:Part", "graft:Tradeable")),
-      ("NAT:1", "nation one", Seq("graft:Nation", "graft:Place"))
-    ).toDF("id", "name", "categories"), edges)
-    // (edge, subject, object, predicate, input, output, input qid, output qid)
-    val m = Seq(
-      // S1 is symmetric and matched in both directions, so NAT:1 and
-      // PART:1 are each both an input and an output node
-      ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "NAT:1", "PART:1",
-        Option("REG:0"), Option.empty[String]),
-      ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "PART:1", "NAT:1",
-        Option.empty[String], Option.empty[String]),
-      // NAT:1 reached by subclass expansion of a second query id; ORD:1
-      // reached by expansion on the output side
-      ("E11", "NAT:1", "ORD:1", "graft:located_in", "NAT:1", "ORD:1",
-        Option("REG:1"), Option("ORD:0")),
-      // a repeated query id; GHOST:1 is absent from the node table
-      ("E12", "NAT:1", "GHOST:1", "graft:located_in", "NAT:1", "GHOST:1",
-        Option("REG:0"), Option.empty[String])
-    ).toDF("edge_id", "subject", "object", "predicate", "input_id", "output_id",
-        "input_query_id", "output_query_id")
-      .withColumn("qualified_predicate", lit(null).cast("string"))
-      .withColumn("object_direction", lit(null).cast("string"))
-      .withColumn("object_aspect", lit(null).cast("string"))
-      .withColumn("primary_knowledge_source", lit("infores:x"))
     def rows(r: OneHop.Result) = TrapiResponse.slim(r, kg).collect()
       .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSeq.sorted
     def edge(s: String, o: String, p: String) =
@@ -156,6 +170,61 @@ class TrapiResponseSpec extends SparkSpec {
       ("slim_node:n_out", "PART:1", Some("""["part one","graft:Part",[]]"""))))
     // an empty answer renders no rows at all
     assert(rows(OneHop.Result(m.where(lit(false)), "n_in", "n_out")).isEmpty)
+  }
+
+  test("assemble: row for row over shared, symmetric, expanded, missing and empty answers") {
+    val shells = Map("since" -> TrapiAttributes.AttributeShell("biolink:since",
+      Some("xsd:string"), Some("{primary_knowledge_source}"), Some("http://x/{value}")))
+    def rows(r: OneHop.Result, inSet: Boolean, outSet: Boolean) =
+      TrapiResponse.assemble(r, kg, shells, "infores:graft", edgeKey = "e9",
+        inputIsSet = inSet, outputIsSet = outSet,
+        nodeAttrColumns = Seq("equiv_ids")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+    val src = """"sources":[{"resource_id":"infores:x","resource_role":"primary_knowledge_source"},""" +
+      """{"resource_id":"infores:graft","resource_role":"aggregator_knowledge_source","upstream_resource_ids":["infores:x"]}]"""
+    val weight = """{"attribute_type_id":"weight","value":"0.5"}"""
+    val via = """{"attribute_type_id":"via","value":"a,b"}"""
+    def edge(s: String, o: String, p: String, attrs: String*) =
+      s"""{"subject":"$s","object":"$o","predicate":"$p",$src,"attributes":[${attrs.mkString(",")}]}"""
+    def bind(id: String, qid: String = null) =
+      s"""{"id":"$id","attributes":[]""" + Option(qid).fold("")(q => s""","query_id":"$q"""") + "}"
+    def result(in: Seq[String], out: Seq[String], edgeIds: String*) =
+      s"""{"node_bindings":{"n_in":[${in.mkString(",")}],"n_out":[${out.mkString(",")}]},""" +
+        s""""analyses":[{"edge_bindings":{"e9":[${edgeIds.map(bind(_)).mkString(",")}]},""" +
+        """"resource_id":"infores:graft"}],"resource_id":"infores:graft"}"""
+    val kgParts = Seq(
+      ("edge", "E11", edge("NAT:1", "ORD:1", "graft:located_in",
+        """{"attribute_type_id":"biolink:since","value":"1994","value_type_id":"xsd:string",""" +
+          """"attribute_source":"infores:x","value_url":"http://x/1994"}""", via, weight)),
+      ("edge", "E12", edge("NAT:1", "GHOST:1", "graft:located_in", weight)),
+      ("edge", "S1", edge("NAT:1", "PART:1", "graft:adjacent_to", via, weight)),
+      // sorted categories, equiv_ids as an attribute, none when empty;
+      // GHOST:1 is absent from the node table and gets no node part
+      ("node", "NAT:1", """{"name":"nation one","categories":["graft:Nation","graft:Place"],""" +
+        """"attributes":[{"attribute_type_id":"equiv_ids","value":"GEO:1,ISO:N1"}]}"""),
+      ("node", "ORD:1", """{"name":"Order#1","categories":["graft:Order"],"attributes":[]}"""),
+      ("node", "PART:1", """{"name":"part one","categories":["graft:Part","graft:Tradeable"],""" +
+        """"attributes":[{"attribute_type_id":"equiv_ids","value":"SKU:9"}]}"""))
+    val res = OneHop.Result(m, "n_in", "n_out")
+    assert(rows(res, false, false) == kgParts ++ Seq(
+      ("result", "NAT:1--GHOST:1", result(Seq(bind("NAT:1", "REG:0")), Seq(bind("GHOST:1")), "E12")),
+      ("result", "NAT:1--ORD:1",
+        result(Seq(bind("NAT:1", "REG:1")), Seq(bind("ORD:1", "ORD:0")), "E11")),
+      ("result", "NAT:1--PART:1", result(Seq(bind("NAT:1", "REG:0")), Seq(bind("PART:1")), "S1")),
+      ("result", "PART:1--NAT:1", result(Seq(bind("PART:1")), Seq(bind("NAT:1")), "S1"))))
+    // is_set on both sides: one "*--*" group holding every binding
+    assert(rows(res, true, true) == kgParts :+ (("result", "*--*", result(
+      Seq(bind("NAT:1", "REG:0"), bind("NAT:1", "REG:1"), bind("PART:1")),
+      Seq(bind("GHOST:1"), bind("NAT:1"), bind("ORD:1", "ORD:0"), bind("PART:1")),
+      "E11", "E12", "S1"))))
+    // without nodeAttrColumns every node renders an empty attribute list
+    assert(part("node", TrapiResponse.assemble(res, kg, shells, "infores:graft"))
+      .select("json").as[String].collect().sorted.toSeq == Seq(
+      """{"name":"Order#1","categories":["graft:Order"],"attributes":[]}""",
+      """{"name":"nation one","categories":["graft:Nation","graft:Place"],"attributes":[]}""",
+      """{"name":"part one","categories":["graft:Part","graft:Tradeable"],"attributes":[]}"""))
+    // an empty answer renders no rows at all
+    assert(rows(OneHop.Result(m.where(lit(false)), "n_in", "n_out"), false, false).isEmpty)
   }
 
   test("envelope folds parts into one valid reference-shaped document") {
