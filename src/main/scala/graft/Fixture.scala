@@ -64,7 +64,7 @@ object Fixture {
     // keys (see GraphStore.table's scaladoc).
     val nodes = GraphStore.table(spark, sfDir, "nodes", clusterBy = Seq("id"))(built.nodes)
     val edges = GraphStore.table(spark, sfDir, "edges", clusterBy = Seq("subject"))(built.edges)
-    // the endpoint-category dimension persisted inside the build is dead
+    // the endpoint dimension persisted inside the build is dead
     // once the denormalized table is on disk
     PropertyGraph.unpersistBuildCaches()
     (nodes, edges)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
@@ -24,7 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
  *    of the planned frame, each with the jobs, stages and tasks it ran;
  *  - every streaming micro-batch's durationMs breakdown and summed state
  *    commit time, which only streaming keys produce;
- *  - with plansDir, each key's formatted physical plan as <key>.txt.
+ *  - with plansDir, each key's formatted physical plan, every expression
+ *    list in full, as <key>.txt.
  */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -94,9 +96,12 @@ object Profile {
           val (eSec, rows, eRun) = counted(df.count())
           println(f"  exec$i  $eSec%8.3f s ($eRun) rows=$rows")
         }
+        // no spark.sql.debug.maxToStringFields cap: a diff sees every field
         plansDir.foreach { d =>
-          Files.write(d.resolve(s"$name.txt"),
-            df.queryExecution.explainString(FormattedMode).getBytes("UTF-8"))
+          val uncapped = SQLConf.get.clone()
+          uncapped.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+          Files.write(d.resolve(s"$name.txt"), SQLConf.withExistingConf(uncapped)(
+            df.queryExecution.explainString(FormattedMode)).getBytes("UTF-8"))
         }
       } catch { case e: Throwable =>
         println(s"  ERROR ${Option(e.getMessage).getOrElse(e.toString).take(200)}")

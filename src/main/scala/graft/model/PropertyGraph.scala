@@ -29,6 +29,14 @@ import org.apache.spark.sql.DataFrame
  *   attrs                    map<string,string>  scalar string attributes
  *   num_attrs                map<string,double>  scalar numeric attributes
  *   list_attrs               map<string,array<string>> list attributes
+ *
+ * Denormalized endpoint columns (GraphBuilder.denormalizeEndpoints; one
+ * set per endpoint <e> = subject, object — the endpoint's node row, so
+ * category filters and TRAPI replies never join the node table):
+ *   <e>_categories           array<string> (null when the node has none
+ *                            or is absent from the node table)
+ *   <e>_name                 string (nullable, likewise)
+ *   <e>_known                boolean — the endpoint is in the node table
  */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
                                edgesByObject: Option[DataFrame] = None) {
@@ -56,13 +64,12 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
 }
 
 object PropertyGraph {
-  val NodeCols: Seq[String] = Seq("id", "name", "categories")
   val EdgeCols: Seq[String] = Seq(
     "edge_id", "subject", "object", "predicate", "qualified_predicate",
     "object_direction", "object_aspect", "primary_knowledge_source",
     "attrs", "num_attrs", "list_attrs")
 
-  // Build-stage side caches (e.g. the endpoint-category dimension the
+  // Build-stage side caches (e.g. the endpoint dimension the
   // builder persists for its two joins). They are keyed by plan, so
   // rebuilding from the same sources reuses one entry — but a long-lived
   // session cycling DIFFERENT graphs accumulates one InMemoryRelation per

@@ -147,31 +147,17 @@ object GraphOps {
    * columns), not the full edge payload.
    */
   def metaSummary(graph: PropertyGraph): DataFrame = {
-    val narrow = graph.edges
-      .select((Seq(col("edge_id"), col("subject"), col("object"), col("predicate"),
+    // build-time denormalized endpoint categories: no join at all — just
+    // two nested explodes of small arrays
+    graph.edges
+      .select(col("edge_id"), col("subject"), col("object"), col("predicate"),
         col("qualified_predicate"), col("object_direction"), col("object_aspect"),
         array_union(map_keys(col("attrs")),
           array_union(map_keys(col("num_attrs")), map_keys(col("list_attrs"))))
-          .as("attr_names")) ++
-        (if (graph.edges.columns.contains("subject_categories"))
-          Seq(col("subject_categories"), col("object_categories"))
-        else Seq.empty)): _*)
-    // Use build-time denormalized endpoint categories when present (no
-    // join at all — just two nested explodes of small arrays); fall back
-    // to joining the node table otherwise.
-    val exploded =
-      if (graph.edges.columns.contains("subject_categories"))
-        narrow
-          .withColumn("subject_category", explode(col("subject_categories")))
-          .withColumn("object_category", explode(col("object_categories")))
-      else {
-        val subjCats = graph.nodes.select(col("id").as("subject"),
-          explode(col("categories")).as("subject_category"))
-        val objCats = graph.nodes.select(col("id").as("object"),
-          explode(col("categories")).as("object_category"))
-        narrow.join(subjCats, Seq("subject")).join(objCats, Seq("object"))
-      }
-    exploded
+          .as("attr_names"),
+        col("subject_categories"), col("object_categories"))
+      .withColumn("subject_category", explode(col("subject_categories")))
+      .withColumn("object_category", explode(col("object_categories")))
       .groupBy("subject_category", "predicate", "object_category")
       .agg(
         array_sort(array_distinct(flatten(collect_list(col("attr_names")))))

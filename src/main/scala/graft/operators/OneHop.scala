@@ -87,6 +87,14 @@ object OneHop {
   final case class Result(matches: DataFrame, inputKey: String, outputKey: String,
                           guardCount: Option[Long] = None)
 
+  /** Denormalized column `<e>_<field>` of the node in match column `id`
+   * (input_id/output_id): the subject's when `id` is the subject, else the
+   * object's (a self-loop's two coincide). A pure column of the matched
+   * edge — no node join, nothing to broadcast, no second table. */
+  private[operators] def endpoint(id: String, field: String): Column =
+    when(col(id) === col("subject"), col(s"subject_$field"))
+      .otherwise(col(s"object_$field"))
+
   /** A pinned id set resolved driver-side: expanded ids + the
    * descendant -> query-id map (empty when no subclass expansion). */
   private final case class LocalIds(ids: Seq[String], queryIds: Map[String, String])
@@ -227,28 +235,8 @@ object OneHop {
         if (outputQ.categories.isEmpty) withNull
         else {
           val cats = expandCategories(outputQ.categories, ont)
-          val catsLit = lit(cats.toArray)
-          if (edges.columns.contains("object_categories")) {
-            // Build-time denormalized endpoint categories: the output-side
-            // category filter is a pure column predicate on the matched
-            // edges themselves — no node join, nothing to broadcast, and at
-            // 100 TB no second table is touched. (output_id equals `object`
-            // on the forward branch and `subject` on the backward one; for
-            // self-loops both arrays coincide, so the comparison is safe.)
-            withNull.where(arrays_overlap(
-              when(col("output_id") === col("object"), col("object_categories"))
-                .otherwise(col("subject_categories")), catsLit))
-          } else {
-            // Fallback for graphs built without denormalization: the
-            // category-filtered node list is bounded by the node dimension,
-            // so force the broadcast rather than leaving AQE to guess (an
-            // unforced plan shuffled both union branches — the r2 g07
-            // regression).
-            val catNodes = graph.nodes
-              .where(arrays_overlap(col("categories"), catsLit))
-              .select(col("id").as("output_id"))
-            withNull.join(broadcast(catNodes), Seq("output_id"), "left_semi")
-          }
+          withNull.where(arrays_overlap(endpoint("output_id", "categories"),
+            lit(cats.toArray)))
         }
       }
 
@@ -595,21 +583,7 @@ object OneHop {
       val tagHasCats = HE.setProbe(col("tag"), catTags)
       def catHit(cats: Column): Column =
         exists(cats, c => HE.setProbe(concat_ws(SEP, col("tag"), c), catPairSet))
-      matched =
-        if (matched.columns.contains("object_categories"))
-          // denormalized endpoint categories: pure column predicate
-          matched.where(!tagHasCats || catHit(
-            when(col("output_id") === col("object"), col("object_categories"))
-              .otherwise(col("subject_categories"))))
-        else {
-          // fallback for graphs without denormalization: one broadcast of
-          // the node dimension's (id, categories) — still one job
-          val nodeCats = graph.nodes
-            .select(col("id").as("output_id"), col("categories").as("__out_cats"))
-          matched.join(broadcast(nodeCats), Seq("output_id"), "left")
-            .where(!tagHasCats || catHit(col("__out_cats")))
-            .drop("__out_cats")
-        }
+      matched = matched.where(!tagHasCats || catHit(endpoint("output_id", "categories")))
     }
     locally {
       val gates = attrGates.result()

@@ -50,7 +50,8 @@ object TrapiResponse {
   /** Full columnar envelope: one row per part, ("part", "key", "json").
    * Rides `fanOut`: each match row becomes its node, edge and result rows,
    * and the one groupBy collects each result group's sorted binding
-   * structs and edge ids. An is_set side collapses to the key "*". */
+   * structs and edge ids; only `nodeAttrColumns` read the node table.
+   * An is_set side collapses to the key "*". */
   def assemble(res: OneHop.Result, graph: PropertyGraph,
                shells: Map[String, AttributeShell], kpInforesCurie: String,
                edgeKey: String = "e1", inputIsSet: Boolean = false,
@@ -58,26 +59,32 @@ object TrapiResponse {
                nodeAttrColumns: Seq[String] = Seq.empty,
                sourcesTemplate: Map[String, Seq[TrapiSource]] = Map.empty): DataFrame = {
     val noBinding = lit(null).cast("struct<id:string,query_id:string>")
+    val noNode = lit(null).cast("struct<name:string,categories:array<string>>")
     def row(part: String, key: Column, json: Column = noStr, in: Column = noBinding,
-            out: Column = noBinding, edge: Column = noStr): Column =
-      tag(part, key, json.as("json"), in.as("in"), out.as("out"), edge.as("edge"))
+            out: Column = noBinding, edge: Column = noStr, node: Column = noNode): Column =
+      tag(part, key, json.as("json"), in.as("in"), out.as("out"), edge.as("edge"),
+        node.as("node"))
+    def nodeRow(id: String) = known(id, row("node", col(id), node = struct(
+      OneHop.endpoint(id, "name").as("name"),
+      OneHop.endpoint(id, "categories").as("categories"))))
     def side(isSet: Boolean, id: String) = if (isSet) lit("*") else col(id)
     def binding(id: String, qid: String) = struct(col(id).as("id"), col(qid).as("query_id"))
-    fanOut(res.matches, graph, Seq(
-        row("node", col("input_id")),
-        row("node", col("output_id")),
+    val parts = fanOut(res.matches, Seq(
+        nodeRow("input_id"),
+        nodeRow("output_id"),
         row("edge", col("edge_id"), json = edgeJson(shells, kpInforesCurie, sourcesTemplate)),
         row("result", concat_ws("--", side(inputIsSet, "input_id"), side(outputIsSet, "output_id")),
           in = binding("input_id", "input_query_id"),
           out = binding("output_id", "output_query_id"), edge = col("edge_id"))),
       Seq(max(col("json")).as("json"),
+        max(col("node")).as("node"),
         array_sort(collect_set(col("in"))).as("in_nodes"),
         array_sort(collect_set(col("out"))).as("out_nodes"),
-        array_sort(collect_set(col("edge"))).as("edge_ids")),
-      isNode = col("part") === "node", "name" +: "categories" +: nodeAttrColumns)(
-      when(col("is_node"), nodeJson(nodeAttrColumns))
+        array_sort(collect_set(col("edge"))).as("edge_ids")))
+    withNodeAttrs(parts, graph, nodeAttrColumns).select(col("part"), col("key"),
+      when(col("part") === "node", nodeJson(nodeAttrColumns))
         .when(col("part") === "result", resultJson(res, kpInforesCurie, edgeKey))
-        .otherwise(col("json")))
+        .otherwise(col("json")).as("json"))
   }
 
   /** Knowledge-graph edge JSON of a match row: subject/object/predicate/
@@ -117,7 +124,7 @@ object TrapiResponse {
       when(size(qualifiers) > 0, qualifiers).as("qualifiers")))
   }
 
-  /** Knowledge-graph node JSON of a joined node row: name/categories/
+  /** Knowledge-graph node JSON of a node row: name/categories/
    * attributes keys. `nodeAttrColumns` names array<string> node property
    * columns rendered as default attributes (attribute_type_id = property
    * name, like the reference's un-mapped fallback plover.py:2256-2262);
@@ -132,8 +139,8 @@ object TrapiResponse {
           noStr.as("attribute_source"),
           noStr.as("value_url"))): _*),
         a => length(a.getField("value")) > 0)
-    to_json(struct(col("name"),
-      array_sort(col("categories")).as("categories"),
+    to_json(struct(col("node.name").as("name"),
+      array_sort(col("node.categories")).as("categories"),
       attrObjs.as("attributes")))
   }
 
@@ -172,64 +179,79 @@ object TrapiResponse {
    * "False" mirror the legacy wire shape exactly (the reference comments
    * "silly to have these in strings, but that's the old format").
    * Rides `fanOut`: each match row becomes its six tagged rows, and the
-   * one groupBy collects each slim node's sorted query-id set.
+   * one groupBy collects each slim node's sorted query-id set. No join:
+   * collecting the reply runs one Spark job.
    */
   def slim(res: OneHop.Result, graph: PropertyGraph,
            edgeKey: String = "e1"): DataFrame = {
     def row(part: String, key: String, qid: Column, json: Column): Column =
       tag(part, col(key), qid.as("qid"), json.as("json"))
+    // the node tuple up to its query ids, which close it after the groupBy
+    def nodeRow(qnode: String, id: String, qid: String) =
+      known(id, row(s"slim_node:$qnode", id, col(qid), concat(lit("[\""),
+        OneHop.endpoint(id, "name"), lit("\",\""),
+        element_at(OneHop.endpoint(id, "categories"), 1),
+        lit("\","))))
     val edgeTuple = to_json(array(col("subject"), col("object"),
       col("predicate"), col("primary_knowledge_source"),
       coalesce(col("qualified_predicate"), lit("")),
       coalesce(col("object_direction"), lit("")),
       coalesce(col("object_aspect"), lit("")),
       lit("False")))
-    fanOut(res.matches, graph, Seq(
-        row(s"slim_node:${res.inputKey}", "input_id", col("input_query_id"), noStr),
-        row(s"slim_node:${res.outputKey}", "output_id", col("output_query_id"), noStr),
+    fanOut(res.matches, Seq(
+        nodeRow(res.inputKey, "input_id", "input_query_id"),
+        nodeRow(res.outputKey, "output_id", "output_query_id"),
         row(s"slim_edge:$edgeKey", "edge_id", noStr, edgeTuple),
         row(s"ids_node:${res.inputKey}", "input_id", noStr, noStr),
         row(s"ids_node:${res.outputKey}", "output_id", noStr, noStr),
         row(s"ids_edge:$edgeKey", "edge_id", noStr, noStr)),
       Seq(array_sort(collect_set(col("qid"))).as("query_ids"),
-        max(col("json")).as("json")),
-      isNode = col("part").startsWith("slim_node:"), Seq("name", "categories"))(
-      when(col("is_node"), concat(lit("[\""), col("name"), lit("\",\""),
-        element_at(col("categories"), 1), lit("\","),
-        to_json(col("query_ids")), lit("]"))).otherwise(col("json")))
+        max(col("json")).as("json")))
+      .select(col("part"), col("key"), when(col("part").startsWith("slim_node:"),
+        concat(col("json"), to_json(col("query_ids")), lit("]")))
+        .otherwise(col("json")).as("json"))
   }
 
   /** One tagged fan-out row: its part, its key, then format fields. */
   private def tag(part: String, key: Column, fields: Column*): Column =
     struct(lit(part).as("part") +: key.as("key") +: fields: _*)
 
+  /** `row`, or null (dropped by `fanOut`) for a node not in the node table. */
+  private def known(id: String, row: Column): Column =
+    when(OneHop.endpoint(id, "known"), row)
+
   /** The one plan behind both reply formats; building it runs no Spark
    * job and persists nothing. Each match row explodes once into its
-   * tagged `rows`, so the one-hop scans run once; ONE groupBy(part, key)
-   * dedups every part and computes `aggs`; ONE inner join adds the node
-   * table's `nodeCols` to the `isNode` rows, then `render` makes the json.
-   * The join BUILDS (broadcasts) the answer-sized side and streams the
-   * node table, which grows with the corpus. Its key is (true, id) for
-   * node rows and (false, "") for the rest, matched by a one-row sentinel
-   * with null node columns streamed beside the nodes: an id missing from
-   * the node table gets no node row, and the other parts pass through. */
-  private def fanOut(matches: DataFrame, graph: PropertyGraph, rows: Seq[Column],
-                     aggs: Seq[Column], isNode: Column, nodeCols: Seq[String])(
-                     render: Column): DataFrame = {
-    val parts = matches.select(explode(array(rows: _*)).as("t"))
+   * tagged `rows`, so the one-hop scans run once; null rows are dropped
+   * and ONE groupBy(part, key) dedups every part and computes `aggs`.
+   * Node rows read their node from the matched edge, so there is no
+   * join, no broadcast and no node-table scan: one Spark job. */
+  private def fanOut(matches: DataFrame, rows: Seq[Column], aggs: Seq[Column]): DataFrame =
+    matches.select(explode(array(rows: _*)).as("t"))
+      .where(col("t").isNotNull)
       .select("t.*")
       .groupBy("part", "key")
       .agg(aggs.head, aggs.tail: _*)
-    val answer = parts.select(col("*"), isNode.as("is_node"),
-      when(isNode, col("key")).otherwise(lit("")).as("node_id"))
-    val nodes = graph.nodes.select(lit(true).as("is_node") +:
-        col("id").as("node_id") +: nodeCols.map(col): _*)
-      .unionByName(graph.nodes.sparkSession.range(0, 1, 1, 1).select(
-        lit(false).as("is_node") +: lit("").as("node_id") +:
-          nodeCols.map(c => lit(null).cast(graph.nodes.schema(c).dataType).as(c)): _*))
-    broadcast(answer).join(nodes, Seq("is_node", "node_id"))
-      .select(col("part"), col("key"), render.as("json"))
-  }
+
+  /** `parts` with the node table's `attrCols` on every node row: the one
+   * node join, made only for node attributes. It BUILDS (broadcasts) the
+   * answer side and streams the node table, keyed (true, id) for node
+   * rows and (false, "") for the rest, which a one-row sentinel with null
+   * attribute columns streamed beside the nodes matches. */
+  private def withNodeAttrs(parts: DataFrame, graph: PropertyGraph,
+                            attrCols: Seq[String]): DataFrame =
+    if (attrCols.isEmpty) parts
+    else {
+      val isNode = col("part") === "node"
+      val answer = parts.select(col("*"), isNode.as("is_node"),
+        when(isNode, col("key")).otherwise(lit("")).as("node_id"))
+      val nodes = graph.nodes.select(lit(true).as("is_node") +:
+          col("id").as("node_id") +: attrCols.map(col): _*)
+        .unionByName(graph.nodes.sparkSession.range(0, 1, 1, 1).select(
+          lit(false).as("is_node") +: lit("").as("node_id") +:
+            attrCols.map(c => lit(null).cast(graph.nodes.schema(c).dataType).as(c)): _*))
+      broadcast(answer).join(nodes, Seq("is_node", "node_id"))
+    }
 
   /**
    * Fold the columnar parts into the reference's single nested document

@@ -173,50 +173,50 @@ object GraphBuilder {
   }
 
   /**
-   * Denormalize endpoint categories onto the edge table
-   * (subject_categories / object_categories array columns). Build-time
-   * cost: two id-keyed joins — co-partitioned with the edge layout at
-   * scale. Query-time payoff: the meta-KG / test-triple aggregation and
-   * any category-filtered scan never join the node table again.
+   * Denormalize each endpoint's node onto the edge table: for <e> in
+   * subject/object, `<e>_categories`, `<e>_name` and `<e>_known` (the
+   * endpoint is in the node table; its categories or name may be null).
+   * Build-time cost: two id-keyed joins — co-partitioned with the edge
+   * layout at scale. Query-time payoff: the meta summary, category
+   * filters and TRAPI replies read endpoint data off the matched edge and
+   * never join the node table, so a slim lookup is one Spark job.
    *
-   * The narrow (id, categories) dimension feeds BOTH endpoint joins, so
-   * it is materialized once with stats (persist + count). Without it the
+   * The narrow (id, name, categories) dimension feeds BOTH joins, so it
+   * is materialized once with stats (persist + count). Without it the
    * planner estimates the dimension from the raw node sources — the full
    * wide row, pre-pruning — and falls back to two sort-merge joins over
    * the whole edge table; that was most of the measured ~21 s sf0.1
    * graph-build warm-up. With accurate (small) stats both joins
    * broadcast at fixture scale, and a dimension that genuinely outgrows
-   * the threshold at 100 TB degrades to the co-partitioned shuffle join
-   * this comment started with. The cached dimension is a few bytes per
-   * node and lives with the graph cache built on top of it.
+   * the threshold at 100 TB degrades to the co-partitioned shuffle join.
    *
    * Cache lifetime: the persist is keyed by the node frame's plan, so
    * REBUILDING from the same sources reuses one entry, but each build
-   * from distinct sources leaves its own InMemoryRelation behind (same
-   * caveat as SelfJoinMaterialize). Long-lived sessions cycling many
-   * graphs should drop it via PropertyGraph.unpersistBuildCaches() when
-   * done with the graph.
+   * from distinct sources leaves its own InMemoryRelation behind.
+   * Long-lived sessions cycling many graphs should drop it via
+   * PropertyGraph.unpersistBuildCaches() when done with the graph.
    */
-  def denormalizeEndpointCategories(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val dim = nodes.select(col("id"), col("categories"))
+  def denormalizeEndpoints(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val dim = nodes.select(col("id"), col("name"), col("categories"))
     if (dim.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
       dim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.model.PropertyGraph.registerBuildCache(dim)
     }
     dim.count()
+    def endpoint(e: String) = dim.select(col("id").as(e), col("name").as(s"${e}_name"),
+      col("categories").as(s"${e}_categories"), lit(true).as(s"${e}_known"))
     edges
-      .join(dim.select(col("id").as("subject"),
-        col("categories").as("subject_categories")), Seq("subject"), "left")
-      .join(dim.select(col("id").as("object"),
-        col("categories").as("object_categories")), Seq("object"), "left")
-      .select((edges.columns.map(col) ++
-        Seq(col("subject_categories"), col("object_categories"))): _*)
+      .join(endpoint("subject"), Seq("subject"), "left")
+      .join(endpoint("object"), Seq("object"), "left")
+      .select(edges.columns.map(col) ++ Seq("subject", "object").flatMap(e => Seq(
+        col(s"${e}_categories"), col(s"${e}_name"),
+        coalesce(col(s"${e}_known"), lit(false)).as(s"${e}_known"))): _*)
   }
 
   /** Full build: raw frames -> canonical PropertyGraph. */
   def build(rawNodes: DataFrame, rawEdges: DataFrame, ont: Ontology): PropertyGraph = {
     val nodes = pruneToMostSpecific(rawNodes, ont)
     val edges = pruneEmptyAttrs(canonicalizeEdges(rawEdges, ont))
-    PropertyGraph(nodes, denormalizeEndpointCategories(edges, nodes))
+    PropertyGraph(nodes, denormalizeEndpoints(edges, nodes))
   }
 }

@@ -38,9 +38,9 @@ import graft.operators.SubclassClosure
  *    broadcast anti-join prunes to the row groups holding touched keys,
  *    so the pass is O(scan of affected partitions), never a shuffle of
  *    the corpus.
- *  - Denormalized endpoint categories refresh PARTITION-WISE: only edges
- *    whose endpoint is an upserted node (its categories may have
- *    changed) re-join the node dimension; every other surviving edge
+ *  - Denormalized endpoint columns refresh PARTITION-WISE: only edges
+ *    whose endpoint is an upserted node (its name or categories may
+ *    have changed) re-join the node dimension; every other surviving edge
  *    keeps its stored denorm columns verbatim. Upserted edges
  *    denormalize against the post-delta nodes.
  *  - The subclass CLOSURE recomputes ONLY when the delta touches a
@@ -112,7 +112,7 @@ object GraphDelta {
       .unionByName(incoming, allowMissingColumns = true)
   }
 
-  /** Post-delta EDGE table with denormalized endpoint categories
+  /** Post-delta EDGE table with denormalized endpoint columns
    * refreshed partition-wise (see object doc). `newNodes` must be the
    * [[applyNodes]] result. */
   def applyEdges(base: PropertyGraph, delta: KgxDelta, ont: Ontology,
@@ -127,8 +127,8 @@ object GraphDelta {
       .join(broadcast(deadNodes.withColumnRenamed("id", "object")),
         Seq("object"), "left_anti")
       .select(base.edges.columns.map(col): _*) // restore column order
-    // denorm refresh is needed only where an endpoint's categories may
-    // have changed — i.e. the upserted node ids. TWO broadcast HASH
+    // denorm refresh is needed only where an endpoint's name or
+    // categories may have changed — i.e. the upserted node ids. TWO broadcast HASH
     // left-joins stamp per-endpoint marker columns in one pass; the
     // touched/untouched split is then a cheap filter on the markers.
     // (The first cut used one nested-loop semi/anti pair on the OR of
@@ -153,7 +153,7 @@ object GraphDelta {
     val plain = PropertyGraph.EdgeCols.map(col)
     val incoming = GraphBuilder.pruneEmptyAttrs(
       GraphBuilder.canonicalizeEdges(delta.edgeUpserts, ont))
-    val redenorm = GraphBuilder.denormalizeEndpointCategories(
+    val redenorm = GraphBuilder.denormalizeEndpoints(
       touched.select(plain: _*)
         .unionByName(incoming, allowMissingColumns = true)
         .select(plain: _*),

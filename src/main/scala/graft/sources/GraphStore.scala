@@ -36,7 +36,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraphStore {
 
   /** Bump to invalidate all stored tables when build semantics change. */
-  private val FormatVersion = 2
+  private val FormatVersion = 3
 
   @volatile private var buildNanosAcc = 0L
 
@@ -124,9 +124,10 @@ object GraphStore {
         // output and erase the zone-map clustering the write just paid
         // for; range-partition + local sort preserves it through the
         // coalescing (the big-store branch above keeps file order, which
-        // the sorted write already clustered).
+        // the sorted write already clustered). One partition needs no shuffle.
         val cols = clusterBy.map(org.apache.spark.sql.functions.col)
-        df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
+        (if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
+          .sortWithinPartitions(cols: _*)
       }
     }
   }

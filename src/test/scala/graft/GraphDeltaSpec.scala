@@ -52,6 +52,21 @@ class GraphDeltaSpec extends SparkSpec {
     val hubEdge = edges.where(col("edge_id").startsWith("E-HUB:"))
       .select("subject_categories").collect()
     assert(hubEdge.forall(_.getSeq[String](0) == Seq(O.Place)), hubEdge.toSeq)
+    // ... and the hub's name
+    val hubName = nodes.where(col("id").startsWith("HUB:")).select("id", "name")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val hubNamed = edges.where(col("edge_id").startsWith("E-HUB:"))
+      .select("subject", "subject_name").collect()
+    assert(hubNamed.nonEmpty && hubNamed.forall(r =>
+      r.getString(1) != null && r.getString(1) == hubName(r.getString(0))), hubNamed.toSeq)
+    // edges on a renamed customer carry its new name at either end
+    def onRenamed(end: String) = edges.where(col(end).startsWith("CUST:") &&
+      split(col(end), ":").getItem(1).cast("long") % 10 === 3)
+      .select(col(s"${end}_name").as("name"))
+    val renamedEnds = onRenamed("subject").unionByName(onRenamed("object"))
+      .collect().map(_.getString(0))
+    assert(renamedEnds.nonEmpty && renamedEnds.forall(n => n != null && n.endsWith(" (r2)")),
+      renamedEnds.toSeq.distinct.take(10))
     nodes.unpersist(); edges.unpersist()
   }
 

@@ -566,62 +566,77 @@ class PlanAuditSpec extends SparkSpec {
       closure = None, expandSubclasses = false))
   }
 
-  /** A response plan over `g` is one pass over the fixture: every cached
-   * relation in it is a fixture cache (no per-request materialization of
-   * the answer), it scans each edge replica and the node table exactly
-   * once, and its one node join builds (broadcasts) the answer side and
-   * streams the node table. */
-  private def assertOnePass(name: String, df: DataFrame, g: model.PropertyGraph): Unit = {
+  /** A response plan over `g` is one pass over the fixture's edges:
+   * every cached relation in it is a fixture cache (no per-request
+   * materialization of the answer), it scans each edge replica exactly
+   * once and groups once (one logical Aggregate). Node names and
+   * categories ride on the edges, so with `nodeJoin` false it has no
+   * join, no BroadcastExchange and no scan of the node table; with
+   * `nodeJoin` (node attribute columns) its one node join scans the node
+   * table once, builds (broadcasts) the answer side and streams the node
+   * table. */
+  private def assertOnePass(name: String, df: DataFrame, g: model.PropertyGraph,
+                            nodeJoin: Boolean = false): Unit = {
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     def builder(df: DataFrame) = df.queryExecution.optimizedPlan.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder
     }.getOrElse(fail("fixture frame is not cached"))
     val (nodesB, edgesB, reverseB) = (builder(g.nodes), builder(g.edges), builder(g.reverseEdges))
     assert(!(edgesB eq reverseB), "fixture has no separate edge replica")
 
-    val relations = df.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r.cacheBuilder
-    }
+    val optimized = df.queryExecution.optimizedPlan
+    val relations = optimized.collect { case r: InMemoryRelation => r.cacheBuilder }
     assert(relations.forall(b => Seq(nodesB, edgesB, reverseB).exists(_ eq b)),
-      s"$name caches something beyond the fixture:\n${df.queryExecution.optimizedPlan}")
+      s"$name caches something beyond the fixture:\n$optimized")
+    val aggregates = optimized.collect { case a: Aggregate => a }
+    assert(aggregates.size == 1, s"$name groups ${aggregates.size} times:\n$optimized")
 
     val exec = df.queryExecution.executedPlan
     val scans = exec.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
     Seq("edges" -> edgesB, "reverse edges" -> reverseB, "nodes" -> nodesB).foreach {
-      case (table, b) => assert(scans.count(_ eq b) == 1,
-        s"$name: $table scanned ${scans.count(_ eq b)} times:\n$exec")
+      case (table, b) =>
+        val want = if (b eq nodesB) (if (nodeJoin) 1 else 0) else 1
+        assert(scans.count(_ eq b) == want,
+          s"$name: $table scanned ${scans.count(_ eq b)} times, not $want:\n$exec")
     }
 
-    def scansNodes(p: org.apache.spark.sql.execution.SparkPlan) =
-      p.collect { case s: InMemoryTableScanExec => s }.exists(_.relation.cacheBuilder eq nodesB)
     val joins = exec.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.size == 1, s"$name: expected one node-table join:\n$exec")
-    val j = joins.head
-    val (build, stream) = if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
-    assert(!scansNodes(build) && scansNodes(stream),
-      s"$name: node table is on the build side:\n$exec")
+    val broadcasts = exec.collect { case b: BroadcastExchangeExec => b }
+    if (!nodeJoin)
+      assert(joins.isEmpty && broadcasts.isEmpty, s"$name: joins or broadcasts:\n$exec")
+    else {
+      def scansNodes(p: org.apache.spark.sql.execution.SparkPlan) =
+        p.collect { case s: InMemoryTableScanExec => s }.exists(_.relation.cacheBuilder eq nodesB)
+      assert(joins.size == 1 && broadcasts.size == 1,
+        s"$name: expected one node-table join:\n$exec")
+      val j = joins.head
+      val (build, stream) = if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
+      assert(!scansNodes(build) && scansNodes(stream),
+        s"$name: node table is on the build side:\n$exec")
+    }
   }
 
-  test("slim response is one lazy pass: no job to build, one scan per replica, node table streamed") {
+  test("slim response is one job: no join, no broadcast, no node table") {
     val (g, res) = servingAnswer()
     // construction runs no Spark job (nothing persisted, nothing counted)
     val (slim, run) = JobCount.during(spark)(TrapiResponse.slim(res, g))
     assert(run.jobs == 0, s"building slim ran Spark jobs ($run)")
     assertOnePass("slim", slim, g)
+    // and collecting it runs one: no broadcast job before the scan job
+    val (rows, collected) = JobCount.during(spark)(slim.collect())
+    assert(rows.nonEmpty)
+    assert(collected.jobs == 1, s"collecting slim ran $collected")
   }
 
   test("TRAPI envelope is one pass: one scan per replica, one aggregate, node table streamed") {
     val (g, res) = servingAnswer()
-    val parts = TrapiResponse.assemble(res, g, Map.empty, "infores:graft",
-      nodeAttrColumns = Seq("equiv_ids"))
-    assertOnePass("assemble", parts, g)
-    val aggregates = parts.queryExecution.optimizedPlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }
-    assert(aggregates.size == 1,
-      s"assemble groups ${aggregates.size} times:\n${parts.queryExecution.optimizedPlan}")
+    assertOnePass("assemble", TrapiResponse.assemble(res, g, Map.empty, "infores:graft"), g)
+    assertOnePass("assemble with node attributes", TrapiResponse.assemble(res, g, Map.empty,
+      "infores:graft", nodeAttrColumns = Seq("equiv_ids")), g, nodeJoin = true)
   }
 
   test("warm path is scan-only: stored artifacts load without joins or aggregation") {

@@ -148,7 +148,8 @@ class SpoolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GraphStore's manifest text is the same digest it always was") {
     val sfDir = "/root/testdata/sf0.001"
-    // md5 over "v2" plus sorted name|size|mtimeMillis of each regular file
+    // md5 over "v3" (GraphStore's format version) plus sorted
+    // name|size|mtimeMillis of each regular file
     val dir: Path = Paths.get(sfDir)
     val s = Files.list(dir)
     val entries =
@@ -157,7 +158,7 @@ class SpoolSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.toSeq.sorted
       finally s.close()
     val expected = java.security.MessageDigest.getInstance("MD5")
-      .digest(("v2" +: entries).mkString("\n").getBytes("UTF-8"))
+      .digest(("v3" +: entries).mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     assert(entries.nonEmpty)
     assert(graft.sources.GraphStore.fingerprint(sfDir) == expected)

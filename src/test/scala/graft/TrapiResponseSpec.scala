@@ -2,11 +2,15 @@ package graft
 
 import graft.model.PropertyGraph
 import graft.operators.{OneHop, TrapiAttributes, TrapiResponse}
+import graft.sources.GraphBuilder
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TRAPI envelope assembly: qualifier rendering, sources, binding shape,
- * and the folded single-document envelope (valid JSON, reference shape). */
+ * and the folded single-document envelope (valid JSON, reference shape).
+ * Every edge and match frame goes through the builder's
+ * `denormalizeEndpoints`, as store-built graphs do: the replies read each
+ * node's name, categories and presence off the matched edge. */
 class TrapiResponseSpec extends SparkSpec {
 
   import spark.implicits._
@@ -16,7 +20,7 @@ class TrapiResponseSpec extends SparkSpec {
     ("PART:1", "part one", Seq("graft:Part", "graft:Tradeable"))
   ).toDF("id", "name", "categories")
 
-  private val edges = Seq(
+  private val rawEdges = Seq(
     ("E1", "ORD:1", "PART:1", "graft:contains_item",
       Option("graft:ships"), Option("graft:returned"), Option.empty[String],
       "infores:logistics"),
@@ -28,15 +32,16 @@ class TrapiResponseSpec extends SparkSpec {
     .withColumn("attrs", typedLit(Map("shipdate" -> "1994-01-01")))
     .withColumn("num_attrs", typedLit(Map.empty[String, Double]))
     .withColumn("list_attrs", typedLit(Map.empty[String, Seq[String]]))
+  private lazy val edges = GraphBuilder.denormalizeEndpoints(rawEdges, nodes)
 
-  private val matches = edges
+  private lazy val matches = edges
     .withColumn("input_id", col("subject"))
     .withColumn("output_id", col("object"))
     .withColumn("input_query_id", lit("ORD:0").cast("string"))
     .withColumn("output_query_id", lit(null).cast("string"))
 
-  private val res = OneHop.Result(matches, "n_in", "n_out")
-  private val graph = PropertyGraph(nodes, edges)
+  private lazy val res = OneHop.Result(matches, "n_in", "n_out")
+  private lazy val graph = PropertyGraph(nodes, edges)
 
   /** `assemble`'s (key, json) rows of one part. */
   private def part(name: String, parts: DataFrame): DataFrame =
@@ -112,14 +117,33 @@ class TrapiResponseSpec extends SparkSpec {
   }
 
   /** Shared, symmetric, expanded, missing and empty answers: one node
-   * table and one match table that `slim` and `assemble` are pinned on. */
-  private lazy val kg = PropertyGraph(Seq(
+   * table and one match table that `slim` and `assemble` are pinned on.
+   * NAT:2 is in the node table with a null name. */
+  private lazy val kgNodes = Seq(
     ("ORD:1", "Order#1", Seq("graft:Order"), Seq.empty[String]),
     ("PART:1", "part one", Seq("graft:Part", "graft:Tradeable"), Seq("SKU:9")),
-    ("NAT:1", "nation one", Seq("graft:Nation", "graft:Place"), Seq("GEO:1", "ISO:N1"))
-  ).toDF("id", "name", "categories", "equiv_ids"), edges)
-  // (edge, subject, object, predicate, input, output, input qid, output qid)
-  private lazy val m = Seq(
+    ("NAT:1", "nation one", Seq("graft:Nation", "graft:Place"), Seq("GEO:1", "ISO:N1")),
+    ("NAT:2", null, Seq("graft:Nation", "graft:Place"), Seq("GEO:2"))
+  ).toDF("id", "name", "categories", "equiv_ids")
+  private lazy val kg = PropertyGraph(kgNodes,
+    GraphBuilder.denormalizeEndpoints(rawEdges, kgNodes))
+  /** Match rows (edge, subject, object, predicate, input, output, input
+   * qid, output qid) with the edge columns and their endpoints'
+   * denormalized columns against `kgNodes`. */
+  private def matchFrame(rows: (String, String, String, String, String, String,
+                                Option[String], Option[String])*): DataFrame =
+    GraphBuilder.denormalizeEndpoints(rows.toDF("edge_id", "subject", "object",
+        "predicate", "input_id", "output_id", "input_query_id", "output_query_id")
+      .withColumn("qualified_predicate", lit(null).cast("string"))
+      .withColumn("object_direction", lit(null).cast("string"))
+      .withColumn("object_aspect", lit(null).cast("string"))
+      .withColumn("primary_knowledge_source", lit("infores:x"))
+      .withColumn("attrs", when(col("edge_id") === "E11",
+        typedLit(Map("since" -> "1994"))))
+      .withColumn("num_attrs", typedLit(Map("weight" -> 0.5)))
+      .withColumn("list_attrs", when(col("edge_id") =!= "E12",
+        typedLit(Map("via" -> Seq("a", "b"))))), kgNodes)
+  private lazy val m = matchFrame(
     // S1 is symmetric and matched in both directions, so NAT:1 and
     // PART:1 are each both an input and an output node
     ("S1", "NAT:1", "PART:1", "graft:adjacent_to", "NAT:1", "PART:1",
@@ -132,18 +156,7 @@ class TrapiResponseSpec extends SparkSpec {
       Option("REG:1"), Option("ORD:0")),
     // a repeated query id; GHOST:1 is absent from the node table
     ("E12", "NAT:1", "GHOST:1", "graft:located_in", "NAT:1", "GHOST:1",
-      Option("REG:0"), Option.empty[String])
-  ).toDF("edge_id", "subject", "object", "predicate", "input_id", "output_id",
-      "input_query_id", "output_query_id")
-    .withColumn("qualified_predicate", lit(null).cast("string"))
-    .withColumn("object_direction", lit(null).cast("string"))
-    .withColumn("object_aspect", lit(null).cast("string"))
-    .withColumn("primary_knowledge_source", lit("infores:x"))
-    .withColumn("attrs", when(col("edge_id") === "E11",
-      typedLit(Map("since" -> "1994"))))
-    .withColumn("num_attrs", typedLit(Map("weight" -> 0.5)))
-    .withColumn("list_attrs", when(col("edge_id") =!= "E12",
-      typedLit(Map("via" -> Seq("a", "b")))))
+      Option("REG:0"), Option.empty[String]))
 
   test("slim: row for row over shared, symmetric, expanded, missing and empty answers") {
     def rows(r: OneHop.Result) = TrapiResponse.slim(r, kg).collect()
@@ -225,6 +238,56 @@ class TrapiResponseSpec extends SparkSpec {
       """{"name":"part one","categories":["graft:Part","graft:Tradeable"],"attributes":[]}"""))
     // an empty answer renders no rows at all
     assert(rows(OneHop.Result(m.where(lit(false)), "n_in", "n_out"), false, false).isEmpty)
+  }
+
+  test("slim and assemble: a present node with a null name, and a self-loop") {
+    // L1 is a self-loop on NAT:2, which is in the node table with a null
+    // name; E21 reaches NAT:2 as the input on its object side
+    val r = OneHop.Result(matchFrame(
+      ("L1", "NAT:2", "NAT:2", "graft:adjacent_to", "NAT:2", "NAT:2",
+        Option("REG:0"), Option.empty[String]),
+      ("E21", "PART:1", "NAT:2", "graft:located_in", "NAT:2", "PART:1",
+        Option("REG:1"), Option.empty[String])), "n_in", "n_out")
+    def edge(s: String, o: String, p: String) =
+      Some(s"""["$s","$o","$p","infores:x","","","","False"]""")
+    // a null name nulls the node tuple, but the node still gets its row
+    assert(TrapiResponse.slim(r, kg).collect()
+      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSeq.sorted == Seq(
+      ("ids_edge:e1", "E21", None),
+      ("ids_edge:e1", "L1", None),
+      ("ids_node:n_in", "NAT:2", None),
+      ("ids_node:n_out", "NAT:2", None),
+      ("ids_node:n_out", "PART:1", None),
+      ("slim_edge:e1", "E21", edge("PART:1", "NAT:2", "graft:located_in")),
+      ("slim_edge:e1", "L1", edge("NAT:2", "NAT:2", "graft:adjacent_to")),
+      ("slim_node:n_in", "NAT:2", None),
+      ("slim_node:n_out", "NAT:2", None),
+      ("slim_node:n_out", "PART:1", Some("""["part one","graft:Part",[]]"""))))
+    def rows(attrs: Seq[String]) =
+      TrapiResponse.assemble(r, kg, Map.empty, "infores:graft", nodeAttrColumns = attrs)
+        .where(col("part") =!= "edge").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+    def result(in: String, out: String, edgeId: String) =
+      s"""{"node_bindings":{"n_in":[$in],"n_out":[$out]},""" +
+        s""""analyses":[{"edge_bindings":{"e1":[{"id":"$edgeId","attributes":[]}]},""" +
+        """"resource_id":"infores:graft"}],"resource_id":"infores:graft"}"""
+    val results = Seq(
+      ("result", "NAT:2--NAT:2", result("""{"id":"NAT:2","attributes":[],"query_id":"REG:0"}""",
+        """{"id":"NAT:2","attributes":[]}""", "L1")),
+      ("result", "NAT:2--PART:1", result("""{"id":"NAT:2","attributes":[],"query_id":"REG:1"}""",
+        """{"id":"PART:1","attributes":[]}""", "E21")))
+    // a null name drops the key from the node JSON
+    assert(rows(Nil) == Seq(
+      ("node", "NAT:2", """{"categories":["graft:Nation","graft:Place"],"attributes":[]}"""),
+      ("node", "PART:1",
+        """{"name":"part one","categories":["graft:Part","graft:Tradeable"],"attributes":[]}""")) ++
+      results)
+    assert(rows(Seq("equiv_ids")) == Seq(
+      ("node", "NAT:2", """{"categories":["graft:Nation","graft:Place"],""" +
+        """"attributes":[{"attribute_type_id":"equiv_ids","value":"GEO:2"}]}"""),
+      ("node", "PART:1", """{"name":"part one","categories":["graft:Part","graft:Tradeable"],""" +
+        """"attributes":[{"attribute_type_id":"equiv_ids","value":"SKU:9"}]}""")) ++
+      results)
   }
 
   test("envelope folds parts into one valid reference-shaped document") {
