@@ -108,11 +108,10 @@ object Fixture {
       c
     }
 
-  /** Driver-side closure index for the point-lookup fast path (built once
-   * per session from the cached closure; None when the closure exceeds
-   * the driver-size guard — lookups then use the broadcast-join path). */
+  /** Driver-side closure index that every subclass-expanding lookup
+   * resolves through (built once per session from the cached closure). */
   def closureIndex(spark: SparkSession, sfDir: String): Option[ClosureIndex] =
-    memo(spark, sfDir, "closure_index")(ClosureIndex.fromClosure(closure(spark, sfDir)))
+    memo(spark, sfDir, "closure_index")(Some(ClosureIndex.fromClosure(closure(spark, sfDir))))
 
   def metaSummary(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "meta_summary") {

@@ -384,16 +384,10 @@ object ScaleSmoke {
         nTables = 4).count())
     }
 
-    // Crossover sweep for the serving fast path: at what pinned-id-set
-    // size does the driver-built literal probe (SetProbe/MapProbe scan
-    // filter, zero join) lose to the broadcast hash join? The literal
-    // path's cost grows with probe-set build + task serialization (the
-    // whole set ships inside the task binary, on every call); the join
-    // path pays a fixed broadcast-build job but streams the id set as
-    // DATA. DefaultMaxLiteralIds (64k) is the claimed crossover — this
-    // sweep is its measurement. Sizes straddle the threshold; each row
-    // is (forced-literal, forced-join) on identical inputs, min of 2
-    // runs to shed scheduling noise.
+    // Lookup sweep: the driver-resolved literal probe (SetProbe/MapProbe
+    // scan filter, zero join) at growing pinned-id-set sizes. The probe
+    // set rides inside the stage's task binary; past 1,000 KiB Spark logs
+    // its size as "Broadcasting large task binary with size". Min of 2 runs to shed scheduling noise.
     if (sections.contains("lookup")) {
       val ont = graft.model.GraftOntology.ontology
       Fixture.ensureStore(spark, sfDir)
@@ -413,21 +407,12 @@ object ScaleSmoke {
           operators.QNode("n0", ids = ids),
           operators.QNode("n1"),
           operators.QEdge("n0", "n1"))
-        def hop(maxLit: Int): Long =
-          operators.OneHop.answer(spark, g, ont, qg, closure = None,
-            expandSubclasses = false, maxLiteralIds = maxLit).matches.count()
-        val (tLit, rows) = timed2(hop(Int.MaxValue))
-        val (tJoin, _) = timed2(hop(0))
-        println(f"onehop ids=$sz%7d   literal ${tLit}%6.2f s   " +
-          f"join ${tJoin}%6.2f s   $rows%9d rows")
+        val (tLit, rows) = timed2(operators.OneHop.answer(spark, g, ont, qg,
+          closure = None, expandSubclasses = false).matches.count())
+        println(f"onehop ids=$sz%7d   literal ${tLit}%6.2f s   $rows%9d rows")
         val pairs = (1 to sz).map(i => (s"CUST:$i", s"NAT:${i % 25}"))
-        def edges(maxLit: Int): Long =
-          operators.GraphOps.getEdges(spark, g, pairs, maxLiteralPairs = maxLit)
-            .count()
-        val (teLit, erows) = timed2(edges(Int.MaxValue))
-        val (teJoin, _) = timed2(edges(0))
-        println(f"edges  pairs=$sz%6d   literal ${teLit}%6.2f s   " +
-          f"join ${teJoin}%6.2f s   $erows%9d rows")
+        val (teLit, erows) = timed2(operators.GraphOps.getEdges(spark, g, pairs).count())
+        println(f"edges  pairs=$sz%6d   literal ${teLit}%6.2f s   $erows%9d rows")
       }
     }
 

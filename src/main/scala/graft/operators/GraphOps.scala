@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions
 import graft.model.{Ontology, PropertyGraph}
 
 /**
@@ -15,104 +16,62 @@ object GraphOps {
    * with the node set; keeps the descendant -> query-id mapping
    * (ref: /root/reference/app/app/plover.py:2778-2820).
    * Returns (node_id, query_id) — query_id null for directly-listed ids.
+   * Expansion (when a closure is given) resolves driver-side through
+   * `index` (see OneHop.resolver); the lookup is one probe filter over
+   * the node table.
    */
   def singleNode(spark: SparkSession, graph: PropertyGraph, ids: Seq[String],
                  closure: Option[DataFrame],
                  index: Option[ClosureIndex] = None): DataFrame = {
-    // Literal fast path: expansion resolved driver-side (bounded, see
-    // ClosureIndex), the lookup is one isin filter over the node table.
-    val localOpt = index
-      .filter(_ => closure.isDefined)
-      .map(_.expand(ids))
-      .orElse(if (closure.isEmpty) Some((ids.distinct, Map.empty[String, String])) else None)
-      .filter(_._1.size <= OneHop.DefaultMaxLiteralIds)
-    localOpt match {
-      case Some((all, qid)) =>
-        val qidCol =
-          if (qid.isEmpty) lit(null).cast("string")
-          else graft.functions.HashExpressions.mapProbe(col("id"), qid)
-        graph.nodes.where(
-          if (all.size <= 16) col("id").isin(all: _*)
-          else graft.functions.HashExpressions.setProbe(col("id"), all.toSet))
-          .select(col("id").as("node_id"), qidCol.as("query_id"))
-      case None =>
-        val expanded = OneHop.expandIds(spark, ids, closure, expand = true)
-        expanded.join(graph.nodes.select(col("id").as("node_id")), Seq("node_id"),
-          "left_semi")
-    }
+    val (all, qids) = OneHop.resolver(closure, expandSubclasses = true, index)(ids)
+    graph.nodes.where(OneHop.memberOf(all)(col("id")))
+      .select(col("id").as("node_id"), OneHop.queryIdCol(qids, col("id")).as("query_id"))
   }
 
   /**
    * Edges between node pairs, undirected, all predicates, no subclass
    * reasoning (ref: plover.py:1934-1981 `get_edges`). The reference loops
-   * per pair on the driver; here the whole batch is ONE equi-join on the
-   * unordered endpoint pair, so 10^6 pairs cost the same plan as 10.
+   * per pair on the driver; here the whole batch is ONE probe-filtered
+   * scan: each unordered endpoint pair maps to the `pair_key`s that asked
+   * for it, and a matching edge fans out to each of them, so a repeated
+   * or reversed pair yields its rows once per request entry.
    * Returns (pair_key, edge_id, subject, object, predicate).
    */
   def getEdges(spark: SparkSession, graph: PropertyGraph,
-               pairs: Seq[(String, String)],
-               maxLiteralPairs: Int = OneHop.DefaultMaxLiteralIds): DataFrame = {
-    // Driver-side unordered-pair keys: a U+0001 separator never occurs
-    // in CURIEs, so keys are collision-free.
-    val keyed = pairs.map { case (na, nb) =>
-      val (lo, hi) = if (na <= nb) (na, nb) else (nb, na)
-      (s"$lo\u0001$hi", s"$na--$nb")
+               pairs: Seq[(String, String)]): DataFrame = {
+    // Driver-side unordered-pair keys -> their pair_keys in request
+    // order, joined by U+0002. Neither U+0001 nor U+0002 occurs in
+    // CURIEs, so keys are collision-free and the list splits cleanly
+    // (the same fan-out answerBatch uses for tags). The endpoints are
+    // ordered as Spark's least/greatest order them on the edge side.
+    val keyMap = scala.collection.mutable.HashMap.empty[String, String]
+    for ((na, nb) <- pairs) {
+      val key = if (OneHop.utf8Order.lteq(na, nb)) s"$na\u0001$nb" else s"$nb\u0001$na"
+      keyMap.updateWith(key)(prev => Some(prev.fold(s"$na--$nb")(_ + s"\u0002$na--$nb")))
     }
-    val keyMap = keyed.toMap
     val edgeKey = concat_ws("\u0001",
       least(col("subject"), col("object")), greatest(col("subject"), col("object")))
-    if (keyed.size <= maxLiteralPairs && keyMap.size == keyed.size) {
-      // Literal fast path: the whole batch is one probe scan filter plus a
-      // map-literal probe for the pair key — no broadcast build job. Like
-      // OneHop's literal path, membership is isin only while the set is
-      // tiny; past that it's a SetProbe (one shared driver-built hash set,
-      // not N Literal nodes — analysis time is what made the r12 sweep's
-      // isin variant superlinear in the pair count).
-      // Implied endpoint conjunct: an edge matching some pair has its
-      // subject among the pairs' endpoints, so `subject IN endpoints` is
-      // redundant semantically but load-bearing physically — it is a
-      // plain column predicate the subject-clustered cache prunes batches
-      // on (the pair key is a concat expression, invisible to zone maps),
-      // and it short-circuits before the key concat on surviving rows.
-      // NULL tolerance: `subject IN endpoints` evaluates to NULL (drop)
-      // for a NULL subject, but the join path's concat_ws/least/greatest
-      // key SKIPS nulls — an edge with NULL subject and object=X carries
-      // key "XX" and matches a self-pair (X,X). Graphs built by
-      // GraphBuilder/KgxSource never emit null endpoints, but this path
-      // must stay value-equivalent to the join path on ANY input, so the
-      // conjunct explicitly admits null subjects (still a plain column
-      // predicate — batch-stat null counts keep it zone-map prunable).
-      val endpoints = pairs.iterator.flatMap(p => Iterator(p._1, p._2))
-        .toSeq.distinct
-      val endpointHit = col("subject").isNull ||
-        (if (endpoints.size <= 16) col("subject").isin(endpoints: _*)
-         else
-           // per-length ranges first: zone-map prunable where the
-           // SetProbe is opaque to batch stats (see OneHop.rangeConjunct)
-           OneHop.rangeConjunct(col("subject"), endpoints) &&
-             graft.functions.HashExpressions.setProbe(col("subject"), endpoints.toSet))
-      graph.edges
-        .where(endpointHit && (
-          if (keyMap.size <= 16) edgeKey.isin(keyMap.keys.toSeq: _*)
-          else graft.functions.HashExpressions.setProbe(edgeKey, keyMap.keySet)))
-        .withColumn("pair_key",
-          graft.functions.HashExpressions.mapProbe(edgeKey, keyMap))
-        .select("pair_key", "edge_id", "subject", "object", "predicate")
-    } else {
-      // Data-sized batches (or several pair_keys sharing one unordered
-      // pair): ONE equi-join on the unordered endpoint pair, so 10^6
-      // pairs cost the same plan as 10.
-      import spark.implicits._
-      val pairsDF = pairs.toDF("na", "nb")
-        .withColumn("pair_key", concat_ws("--", col("na"), col("nb")))
-        .withColumn("k", concat_ws("\u0001",
-          least(col("na"), col("nb")), greatest(col("na"), col("nb"))))
-        .select("pair_key", "k")
-      graph.edges
-        .withColumn("k", edgeKey)
-        .join(broadcast(pairsDF), Seq("k"))
-        .select("pair_key", "edge_id", "subject", "object", "predicate")
-    }
+    // Implied endpoint conjunct: an edge matching some pair has its
+    // subject among the pairs' endpoints, so `subject IN endpoints` is
+    // redundant semantically but load-bearing physically — it is a
+    // plain column predicate the subject-clustered cache prunes batches
+    // on (the pair key is a concat expression, invisible to zone maps),
+    // and it short-circuits before the key concat on surviving rows.
+    // NULL tolerance: the key's concat_ws/least/greatest SKIP nulls, so
+    // an edge with NULL subject and object=X carries key "X\u0001X" and
+    // matches a self-pair (X,X), while `subject IN endpoints` is NULL
+    // (drop) for it. Graphs built by GraphBuilder/KgxSource never emit
+    // null endpoints, but the conjunct must stay a superset of the key
+    // match on ANY input, so it explicitly admits null subjects (still a
+    // plain column predicate — batch-stat null counts keep it zone-map
+    // prunable). A key outside the map probes to null, which explodes
+    // to no row, so the map probe is also the key filter.
+    val endpoints = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).distinct.toVector
+    graph.edges
+      .where(col("subject").isNull || OneHop.memberOf(endpoints)(col("subject")))
+      .withColumn("pair_key",
+        explode(split(HashExpressions.mapProbe(edgeKey, keyMap), "\u0002")))
+      .select("pair_key", "edge_id", "subject", "object", "predicate")
   }
 
   /**

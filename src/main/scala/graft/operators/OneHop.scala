@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions
 import graft.model.{Ontology, PropertyGraph}
 
 /**
@@ -10,11 +11,12 @@ import graft.model.{Ontology, PropertyGraph}
  * :2011-2120 `_lookup_answers`).
  *
  * The reference walks a nested node->category->predicate->direction map per
- * input curie. Here the whole lookup is two broadcast joins against the
- * columnar edge table plus literal `isin` predicate filters (computed from
- * the driver-side ontology), so Catalyst pushes everything into the scan
- * and there is no per-curie loop — the same plan serves 1 or 10^6 input
- * ids, and at 100 TB the big table is never shuffled.
+ * input curie. Here the pinned ids resolve on the driver (subclass
+ * expansion through the ClosureIndex) into literal set probes, and the
+ * whole lookup is one filtered pass over each clustered edge replica plus
+ * literal `isin` predicate filters (computed from the driver-side
+ * ontology), so Catalyst pushes everything into the scan: no join, no
+ * shuffle of the edge table, no per-curie loop.
  *
  * Semantics preserved:
  *  - canonical-predicate forcing of the qedge (flip when all predicates are
@@ -33,29 +35,6 @@ import graft.model.{Ontology, PropertyGraph}
  */
 object OneHop {
 
-  /** Pinned-id sets at or below this size answer through the literal fast
-   * path: ids (and their driver-side subclass expansion, see ClosureIndex)
-   * are embedded as `isin` literals and the whole lookup is ONE pass over
-   * the edge table — no joins, no broadcast builds, no shuffles, so the
-   * per-query cost is a single scan-stage job. Larger id sets keep the
-   * broadcast-join path, which is the right plan when the pinned side is
-   * itself data-sized. 64k strings stay cheap plan-side because both
-   * probes are hash tables, not unrolled literals: isin compiles to an
-   * InSet set probe, and the query-id map goes through the native
-   * MapProbe expression (a typedLit map would LINEAR-scan per row).
-   *
-   * Threshold justification (ScaleSmoke `lookup` sweep, sf0.1, r12;
-   * re-measured r13 with the coarse range conjunct — literal gains
-   * further: one-hop 16k ids 0.31 s vs 0.59 s join, 262k 1.91 vs
-   * 2.69): the literal probe matches or beats the broadcast join at
-   * EVERY measured size — so 64k is not a latency crossover but a
-   * MEMORY bound:
-   * the probe set rides inside the serialized task binary on every
-   * call (~tens of MB at 10^6 ids), where the join path ships the ids
-   * once as broadcast DATA. Batches past the cap take the join path,
-   * whose plan cost is flat in the pair count. */
-  val DefaultMaxLiteralIds = 65536
-
   /** Coarse zone-map range conjunct for a literal probe set: ONE
    * [min,max] pair in UTF-8 byte order (Spark's binary string
    * comparison — Java's UTF-16 order differs outside the BMP, and a
@@ -68,15 +47,45 @@ object OneHop {
    * showed NO improvement on any key — g15's residue included — with
    * the Or-of-ranges adding per-row cost on every surviving row, so
    * the simpler single range was kept (negative result recorded).
-   * Shared by answer(), answerBatch and getEdges so the three
-   * literal-probe paths can't diverge. */
-  private[graft] def rangeConjunct(c: Column, ids: Iterable[String]): Column = {
-    val utf8Order: Ordering[String] = new Ordering[String] {
-      def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
-        a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-    }
+   * Shared by every literal probe (through memberOf) so they can't
+   * diverge. */
+  private[graft] def rangeConjunct(c: Column, ids: Iterable[String]): Column =
     c >= lit(ids.min(utf8Order)) && c <= lit(ids.max(utf8Order))
+
+  /** Spark's string order (unsigned UTF-8 bytes, i.e. code-point order),
+   * for driver-side bounds and keys that must agree with Spark's
+   * comparisons. UTF-16 order differs only where a surrogate meets a
+   * char in U+E000..U+FFFF, so surrogates are lifted above that block;
+   * no string is encoded. */
+  private[operators] val utf8Order: Ordering[String] = new Ordering[String] {
+    private def lift(c: Char): Int =
+      if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) a.length - b.length else lift(a.charAt(i)) - lift(b.charAt(i))
+    }
   }
+
+  /** Membership test for ONE pinned id set, built once per lookup and
+   * applied to every column that probes it. Small sets keep isin
+   * (literal InSet: trivial plan cost, and cached-batch stats pruning
+   * can use it); larger ones go through the native SetProbe, a hash set
+   * that is ONE plan object however many times the condition is
+   * referenced, PLUS the zone-map range conjunct: SetProbe is opaque to
+   * the cached batches' min/max stats (r12's g15 scanned all 1.3M rows
+   * twice for a 40-id probe), but a plain range predicate over the
+   * clustering column prunes batches like isin does. Range first so the
+   * cheap check short-circuits the probe. Every returned condition
+   * shares one ProbeTable, so a stage that probes the set from both
+   * directions ships it once and builds one hash table per task. */
+  private[graft] def memberOf(ids: Seq[String]): Column => Column =
+    if (ids.size <= 16) c => c.isin(ids: _*)
+    else {
+      val set = HashExpressions.ProbeTable.of(ids)
+      c => rangeConjunct(c, ids) && HashExpressions.setProbe(c, set)
+    }
 
   /** Matched edges with binding columns:
    * input_id/output_id (which endpoint fulfilled which qnode) and
@@ -95,44 +104,53 @@ object OneHop {
     when(col(id) === col("subject"), col(s"subject_$field"))
       .otherwise(col(s"object_$field"))
 
-  /** A pinned id set resolved driver-side: expanded ids + the
-   * descendant -> query-id map (empty when no subclass expansion). */
-  private final case class LocalIds(ids: Seq[String], queryIds: Map[String, String])
+  /** The one pinned-id resolver of `answer`, `answerBatch` and
+   * `GraphOps.singleNode`: ids -> (the ids plus any expansion, the
+   * descendant -> query-id map, empty when nothing was expanded).
+   * Subclass expansion applies when `expandSubclasses` is set and a
+   * closure is given, and then resolves through the driver-side
+   * ClosureIndex (ref: plover.py:1835-1867); asking for it without an
+   * index fails here, when the lookup is built. There is no distributed
+   * fallback: in the ScaleSmoke `lookup` sweep (sf0.1, 4 cores) the
+   * literal probe beat the broadcast join it replaced at every size from
+   * 4k to 262k ids (262k: one-hop 0.45 s vs 3.84 s, get_edges 1.00 s vs
+   * 3.60 s). */
+  private[operators] def resolver(closure: Option[DataFrame], expandSubclasses: Boolean,
+                                  index: Option[ClosureIndex])
+      : Seq[String] => (Seq[String], Map[String, String]) =
+    if (!expandSubclasses || closure.isEmpty) ids => (ids.distinct, Map.empty)
+    else index.getOrElse(throw new IllegalArgumentException(
+      "subclass expansion resolves on the driver: pass the closure's ClosureIndex as `index`"))
+      .expand
+
+  /** Query-id column of a resolved id set: the descendant -> query-id
+   * map probed at `id`, null throughout when nothing was expanded. */
+  private[operators] def queryIdCol(m: Map[String, String], id: Column): Column =
+    if (m.isEmpty) lit(null).cast("string") else HashExpressions.mapProbe(id, m)
+
+  /** The canonical-forced qedge and its (input, output) qnodes, and
+   * whether the input is the subject. Input qnode = first (in qnode
+   * order) with strictly the most ids (plover.py:2594-2613). */
+  private def sides(qg: QueryGraph, ont: Ontology, what: String)
+      : (QEdge, QNode, QNode, Boolean) = {
+    val qedge = QueryGraph.forceCanonical(qg.edge.get, ont)
+    val subjQ = qg.node(qedge.subjectKey)
+    val objQ = qg.node(qedge.objectKey)
+    require(subjQ.ids.nonEmpty || objQ.ids.nonEmpty, s"$what: at least one qnode must have ids")
+    val inputQ = qg.nodes.foldLeft(Option.empty[QNode]) { (best, qn) =>
+      if (qn.ids.size > best.map(_.ids.size).getOrElse(0)) Some(qn) else best
+    }.get
+    (qedge, inputQ, if (inputQ.key == subjQ.key) objQ else subjQ,
+      inputQ.key == qedge.subjectKey)
+  }
 
   def answer(spark: SparkSession, graph: PropertyGraph, ont: Ontology, qg: QueryGraph,
              closure: Option[DataFrame] = None,
              expandSubclasses: Boolean = true,
              maxEdges: Option[Long] = None,
-             index: Option[ClosureIndex] = None,
-             maxLiteralIds: Int = DefaultMaxLiteralIds): Result = {
-    val qedge = QueryGraph.forceCanonical(qg.edge.get, ont)
-    val subjQ = qg.node(qedge.subjectKey)
-    val objQ = qg.node(qedge.objectKey)
-    require(subjQ.ids.nonEmpty || objQ.ids.nonEmpty,
-      "At least one qnode must have ids")
-
-    // Input qnode = first (in qnode order) with strictly the most ids
-    // (plover.py:2594-2613)
-    val inputQ = qg.nodes.foldLeft(Option.empty[QNode]) { (best, qn) =>
-      if (qn.ids.size > best.map(_.ids.size).getOrElse(0)) Some(qn) else best
-    }.get
-    val outputQ = if (inputQ.key == subjQ.key) objQ else subjQ
-    val inputIsSubject = inputQ.key == qedge.subjectKey
-
-    // Driver-side expansion of a pinned id set, when resolvable without a
-    // Spark job: trivially when no subclass expansion applies, via the
-    // ClosureIndex when one is provided. None -> the distributed
-    // expandIds/broadcast-join path must be used for that side.
-    def local(ids: Seq[String]): Option[LocalIds] = {
-      val resolved =
-        if (!expandSubclasses || closure.isEmpty) Some(LocalIds(ids.distinct, Map.empty))
-        else index.map { ix =>
-          val (all, qid) = ix.expand(ids); LocalIds(all, qid)
-        }
-      resolved.filter(_.ids.size <= maxLiteralIds)
-    }
-    val inLocalOpt = local(inputQ.ids)
-    val outLocalOpt = if (outputQ.ids.nonEmpty) local(outputQ.ids) else None
+             index: Option[ClosureIndex] = None): Result = {
+    val resolve = resolver(closure, expandSubclasses, index)
+    val (qedge, inputQ, outputQ, inputIsSubject) = sides(qg, ont, "query")
 
     // ---- predicate + direction conditions (literal, driver-computed) ----
     // staticBidir = Some(false) folds the dead direction's condition to
@@ -146,90 +164,40 @@ object OneHop {
     val fwdCond = matchCond && (bidirCond || lit(inputIsSubject))
     val bwdCond = matchCond && (bidirCond || lit(!inputIsSubject))
 
-    val edges = graph.edges
-
-    def queryIdCol(m: Map[String, String], id: Column): Column =
-      if (m.isEmpty) lit(null).cast("string")
-      else graft.functions.HashExpressions.mapProbe(id, m)
-
-    // Small sets keep isin (literal InSet: trivial plan cost, and cached-
-    // batch stats pruning can use it); large expansions go through the
-    // native SetProbe so the id set is ONE plan object however many times
-    // the condition is referenced — PLUS the zone-map range conjunct
-    // (rangeConjunct below): SetProbe is opaque to the cached batches'
-    // min/max stats (r12's g15 scanned all 1.3M rows twice for a 40-id
-    // probe), but plain range predicates over the clustering column
-    // prune batches like isin does. Ordered range -> probe -> rest so
-    // the cheap checks still short-circuit the expensive match
-    // conditions.
-    def memberOf(c: Column, ids: Seq[String]): Column =
-      if (ids.size <= 16) c.isin(ids: _*)
-      else rangeConjunct(c, ids) &&
-        graft.functions.HashExpressions.setProbe(c, ids.toSet)
-
     // ---- input-side matching ----
-    // Literal fast path (pinned sets small, expansion driver-resolvable):
-    // each direction is its own filtered pass over the replica CLUSTERED
+    // Each direction is its own filtered pass over the replica CLUSTERED
     // on the column it probes — fwd probes `subject` against the
     // subject-clustered primary, bwd probes `object` against the
     // object-clustered replica — so zone-map batch pruning serves both
     // (see PropertyGraph.reverseEdges). Zero joins and zero shuffles; an
-    // edge matching both directions yields both binding rows, exactly as
-    // the previous single-scan conditional explode did, and a direction
-    // whose condition folds to false (a non-symmetric pinned-side query)
-    // prunes to an empty relation at optimization time, leaving ONE scan.
-    // Fallback: the broadcast-join shape (two filtered scans joined to the
-    // broadcast expansion frame), the right plan for data-sized id sets.
-    var matched = inLocalOpt match {
-      case Some(in) if outputQ.ids.isEmpty || outLocalOpt.isDefined =>
-        // Membership probe FIRST in the conjunction: codegen evaluates
-        // And left-to-right, so the O(1) id hash probe short-circuits
-        // before the match condition — which for qualified queries is a
-        // conglomerate of map lookups per row (the r12 g15 profile: the
-        // conglomerate ran on all 1.3M rows before the 40-id probe cut
-        // them to thousands).
-        val fwdHit = memberOf(col("subject"), in.ids) && fwdCond
-        val bwdHit = memberOf(col("object"), in.ids) && bwdCond
-        val fwd = edges.where(fwdHit)
-          .withColumn("input_id", col("subject"))
-          .withColumn("output_id", col("object"))
-        val bwd = graph.reverseEdges.where(bwdHit)
-          .withColumn("input_id", col("object"))
-          .withColumn("output_id", col("subject"))
-        fwd.unionByName(bwd)
-          .withColumn("input_query_id", queryIdCol(in.queryIds, col("input_id")))
-      case _ =>
-        val inputExp = expandIds(spark, inputQ.ids, closure, expandSubclasses)
-        val inFwd = inputExp
-          .withColumnRenamed("node_id", "subject")
-          .withColumnRenamed("query_id", "input_query_id")
-        val fwd = edges.where(fwdCond)
-          .join(broadcast(inFwd), Seq("subject"))
-          .withColumn("input_id", col("subject"))
-          .withColumn("output_id", col("object"))
-        val inBwd = inputExp
-          .withColumnRenamed("node_id", "object")
-          .withColumnRenamed("query_id", "input_query_id")
-        val bwd = edges.where(bwdCond)
-          .join(broadcast(inBwd), Seq("object"))
-          .withColumn("input_id", col("object"))
-          .withColumn("output_id", col("subject"))
-        fwd.unionByName(bwd)
-    }
+    // edge matching both directions yields both binding rows, and a
+    // direction whose condition folds to false (a non-symmetric pinned-
+    // side query) prunes to an empty relation at optimization time,
+    // leaving ONE scan.
+    // Membership probe FIRST in the conjunction: codegen evaluates And
+    // left-to-right, so the O(1) id hash probe short-circuits before the
+    // match condition — which for qualified queries is a conglomerate of
+    // map lookups per row (the r12 g15 profile: the conglomerate ran on
+    // all 1.3M rows before the 40-id probe cut them to thousands).
+    val (inIds, inQids) = resolve(inputQ.ids)
+    val inHit = memberOf(inIds)
+    val fwd = graph.edges.where(inHit(col("subject")) && fwdCond)
+      .withColumn("input_id", col("subject"))
+      .withColumn("output_id", col("object"))
+    val bwd = graph.reverseEdges.where(inHit(col("object")) && bwdCond)
+      .withColumn("input_id", col("object"))
+      .withColumn("output_id", col("subject"))
+    var matched = fwd.unionByName(bwd)
+      .withColumn("input_query_id", queryIdCol(inQids, col("input_id")))
 
     // ---- output-side filtering ----
     matched =
-      if (outputQ.ids.nonEmpty) outLocalOpt match {
-        case Some(out) if inLocalOpt.isDefined =>
-          // Pinned output ids, literal (categories are ignored in this
-          // case, plover.py:2045-2049)
-          matched.where(memberOf(col("output_id"), out.ids))
-            .withColumn("output_query_id", queryIdCol(out.queryIds, col("output_id")))
-        case _ =>
-          val outExp = expandIds(spark, outputQ.ids, closure, expandSubclasses)
-            .withColumnRenamed("node_id", "output_id")
-            .withColumnRenamed("query_id", "output_query_id")
-          matched.join(broadcast(outExp), Seq("output_id"))
+      if (outputQ.ids.nonEmpty) {
+        // Pinned output ids (categories are ignored in this case,
+        // plover.py:2045-2049)
+        val (outIds, outQids) = resolve(outputQ.ids)
+        matched.where(memberOf(outIds)(col("output_id")))
+          .withColumn("output_query_id", queryIdCol(outQids, col("output_id")))
       } else {
         val withNull = matched.withColumn("output_query_id", lit(null).cast("string"))
         if (outputQ.categories.isEmpty) withNull
@@ -392,7 +360,7 @@ object OneHop {
    * probe tables are bounded by the request itself (sum of expanded id
    * sets), not the corpus.
    *
-   * Semantics: per tag, identical to `answer` on the literal fast path
+   * Semantics: per tag, identical to `answer`
    * (spec-pinned row-for-row in BatchLookupSpec): canonical forcing,
    * input-qnode selection, subclass expansion with query-id mapping,
    * per-predicate bidirectionality, pinned-output ids (categories
@@ -407,12 +375,11 @@ object OneHop {
    * neither branch can be proven dead driver-side); the gate filters
    * the wrong-direction rows.
    *
-   * Bounds, by design: every pinned side must resolve driver-side (the
-   * ClosureIndex literal regime), and the WHOLE batch's expanded ids
-   * ride the serialized task binary together — so the per-call
-   * `maxLiteralIds` cap applies to the batch TOTAL, not per probe. A
-   * data-sized id set belongs on `answer`'s broadcast-join path, not
-   * in a point-probe batch.
+   * Bounds, by design: every pinned side resolves driver-side through
+   * the same resolver as `answer`, and the batch has no id-total cap:
+   * its probe tables ride one stage's task binary, which Spark's
+   * DAGScheduler broadcasts once per stage, exactly like `answer`'s
+   * probe set.
    *
    * Output: `answer`'s binding projection plus the probe `tag`:
    * (tag, edge_id, subject, object, predicate, input_id, output_id,
@@ -422,9 +389,9 @@ object OneHop {
                   probes: Seq[(String, QueryGraph)],
                   closure: Option[DataFrame] = None,
                   expandSubclasses: Boolean = true,
-                  index: Option[ClosureIndex] = None,
-                  maxLiteralIds: Int = DefaultMaxLiteralIds): DataFrame = {
+                  index: Option[ClosureIndex] = None): DataFrame = {
     import graft.functions.{HashExpressions => HE}
+    val resolve = resolver(closure, expandSubclasses, index)
     val SEP = "" // never occurs in CURIEs (same invariant as getEdges)
     val TSEP = ""
     require(probes.map(_._1).distinct.size == probes.size, "probe tags must be unique")
@@ -445,37 +412,11 @@ object OneHop {
     val fwdQual = Seq.newBuilder[(String, Column)]
     val bwdQual = Seq.newBuilder[(String, Column)]
     val attrGates = Seq.newBuilder[(String, Column)]
-    var totalIds = 0
 
     for ((tag, qg) <- probes) {
-      val qedge = QueryGraph.forceCanonical(qg.edge.get, ont)
-      val subjQ = qg.node(qedge.subjectKey)
-      val objQ = qg.node(qedge.objectKey)
-      require(subjQ.ids.nonEmpty || objQ.ids.nonEmpty,
-        s"probe '$tag': at least one qnode must have ids")
-      val inputQ = qg.nodes.foldLeft(Option.empty[QNode]) { (best, qn) =>
-        if (qn.ids.size > best.map(_.ids.size).getOrElse(0)) Some(qn) else best
-      }.get
-      val outputQ = if (inputQ.key == subjQ.key) objQ else subjQ
-      val inputIsSubject = inputQ.key == qedge.subjectKey
+      val (qedge, inputQ, outputQ, inputIsSubject) = sides(qg, ont, s"probe '$tag'")
 
-      def expand(ids: Seq[String]): LocalIds = {
-        val li =
-          if (!expandSubclasses || closure.isEmpty) LocalIds(ids.distinct, Map.empty)
-          else index match {
-            case Some(ix) => val (all, qid) = ix.expand(ids); LocalIds(all, qid)
-            case None => throw new IllegalArgumentException(
-              s"probe '$tag': subclass expansion in a batch needs a ClosureIndex")
-          }
-        totalIds += li.ids.size
-        require(totalIds <= maxLiteralIds,
-          s"batch ships $totalIds+ expanded ids inside one task binary, " +
-            s"over the $maxLiteralIds cap (probe '$tag') — split the " +
-            "batch, or run oversized probes through answer()'s " +
-            "broadcast-join path")
-        li
-      }
-      val in = expand(inputQ.ids)
+      val (inIds, inQids) = resolve(inputQ.ids)
       if (qedge.qualifierConstraints.nonEmpty) {
         // qualified probe: the conglomerate match is a per-tag GATED
         // conjunct. Ids enter a direction map only when that direction
@@ -488,11 +429,11 @@ object OneHop {
         val fwdLive = staticBidir.getOrElse(true) || inputIsSubject
         val bwdLive = staticBidir.getOrElse(true) || !inputIsSubject
         if (fwdLive) {
-          in.ids.foreach(id => fwdTags(id) = tag :: fwdTags.getOrElse(id, Nil))
+          inIds.foreach(id => fwdTags(id) = tag :: fwdTags.getOrElse(id, Nil))
           fwdQual += tag -> (matchCond && (bidirCond || lit(inputIsSubject)))
         }
         if (bwdLive) {
-          in.ids.foreach(id => bwdTags(id) = tag :: bwdTags.getOrElse(id, Nil))
+          inIds.foreach(id => bwdTags(id) = tag :: bwdTags.getOrElse(id, Nil))
           bwdQual += tag -> (matchCond && (bidirCond || lit(!inputIsSubject)))
         }
       } else {
@@ -500,22 +441,22 @@ object OneHop {
         val fwdPreds = if (inputIsSubject) expanded else bidirPreds
         val bwdPreds = if (!inputIsSubject) expanded else bidirPreds
         if (fwdPreds.nonEmpty) {
-          in.ids.foreach(id => fwdTags(id) = tag :: fwdTags.getOrElse(id, Nil))
+          inIds.foreach(id => fwdTags(id) = tag :: fwdTags.getOrElse(id, Nil))
           fwdPreds.foreach(p => fwdPredPairs += tag + SEP + p)
         }
         if (bwdPreds.nonEmpty) {
-          in.ids.foreach(id => bwdTags(id) = tag :: bwdTags.getOrElse(id, Nil))
+          inIds.foreach(id => bwdTags(id) = tag :: bwdTags.getOrElse(id, Nil))
           bwdPreds.foreach(p => bwdPredPairs += tag + SEP + p)
         }
       }
       if (qedge.attributeConstraints.nonEmpty)
         attrGates += tag -> AttributeConstraints.compileAll(qedge.attributeConstraints)
-      in.queryIds.foreach { case (id, q) => inQid += (tag + SEP + id) -> q }
+      inQids.foreach { case (id, q) => inQid += (tag + SEP + id) -> q }
       if (outputQ.ids.nonEmpty) {
-        val out = expand(outputQ.ids)
+        val (outIds, outQids) = resolve(outputQ.ids)
         outPinnedTags += tag
-        out.ids.foreach(id => outPairs += tag + SEP + id)
-        out.queryIds.foreach { case (id, q) => outQid += (tag + SEP + id) -> q }
+        outIds.foreach(id => outPairs += tag + SEP + id)
+        outQids.foreach { case (id, q) => outQid += (tag + SEP + id) -> q }
       } else if (outputQ.categories.nonEmpty) {
         catTags += tag
         expandCategories(outputQ.categories, ont)
@@ -548,11 +489,7 @@ object OneHop {
         val qualHit = qualGates.foldLeft(lit(false)) {
           case (acc, (t, c)) => acc || (col("tag") === t && c)
         }
-        // per-length range conjuncts first — the zone-map-prunable part
-        // (see rangeConjunct); the probe set itself is opaque to
-        // cached-batch stats
-        rel.where(rangeConjunct(col(probeCol), tagMap.keys) &&
-            HE.setProbe(col(probeCol), tagMap.keySet))
+        rel.where(memberOf(tagMap.keys.toSeq)(col(probeCol)))
           .withColumn("tag",
             explode(split(HE.mapProbe(col(probeCol), tagMap), TSEP)))
           .where(pairHit || qualHit)
@@ -571,11 +508,9 @@ object OneHop {
     }
     matched = matched
       .withColumn("input_query_id",
-        if (inQidMap.isEmpty) lit(null).cast("string")
-        else HE.mapProbe(concat_ws(SEP, col("tag"), col("input_id")), inQidMap))
+        queryIdCol(inQidMap, concat_ws(SEP, col("tag"), col("input_id"))))
       .withColumn("output_query_id",
-        if (outQidMap.isEmpty) lit(null).cast("string")
-        else HE.mapProbe(concat_ws(SEP, col("tag"), col("output_id")), outQidMap))
+        queryIdCol(outQidMap, concat_ws(SEP, col("tag"), col("output_id"))))
     if (outPinnedTags.nonEmpty)
       matched = matched.where(!HE.setProbe(col("tag"), outPinnedTags) ||
         HE.setProbe(concat_ws(SEP, col("tag"), col("output_id")), outPairSet))
@@ -600,28 +535,5 @@ object OneHop {
     matched.select(col("tag"), col("edge_id"), col("subject"), col("object"),
       col("predicate"), col("input_id"), col("output_id"),
       col("input_query_id"), col("output_query_id"))
-  }
-
-  /**
-   * Expand pinned query ids to subclass descendants, keeping a
-   * descendant -> query-id mapping (null for ids the user listed directly;
-   * min() tie-break when a node descends from several query ids).
-   * Ref: plover.py:1835-1867.
-   */
-  def expandIds(spark: SparkSession, ids: Seq[String], closure: Option[DataFrame],
-                expand: Boolean): DataFrame = {
-    import spark.implicits._
-    val idsDF = ids.toDF("node_id")
-    val originals = idsDF.withColumn("query_id", lit(null).cast("string"))
-    closure match {
-      case Some(c) if expand =>
-        val descendants = c
-          .join(broadcast(ids.toDF("ancestor")), Seq("ancestor"))
-          .select(col("descendant").as("node_id"), col("ancestor").as("query_id"))
-          .join(broadcast(idsDF), Seq("node_id"), "left_anti")
-          .groupBy("node_id").agg(min("query_id").as("query_id"))
-        originals.unionByName(descendants)
-      case _ => originals
-    }
   }
 }

@@ -641,11 +641,7 @@ object WarcSource {
     val keys = s.createDataFrame(urls.map(Tuple1(_))).toDF("u")
       .select(graft.operators.UrlOps.surtKey(col("u")).as("k"))
       .collect().map(_.getString(0)).toSeq.distinct
-    val probe =
-      if (keys.size <= 16) col("urlkey").isin(keys: _*)
-      else graft.operators.OneHop.rangeConjunct(col("urlkey"), keys) &&
-        graft.functions.HashExpressions.setProbe(col("urlkey"), keys.toSet)
-    index.where(probe)
+    index.where(graft.operators.OneHop.memberOf(keys)(col("urlkey")))
   }
 
   /**

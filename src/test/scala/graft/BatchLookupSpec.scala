@@ -13,7 +13,7 @@ class BatchLookupSpec extends SparkSpec {
   private lazy val graph = TpchGraph(spark, sfDir)
   private val ont = O.ontology
   private lazy val closure = SubclassClosure.fromGraph(graph, ont).cache()
-  private lazy val ix = ClosureIndex.fromClosure(closure)
+  private lazy val ix = Some(ClosureIndex.fromClosure(closure))
 
   private def probes: Seq[(String, QueryGraph)] = {
     val adj = graph.edges
@@ -127,23 +127,25 @@ class BatchLookupSpec extends SparkSpec {
         s"(${tagHits(folded)} vs ${tagHits(both)})")
   }
 
-  test("guards: duplicate tags, batch-total id cap") {
+  test("guards: duplicate tags; a batch past 65,536 ids answers") {
     val qg = probes.head._2
     intercept[IllegalArgumentException] {
       OneHop.answerBatch(spark, graph, ont, Seq("a" -> qg, "a" -> qg))
     }
-    // the cap bounds the BATCH total (everything rides one task binary),
-    // so two probes of 3 ids each exceed a cap of 5 even though each
-    // alone would fit
-    intercept[IllegalArgumentException] {
-      OneHop.answerBatch(spark, graph, ont, Seq(
-        "b1" -> QueryGraph.oneHop(
-          QNode("n0", ids = (1 to 3).map("CUST:" + _)), QNode("n1"),
-          QEdge("n0", "n1", predicates = Seq(O.LocatedIn))),
-        "b2" -> QueryGraph.oneHop(
-          QNode("n0", ids = (4 to 6).map("CUST:" + _)), QNode("n1"),
-          QEdge("n0", "n1", predicates = Seq(O.LocatedIn)))),
-        maxLiteralIds = 5)
+    // no batch-total id cap: 70,000 pinned ids across two probes answer
+    // in one batch, each tag row-identical to its single answer()
+    def qgOf(ids: Range) = QueryGraph.oneHop(
+      QNode("n0", ids = ids.map("CUST:" + _)), QNode("n1"),
+      QEdge("n0", "n1", predicates = Seq(O.LocatedIn)))
+    val big = Seq("b1" -> qgOf(1 to 40000), "b2" -> qgOf(40001 to 70000))
+    val byTag = OneHop.answerBatch(spark, graph, ont, big)
+      .select("tag", "edge_id").collect().groupBy(_.getString(0))
+      .map { case (t, rs) => t -> rs.map(_.getString(1)).sorted.toSeq }
+    for ((tag, q) <- big) {
+      val single = OneHop.answer(spark, graph, ont, q, expandSubclasses = false)
+        .matches.select("edge_id").collect().map(_.getString(0)).sorted.toSeq
+      assert(byTag.getOrElse(tag, Nil) == single, tag)
     }
+    assert(byTag("b1").nonEmpty)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{HashExpressions => HE, TextFunctions => TF}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The native single-pass hash expressions must be bit-identical to the
  * composable Column versions (same md5 code, same hash family) — the
@@ -302,5 +303,31 @@ class HashExpressionsSpec extends SparkSpec {
       HE.mapProbe(col("doc_id"), Map("1" -> "one")).as("name"))
     assert(probed.collect().map(r => Option(r.getString(1))).toSeq.sorted ==
       Seq(None, None, Some("one")))
+  }
+
+  test("probe tables: serialize as two arrays, compare by content, render as a size") {
+    val emoji = "\uD83D\uDE00" // outside the BMP: a surrogate pair
+    val vals = Seq("CUST:1", "", "\u00e9t\u00e9", emoji, null)
+    val set = HE.ProbeTable.of(vals)
+    val map = HE.ProbeTable.of(Map("k" -> "v", emoji -> "\u00e9", "gone" -> null))
+    assert(set.size == 4 && map.size == 2) // null members dropped
+    val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf)
+      .newInstance()
+    def roundTrip(t: HE.ProbeTable) =
+      ser.deserialize[HE.ProbeTable](ser.serialize(t))
+    val (set2, map2) = (roundTrip(set), roundTrip(map))
+    assert(set2 == set && set2.hashCode == set.hashCode && set2 != map)
+    for (v <- vals.filter(_ != null)) assert(set2.contains(UTF8String.fromString(v)), v)
+    assert(!set2.contains(UTF8String.fromString("CUST:2")))
+    assert(map2.get(UTF8String.fromString(emoji)) == UTF8String.fromString("\u00e9"))
+    assert(map2.get(UTF8String.fromString("gone")) == null)
+    assert(set.toString == "<4 values>" && map.toString == "<2 entries>")
+    // the same values built again compare equal; one more value does not
+    assert(HE.ProbeTable.of(vals) == set && HE.ProbeTable.of(vals :+ "x") != set)
+    // a plan renders the size, not the members
+    val probed = Seq("CUST:1", emoji, "x").toDF("id")
+      .select(HE.setProbe(col("id"), (1 to 5000).map("CUST:" + _) :+ emoji).as("hit"))
+    assert(probed.queryExecution.analyzed.toString.contains("<5001 values>"))
+    assert(probed.collect().map(_.getBoolean(0)).toSeq == Seq(true, true, false))
   }
 }

@@ -19,7 +19,7 @@ class MultiGraphSpec extends SparkSpec {
   private def freshSession(): (MultiGraph, PropertyGraph) = {
     val g = TpchGraph(spark, sfDir)
     val closure = Some(SubclassClosure.fromGraph(g, ont))
-    val index = ClosureIndex.fromClosure(closure.get)
+    val index = Some(ClosureIndex.fromClosure(closure.get))
     val mg = new MultiGraph(spark, ont)
     mg.register("alpha", HostedGraph(g, closure, index))
     val betaEdges = g.edges.where(col("predicate") === O.LocatedIn).cache()
@@ -48,9 +48,10 @@ class MultiGraphSpec extends SparkSpec {
     val viaDefault = mg.answer("probe", probe).collect()
     val viaBeta = mg.answer("probe", probe, Some("beta")).collect()
     // default-routed == explicit alpha == single-graph OneHop
+    val closure = SubclassClosure.fromGraph(g, ont)
     val solo = OneHop.answer(spark, g, ont, probe,
-      closure = Some(SubclassClosure.fromGraph(g, ont)),
-      expandSubclasses = true).matches.collect()
+      closure = Some(closure), expandSubclasses = true,
+      index = Some(ClosureIndex.fromClosure(closure))).matches.collect()
     assert(viaDefault.map(_.getAs[String]("edge_id")).sorted.toSeq ==
       solo.map(_.getAs[String]("edge_id")).sorted.toSeq)
     // beta is the located_in-only slice: strictly fewer matches, and
@@ -116,8 +117,8 @@ class MultiGraphSpec extends SparkSpec {
     // per-tag rows match running the same batch directly on each graph
     val direct = OneHop.answerBatch(spark, g, O.ontology, probes,
       closure = Some(SubclassClosure.fromGraph(g, O.ontology)),
-      index = ClosureIndex.fromClosure(
-        SubclassClosure.fromGraph(g, O.ontology)))
+      index = Some(ClosureIndex.fromClosure(
+        SubclassClosure.fromGraph(g, O.ontology))))
     assert(a.select("tag", "edge_id").collect().map(_.toSeq.toString).sorted.toSeq ==
       direct.select("tag", "edge_id").collect().map(_.toSeq.toString).sorted.toSeq)
     // beta (located_in slice) answers t1's open probe but has no

@@ -3,6 +3,7 @@ package graft
 import graft.model.{GraftOntology => O}
 import graft.operators._
 import graft.sources.TpchGraph
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -90,19 +91,49 @@ class OneHopSemanticsSpec extends SparkSpec {
   }
 
   test("getEdges three paths agree: isin (small), SetProbe (mid), broadcast join (large)") {
-    // >16 pairs flips the literal path's membership filter from isin to
-    // the driver-built SetProbe; past maxLiteralPairs it becomes the
-    // broadcast join. All three must return identical rows.
+    // >16 pairs flips the membership filter from isin to the
+    // driver-built SetProbe; the broadcast equi-join (JoinOracle) is the
+    // reference both must reproduce row for row.
     val pairs = (0 to 24).map(i => (s"NAT:$i", s"REG:${i % 5}")) ++
       Seq(("CUST:1", "NAT:7"), ("REG:0", "NAT:3"))
-    def rows(maxLit: Int) =
-      GraphOps.getEdges(spark, graph, pairs, maxLiteralPairs = maxLit)
-        .collect().map(_.toString).sorted.toSeq
-    val probe = rows(Int.MaxValue) // 27 pairs -> SetProbe branch
-    val join = rows(0)             // forced broadcast join
-    val isin = GraphOps.getEdges(spark, graph, pairs.take(4))
-      .collect().map(_.toString).sorted.toSeq // <=16 -> isin branch
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val probe = rows(GraphOps.getEdges(spark, graph, pairs)) // 27 pairs -> SetProbe
+    val join = rows(JoinOracle.getEdges(spark, graph, pairs))
+    val isin = rows(GraphOps.getEdges(spark, graph, pairs.take(4))) // <=16 -> isin
     assert(probe.nonEmpty && probe == join)
+    assert(isin.nonEmpty && isin == rows(JoinOracle.getEdges(spark, graph, pairs.take(4))))
     assert(isin.forall(probe.contains), "isin subset must appear in probe results")
+  }
+
+  test("getEdges: repeated and reversed pairs keep the join's multiplicity") {
+    // (a,b), (b,a), (a,b): every entry gets its own rows, a repeat as
+    // many times as it was asked for, exactly like the equi-join.
+    val e = graph.edges.where(col("subject") =!= col("object"))
+      .select("subject", "object").head()
+    val (a, b) = (e.getString(0), e.getString(1))
+    val pairs = Seq((a, b), (b, a), (a, b))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = rows(GraphOps.getEdges(spark, graph, pairs))
+    assert(got == rows(JoinOracle.getEdges(spark, graph, pairs)))
+    val once = GraphOps.getEdges(spark, graph, Seq((a, b))).count()
+    assert(once > 0 && got.size == 3 * once)
+    assert(got.count(_.startsWith(s"[$b--$a,")) == once)
+  }
+
+  test("getEdges: pairs outside the BMP match in Spark's string order") {
+    // The unordered-pair key puts the smaller endpoint first. UTF-16
+    // order puts U+1F600 (a surrogate pair) below U+E000, Spark's
+    // least/greatest (UTF-8 bytes) above it: the driver-side key must
+    // follow Spark's order or the pair never meets its edge.
+    import spark.implicits._
+    val (a, b) = ("X:\uE000", "X:\uD83D\uDE00")
+    val edges = Seq(("e1", a, b, "graft:related_to"), ("e2", b, a, "graft:related_to"))
+      .toDF("edge_id", "subject", "object", "predicate")
+    val g = graft.model.PropertyGraph(graph.nodes, edges)
+    val pairs = Seq((a, b), (b, a))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = rows(GraphOps.getEdges(spark, g, pairs))
+    assert(got.size == 4, got)
+    assert(got == rows(JoinOracle.getEdges(spark, g, pairs)))
   }
 }

@@ -53,13 +53,13 @@ class OneHopSpec extends SparkSpec {
   }
 
   test("literal fast path == broadcast-join path, row for row") {
-    // The serving fast path (ids as literal set probes, fwd/bwd explode)
-    // must reproduce the join path EXACTLY — including the two rows an
-    // edge contributes when it matches both directions of a symmetric
-    // predicate, and the subclass-expansion query_id mapping.
+    // The lookup path (ids as literal set probes, one pass per replica)
+    // must reproduce the broadcast-join shape EXACTLY (JoinOracle, the
+    // test-side reference) — including the two rows an edge contributes
+    // when it matches both directions of a symmetric predicate, and the
+    // subclass-expansion query_id mapping.
     val closure = SubclassClosure.fromGraph(graph, ont).cache()
-    val ix = ClosureIndex.fromClosure(closure)
-    assert(ix.isDefined)
+    val ix = Some(ClosureIndex.fromClosure(closure))
     // Pick a real adjacency from the data so the doubly-pinned symmetric
     // shape (both endpoints in both id sets -> an edge matches BOTH
     // directions and must contribute two rows) is non-vacuous.
@@ -79,19 +79,43 @@ class OneHopSpec extends SparkSpec {
         QNode("n0", ids = Seq(a, b, "NAT:99999")),
         QNode("n1", ids = Seq(a, b)),
         QEdge("n0", "n1", predicates = Seq(O.AdjacentTo))))
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("edge_id", "input_id", "input_query_id", "output_id", "output_query_id")
+      .collect().map(_.toString).sorted.toSeq
     for (qg <- shapes) {
-      def rows(maxLit: Int) = OneHop.answer(spark, graph, ont, qg,
-          closure = Some(closure), expandSubclasses = true, index = ix,
-          maxLiteralIds = maxLit)
-        .matches
-        .select("edge_id", "input_id", "input_query_id", "output_id",
-          "output_query_id")
-        .collect().map(_.toString).sorted.toSeq
-      val fast = rows(OneHop.DefaultMaxLiteralIds)
-      val join = rows(0)
+      val fast = rows(OneHop.answer(spark, graph, ont, qg,
+        closure = Some(closure), expandSubclasses = true, index = ix).matches)
+      val join = rows(JoinOracle.answer(spark, graph, ont, qg, Some(closure)))
       assert(fast.nonEmpty, s"empty result for $qg")
       assert(fast == join, s"path divergence for $qg")
     }
+  }
+
+  test("subclass expansion without a ClosureIndex fails at construction") {
+    // One resolver behind answer, answerBatch and singleNode: asking for
+    // expansion (a closure and expandSubclasses) without the driver
+    // index fails before any plan is built, with one message.
+    val closure = Some(SubclassClosure.fromGraph(graph, ont))
+    val msgs = Seq(
+      intercept[IllegalArgumentException](OneHop.answer(spark, graph, ont, openQuery,
+        closure = closure, expandSubclasses = true)),
+      intercept[IllegalArgumentException](OneHop.answerBatch(spark, graph, ont,
+        Seq("t" -> openQuery), closure = closure, expandSubclasses = true)),
+      intercept[IllegalArgumentException](GraphOps.singleNode(spark, graph,
+        Seq("NAT:7"), closure))).map(_.getMessage)
+    assert(msgs.distinct.size == 1, msgs)
+    assert(msgs.head.contains("ClosureIndex"), msgs.head)
+    // without expansion no index is needed
+    assert(GraphOps.singleNode(spark, graph, Seq("NAT:7"), None).count() == 1)
+  }
+
+  test("ClosureIndex past its row bound fails, naming the bound") {
+    val closure = SubclassClosure.fromGraph(graph, ont)
+    val n = closure.count()
+    assert(n > 3)
+    val e = intercept[IllegalStateException](ClosureIndex.fromClosure(closure, maxRows = 3))
+    assert(e.getMessage.contains("more than 3 rows"), e.getMessage)
+    assert(ClosureIndex.fromClosure(closure, maxRows = n.toInt).size == n)
   }
 
   test("serving session lifecycle: prepared plans survive reuse, closeServing retires") {
@@ -156,5 +180,19 @@ class OneHopSpec extends SparkSpec {
     // everything past PART:5 lexicographically stay out
     assert(!kept("CUST:3") && !kept("REG:1") && !kept("PART:6") &&
       !kept("PART:9999") && kept("PART:40") && kept("PART:2222"))
+  }
+
+  test("rangeConjunct: bounds in UTF-8 byte order, also outside the BMP") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // UTF-16 puts a surrogate pair (U+1F600) BELOW U+E000; Spark's byte
+    // order puts it above. Bounds taken in UTF-16 order would make an
+    // empty window here and prune both members.
+    val probe = Seq("\uE000x", "\uD83D\uDE00y")
+    val universe = probe ++ Seq("a", "\uFFFF", "\uD83D\uDE01")
+    val kept = universe.toDF("id")
+      .where(OneHop.rangeConjunct(col("id"), probe))
+      .collect().map(_.getString(0)).toSet
+    assert(kept == Set("\uE000x", "\uFFFF", "\uD83D\uDE00y"), kept)
   }
 }

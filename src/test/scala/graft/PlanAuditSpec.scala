@@ -66,18 +66,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Union"), s"fwd/bwd replica union missing:\n$p")
   }
 
-  test("one-hop large-id fallback: broadcast joins only, no shuffle of the edge table") {
-    // Data-sized pinned sets (forced here with maxLiteralIds = 0) keep
-    // the broadcast-join shape: the edge table is never shuffled.
+  test("one-hop 70k pinned ids: the one literal path, no join, no exchange") {
+    // Past the old 65,536-id cap a lookup still takes the literal path:
+    // one probe-filtered scan, no broadcast build job, no shuffle.
     val res = OneHop.answer(spark, graph, ont, QueryGraph.oneHop(
-      QNode("n0", ids = Seq("NAT:1", "NAT:2")),
-      QNode("n1", categories = Seq(O.Customer)),
+      QNode("n0", ids = (1 to 70000).map("CUST:" + _)),
+      QNode("n1", categories = Seq(O.Nation)),
       QEdge("n0", "n1", predicates = Seq(O.LocatedIn))),
-      closure = None, expandSubclasses = false, maxLiteralIds = 0)
-    val p = plan(res.matches)
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"))
-    assert(!p.contains("SortMergeJoin"), s"edge table got shuffled:\n$p")
-    assert(!p.contains("CartesianProduct"))
+      closure = None, expandSubclasses = false)
+    val p = plan(res.matches).split("InMemoryTableScan").head
+    assert(!p.contains("Join"), s"70k-id lookup gained a join:\n${p.take(2000)}")
+    assert(!p.contains("Exchange"), s"70k-id lookup gained a shuffle:\n${p.take(2000)}")
+    assert(p.contains("set_probe"), s"id set probe missing:\n${p.take(2000)}")
   }
 
   test("get_edges literal fast path (g18 shape): one probe scan, zero joins, zero exchanges") {
@@ -97,10 +97,8 @@ class PlanAuditSpec extends SparkSpec {
     // ClosureIndex: the query collapses to one probe filter over the
     // cached node table with the query-id mapping as a map_probe literal.
     val closure = SubclassClosure.fromGraph(graph, ont).cache()
-    val ix = ClosureIndex.fromClosure(closure)
-    assert(ix.isDefined, "fixture closure should fit the driver-side index")
-    val res = GraphOps.singleNode(spark, graph,
-      Seq("REG:1", "NAT:20", "CUST:3"), Some(closure), index = ix)
+    val res = GraphOps.singleNode(spark, graph, Seq("REG:1", "NAT:20", "CUST:3"),
+      Some(closure), index = Some(ClosureIndex.fromClosure(closure)))
     val p = plan(res).split("InMemoryTableScan").head
     assert(!p.contains("Join"), s"single-node literal path gained a join:\n$p")
     assert(!p.contains("Exchange"), s"single-node literal path gained a shuffle:\n$p")
@@ -206,21 +204,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan(res.matches).contains("SortMergeJoin"))
   }
 
-  test("category-hierarchy expansion (g08 shape): broadcast-only, category filter at the scan") {
+  test("category-hierarchy expansion (g08 shape): no join, filter at the scan") {
     // The r4 bench recorded g08 at ~4.9s p50 (vs 0.7s on an idle machine —
     // external load, not plan structure). This pins the structural
     // invariants so a REAL plan regression can't hide behind that noise:
-    // subclass-expanded pinned input stays a broadcast, the edge table is
-    // never shuffled, and the output-category filter stays a denormalized
-    // arrays_overlap predicate rather than a node-table join.
+    // the subclass-expanded pinned input resolves driver-side through the
+    // ClosureIndex (no broadcast join), the edge table is never shuffled,
+    // and the output-category filter stays a denormalized arrays_overlap
+    // predicate rather than a node-table join.
     val closure = SubclassClosure.fromGraph(graph, ont)
     val res = OneHop.answer(spark, graph, ont, QueryGraph.oneHop(
       QNode("n_out", categories = Seq(O.Actor)),
       QNode("n_in", ids = Seq("NAT:3")),
       QEdge("n_out", "n_in", predicates = Seq(O.AffiliatedWith))),
-      closure = Some(closure), expandSubclasses = true)
-    val p = plan(res.matches)
-    assert(p.contains("BroadcastHashJoin"), p)
+      closure = Some(closure), expandSubclasses = true,
+      index = Some(ClosureIndex.fromClosure(closure)))
+    // the query part only: the cached edge table's build plan (with its
+    // denorm broadcast joins) renders inside InMemoryRelation
+    val p = plan(res.matches).split("InMemoryTableScan").head
+    assert(!p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), s"edge table got shuffled:\n$p")
     assert(!p.contains("CartesianProduct"))
     val opt = res.matches.queryExecution.optimizedPlan.toString
