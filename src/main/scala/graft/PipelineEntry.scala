@@ -539,7 +539,7 @@ object PipelineEntry {
    * density screen), a link-heavy promo on %4 (must fail it), a short
    * footer (fails the length screen). */
   private def contentPages(d: DataFrame): DataFrame = {
-    val toks = filter(split(trim(col("text")), "\\s+"), t => t =!= "")
+    val toks = col("__toks") // see chunkTokens
     val nChunks = ceil(size(toks).cast("double") / lit(8.0)).cast("int")
     val paras = transform(sequence(lit(0), nChunks - 1),
       k => concat(lit("<p>"), array_join(slice(toks, k * 8 + 1, lit(8)), " "),
@@ -555,10 +555,16 @@ object PipelineEntry {
       .otherwise(lit(""))
     val footer = concat(lit("<footer>(c) site "),
       pmod(col("doc_id"), lit(40)), lit("</footer>"))
-    d.select(col("doc_id"),
+    chunkTokens(d).select(col("doc_id"),
       concat(lit("<html><body>"), nav, array_join(paras, ""), light, promo,
         footer, lit("</body></html>")).as("html"))
   }
+
+  /** (doc_id, __toks): the tokens, projected once so the chunking lambdas
+   * read a column instead of re-splitting the text once per chunk. */
+  private def chunkTokens(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+      filter(split(trim(col("text")), "\\s+"), t => t =!= "").as("__toks"))
 
   /** p123 fixture: each doc's tokens reshaped into 7-token lines (code
    * has line structure the raw corpus text lacks); doc_id%9==0 gains a
@@ -566,7 +572,7 @@ object PipelineEntry {
    * doc_id%11==0 a generation-marker header (fails the autogen
    * screen) — both arms load-bearing in the oracle comparison. */
   private def codeDocs(d: DataFrame): DataFrame = {
-    val toks = filter(split(trim(col("text")), "\\s+"), t => t =!= "")
+    val toks = col("__toks") // see chunkTokens
     val nChunks = ceil(size(toks).cast("double") / lit(7.0)).cast("int")
     val lines = transform(sequence(lit(0), nChunks - 1),
       k => array_join(slice(toks, k * 7 + 1, lit(7)), " "))
@@ -576,7 +582,7 @@ object PipelineEntry {
     val withHdr = when(pmod(col("doc_id"), lit(11)) === 0,
       concat(lit("// Auto-Generated by graftgen\n"), withLong))
       .otherwise(withLong)
-    d.select(col("doc_id"), withHdr.as("text"))
+    chunkTokens(d).select(col("doc_id"), withHdr.as("text"))
   }
 
   /** Shared conversation fixture for the SFT key (p94): a 5-turn
@@ -1680,9 +1686,9 @@ object PipelineEntry {
     // (library HLLs never do). n_exact rides along for the honesty
     // read; at scale it's the path the sketch replaces.
     "p103_hll_distinct" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => TF}
+      import graft.functions.{HashExpressions => HE, TextFunctions => TF}
       val shingles = docs(s, dir).select(
-        explode(TF.shingles(TF.tokens(col("text")), 3)).as("v"))
+        explode(HE.wordShingles(TF.tokens(col("text")), 3)).as("v"))
       Sketches.hllDistinct(shingles, "v", m = 64)
     }),
 
@@ -1711,10 +1717,10 @@ object PipelineEntry {
     // by sharing p103's oracle: the merged parity-split halves must
     // hash-match the single-pass estimate exactly.
     "p105_sketch_merge" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => TF}
+      import graft.functions.{HashExpressions => HE, TextFunctions => TF}
       val d = docs(s, dir)
       def shingles(part: DataFrame) = part.select(
-        explode(TF.shingles(TF.tokens(col("text")), 3)).as("v"))
+        explode(HE.wordShingles(TF.tokens(col("text")), 3)).as("v"))
       val even = Sketches.hllRegisters(
         shingles(d.where(pmod(col("doc_id"), lit(2)) === 0)), "v", m = 64)
       val odd = Sketches.hllRegisters(
@@ -1731,14 +1737,14 @@ object PipelineEntry {
     // story (batch p103, shard-merge p105, streaming p106).
     "p106_streaming_sketch" -> ((s, dir) => withStreamShuffle(s) {
       import org.apache.spark.sql.streaming.Trigger
-      import graft.functions.{TextFunctions => TF}
+      import graft.functions.{HashExpressions => HE, TextFunctions => TF}
       val (streamDir, tag) =
         Spool.once("stream-documents", dir)(linkTo(dir, "documents.parquet"))
       val d = docs(s, dir)
       val stream = spreadStream(
         s.readStream.schema(d.schema).parquet(streamDir))
       val shingles = stream.select(
-        explode(TF.shingles(TF.tokens(col("text")), 3)).as("v"))
+        explode(HE.wordShingles(TF.tokens(col("text")), 3)).as("v"))
       val name = "p106_hll_" + tag
       val q = Sketches.hllRegisters(shingles, "v", m = 64)
         .writeStream.format("memory").queryName(name)
@@ -1746,7 +1752,7 @@ object PipelineEntry {
       q.awaitTermination()
       Sketches.hllEstimateFromRegisters(s.table(name), m = 64)
         .crossJoin(d.select(
-          explode(TF.shingles(TF.tokens(col("text")), 3)).as("v"))
+          explode(HE.wordShingles(TF.tokens(col("text")), 3)).as("v"))
           .agg(countDistinct(col("v")).as("n_exact")))
     }),
 

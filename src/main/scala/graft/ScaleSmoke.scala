@@ -196,7 +196,7 @@ object ScaleSmoke {
     // sketches: the corpus ships only (bucket, rho) / (row, col) pairs
     // into bounded aggregations — the scale path exact counting can't take
     val shingles = docs.select(explode(
-      graft.functions.TextFunctions.shingles(
+      graft.functions.HashExpressions.wordShingles(
         graft.functions.TextFunctions.tokens(col("text")), 3)).as("v"))
     time("hll distinct sketch")(
       operators.Sketches.hllDistinct(shingles, "v").count())

@@ -3,8 +3,9 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -12,19 +13,20 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Catalyst expressions for the content-hashing hot path (SURVEY.md
- * §2 P3/P4). The composable Column versions in TextFunctions build the
- * same values out of md5/conv/transform/aggregate primitives — correct
+ * §2 P2-P4/P24/P25). The composed Column forms build the same values out
+ * of split/concat_ws/md5/conv/transform/aggregate primitives — correct
  * and oracle-portable, but each doc pays ~k array traversals of
  * interpreted higher-order-function evaluation, and Catalyst's projection
  * collapse re-inlines (recomputes) them per reference.
  *
- * These expressions compute md5 token code + distinct + signature in ONE
- * pass over the shingle array with primitive arithmetic — the preference
+ * Shingling is ONE expression, `word_shingles` (one O(tokens) pass), and
+ * the hash expressions compute md5 token code + distinct + signature in
+ * ONE pass over the shingle array with primitive arithmetic — the preference
  * order from the design brief: compose built-ins first, drop to a custom
  * Expression when the built-ins can't express the computation efficiently.
- * Results are BIT-IDENTICAL to the TextFunctions versions (same md5
- * prefix code, same hash family), so the same DuckDB oracles hold; the
- * specs assert the equivalence.
+ * Results are BIT-IDENTICAL to the composed forms (same md5 prefix code,
+ * same hash family), so the same DuckDB oracles hold; the specs keep the
+ * composed twins as equivalence oracles.
  */
 object HashExpressions {
 
@@ -36,8 +38,45 @@ object HashExpressions {
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
+  /** Every `n`-token window (stride 1) of a string array joined by one
+   * space, reading the array once: O(tokens), where the composed
+   * transform/slice/concat_ws re-evaluated a captured tokenizer per
+   * window, O(tokens²). Bit-identical to it: a null array or one shorter
+   * than `n` gives an empty array, null elements are skipped as
+   * concat_ws/array_join skip them, and empty tokens are kept. */
+  case class WordShingles(child: Expression, n: Int)
+      extends UnaryExpression with ImplicitCastInputTypes {
+    require(n >= 1, s"shingle width ($n) must be >= 1")
+    override def inputTypes = Seq(ArrayType(StringType))
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def nullable: Boolean = false
+    override def prettyName: String = "word_shingles"
+
+    override def eval(input: InternalRow): Any = shingle(child.eval(input).asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      val ref = ctx.addReferenceObj("wordShingles", this, classOf[WordShingles].getName)
+      ev.copy(isNull = FalseLiteral, code = code"""${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} =
+          $ref.shingle(${c.isNull} ? null : ${c.value});""")
+    }
+
+    private val Space = UTF8String.fromString(" ")
+
+    def shingle(arr: ArrayData): ArrayData = {
+      val len = if (arr == null) 0 else arr.numElements()
+      val toks = Array.tabulate(len)(i => if (arr.isNullAt(i)) null else arr.getUTF8String(i))
+      new GenericArrayData(Array.tabulate[Any](math.max(len - n + 1, 0))(s =>
+        UTF8String.concatWs(Space, toks.slice(s, s + n): _*)))
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): WordShingles =
+      copy(child = newChild)
+  }
+
   /** 32-bit SimHash over the DISTINCT md5 codes of a string array
-   * (single pass; twin of TextFunctions.simhash ∘ tokenCodes).
+   * (single pass; twin of the composed simhash ∘ tokenCodes).
    * Implements doGenCode (child-value call into the one-pass evaluator)
    * so projections using it stay inside whole-stage codegen instead of
    * taking the CodegenFallback full-row detour. */
@@ -86,8 +125,8 @@ object HashExpressions {
   }
 
   /** k-permutation MinHash signature over the DISTINCT md5 codes of a
-   * string array (single pass; twin of TextFunctions.minhashSignature ∘
-   * tokenCodes). Returns null for empty arrays (callers filter empties;
+   * string array (single pass; twin of the composed minhashSignature ∘
+   * tokenCodes). Returns null for empty arrays (callers drop null signatures;
    * the Column twin yields an array of nulls there). */
   case class ShingleMinHash(child: Expression, k: Int)
       extends UnaryExpression {
@@ -192,8 +231,8 @@ object HashExpressions {
    * string array, in ONE pass: each token's md5 code is computed once,
    * then each next window hash is an O(1) rolling update
    * (h·131 − c_out·131^(w−1) + c_in, all mod 2^31−1) — O(n) total versus
-   * the O(n·w) per-window refold of the Column twin
-   * (TextFunctions.windowHashes; bit-identical, specs assert it). Stride
+   * the O(n·w) per-window refold of the composed Column twin (kept in
+   * the specs as the equivalence oracle; bit-identical). Stride
    * 1 is semantic, not a cost choice: only an every-position grid
    * guarantees two unaligned copies of a shared token run >= w hash the
    * same window. Hash family = the P11 fingerprint fold, so values stay
@@ -1041,7 +1080,7 @@ object HashExpressions {
     // Null-gram contract: null elements are SKIPPED — excluded from both
     // the ratio sum and the gram count n. (The Column-composed twin
     // dsirScoreHof would instead null-poison the whole struct; null gram
-    // elements are OUT OF CONTRACT — TF.shingles never emits them — and
+    // elements are OUT OF CONTRACT — word_shingles never emits them — and
     // the bit-identity pin only covers null-free arrays. r10 advice: the
     // old code counted nulls in n but not s, a third, undocumented
     // behavior.)
@@ -1174,6 +1213,9 @@ object HashExpressions {
 
   def windowHashes(toks: Column, w: Int): Column =
     Bridge.column(RollingWindowHashes(Bridge.expression(toks), w))
+
+  def wordShingles(toks: Column, n: Int): Column =
+    Bridge.column(WordShingles(Bridge.expression(toks), n))
 
   def bpeEncode(words: Column, merges: Seq[(String, String)]): Column =
     Bridge.column(BpeEncode(Bridge.expression(words), merges))

@@ -5,13 +5,16 @@ import org.apache.spark.sql.functions._
 
 /**
  * Text primitives for the LLM-data-pipeline operators (SURVEY.md §2 P1-P11).
- * Everything is a native Column expression (codegen-friendly, no UDFs) and
- * has an exact DuckDB-SQL twin so dedup/fingerprint results are
- * oracle-checkable bit-for-bit:
+ * Everything is a built-in Column expression (no UDFs) with an exact
+ * DuckDB-SQL twin, so dedup/fingerprint results are oracle-checkable
+ * bit-for-bit. Word n-grams are not composed here: they are the one
+ * native `word_shingles` expression (HashExpressions.wordShingles),
+ * which reads the token array once instead of re-splitting the text
+ * per n-gram.
  *
  *  - token code: first 8 hex chars of md5 parsed as an integer — md5 is
  *    identical across engines, unlike engine-specific hash().
- *  - all folds (fingerprints, simhash) run in deterministic array order.
+ *  - all folds (fingerprints) run in deterministic array order.
  */
 object TextFunctions {
 
@@ -29,58 +32,11 @@ object TextFunctions {
   def tokenCodes(toks: Column): Column =
     transform(toks, tokenCode(_))
 
-  /** n-gram shingles (space-joined), empty array when too few tokens. */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(typedLit(Seq.empty[String]))
-
-  /**
-   * MinHash signature over DISTINCT token codes: k permutations
-   * h_i(x) = (a_i * x + b_i) mod (2^31-1), deterministic (a_i, b_i) from a
-   * fixed seed table. Returns array<long> of length k.
-   */
-  def minhashSignature(codes: Column, k: Int): Column = {
-    val d = array_distinct(codes)
-    val sigs = (0 until k).map { i =>
-      val a = 1000003L + 2L * i // odd multipliers
-      val b = 12345L + 97L * i
-      array_min(transform(d, x => (lit(a) * x + lit(b)) % lit(HashMod)))
-    }
-    array(sigs: _*)
-  }
-
-  /**
-   * 32-bit SimHash over DISTINCT token codes: bit j of the result is set
-   * iff the majority of tokens have bit j set (ties count as set).
-   */
-  def simhash(codes: Column): Column = {
-    val d = array_distinct(codes)
-    (0 until 32).map { j =>
-      val votes = aggregate(d, lit(0L),
-        (acc, c) => acc + when(shiftright(c, j) % 2 === 1, 1L).otherwise(-1L))
-      when(votes >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Polynomial rolling fingerprint (Horner fold, base 131, mod 2^31-1)
    * over token codes in document order. */
   def rollingFingerprint(codes: Column): Column =
     aggregate(codes, lit(0L),
       (acc, c) => (acc * 131L + (c % lit(HashMod))) % lit(HashMod))
-
-  /** The P11 fingerprint fold applied to every `w`-token window (stride
-   * 1): one hash per window start, empty array when fewer than `w`
-   * tokens. Composable twin of HashExpressions.windowHashes (which
-   * computes the same values in one O(n) rolling pass — this refolds
-   * O(n·w) with interpreted lambdas and exists for oracle-portability
-   * and equivalence specs). */
-  def windowHashes(toks: Column, w: Int): Column =
-    when(size(toks) >= w,
-      transform(sequence(lit(0), size(toks) - w),
-        i => rollingFingerprint(tokenCodes(slice(toks, i + 1, lit(w))))))
-      .otherwise(typedLit(Seq.empty[Long]))
 
   /** Per-language stopword hit counts + argmax prediction (alphabetical
    * tie-break). `stopwords` maps language -> word list. */

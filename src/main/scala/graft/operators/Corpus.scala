@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{HashExpressions => HE, TextFunctions => TF}
 import graft.operators.TextAnalysis.BpeTokenPattern
 
 /**
@@ -590,7 +590,7 @@ object Corpus {
    * uniform groupBy over at most `buckets` keys. */
   def dsirTrain(docs: DataFrame, isTarget: Column, buckets: Int = 4096,
                 textCol: String = "text"): DsirModel = {
-    val grams = TF.shingles(TF.tokens(col(textCol)), 2)
+    val grams = HE.wordShingles(TF.tokens(col(textCol)), 2)
     val counts = docs
       .select(isTarget.cast("boolean").as("tgt"), explode(grams).as("g"))
       .select(col("tgt"), pmod(TF.tokenCode(col("g")), lit(buckets.toLong)).as("b"))
@@ -626,8 +626,8 @@ object Corpus {
   def dsirApply(docs: DataFrame, model: DsirModel,
                 hashMod: Long = 1000003L, acceptScale: Double = 0.25,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val grams = TF.shingles(TF.tokens(col(textCol)), 2)
-    val scored = graft.functions.HashExpressions.dsirScore(grams,
+    val grams = HE.wordShingles(TF.tokens(col(textCol)), 2)
+    val scored = HE.dsirScore(grams,
       model.ct.toArray, model.cr.toArray, model.tr, model.tt)
     docs
       .where(size(TF.tokens(col(textCol))) >= 2)
@@ -869,8 +869,8 @@ object Corpus {
   def classifierFilter(docs: DataFrame, model: DsirModel,
                        threshold: Double = 1.0, textCol: String = "text",
                        idCol: String = "doc_id"): DataFrame = {
-    val grams = TF.shingles(TF.tokens(col(textCol)), 2)
-    val scored = graft.functions.HashExpressions.dsirScore(grams,
+    val grams = HE.wordShingles(TF.tokens(col(textCol)), 2)
+    val scored = HE.dsirScore(grams,
       model.ct.toArray, model.cr.toArray, model.tr, model.tt)
     docs
       .where(size(TF.tokens(col(textCol))) >= 2)
@@ -1013,7 +1013,6 @@ object Corpus {
                 textCol: String = "text", idCol: String = "doc_id")
       : DataFrame = {
     require(w >= 1 && divisor >= 1, "window and divisor must be positive")
-    import graft.functions.{HashExpressions => HE, TextFunctions => TF}
     val base = docs.select(col(idCol).as("id"),
       TF.tokens(col(textCol)).as("t"))
       .withColumn("wh", HE.windowHashes(col("t"), w))
@@ -1355,13 +1354,8 @@ object Corpus {
                          idCol: String = "doc_id", textCol: String = "text")
       : DataFrame = {
     require(n >= 1)
-    def grams(c: Column): Column = {
-      val w = filter(split(lower(c), "\\s+"), t => t =!= "")
-      when(size(w) >= n,
-        array_distinct(transform(sequence(lit(0), size(w) - lit(n)),
-          i => array_join(slice(w, i + lit(1), lit(n)), " "))))
-        .otherwise(array().cast("array<string>"))
-    }
+    def grams(c: Column): Column =
+      array_distinct(HE.wordShingles(filter(split(lower(c), "\\s+"), t => t =!= ""), n))
     val evalGrams = eval
       .select(explode(grams(col(textCol))).as("gram")).distinct()
     // the caller's id type rides both sides of the final join
@@ -1413,13 +1407,7 @@ object Corpus {
                         textCol: String = "text"): DataFrame = {
     require(n >= 1 && pad >= 0)
     def words(c: Column): Column = filter(split(c, "\\s+"), t => t =!= "")
-    def gramsOf(ws: Column): Column = {
-      val lw = transform(ws, w => lower(w))
-      when(size(lw) >= n,
-        transform(sequence(lit(0), size(lw) - lit(n)),
-          i => array_join(slice(lw, i + lit(1), lit(n)), " ")))
-        .otherwise(array().cast("array<string>"))
-    }
+    def gramsOf(ws: Column): Column = HE.wordShingles(transform(ws, w => lower(w)), n)
     val evalGrams = eval
       .select(explode(array_distinct(gramsOf(words(col(textCol)))))
         .as("gram")).distinct()

@@ -248,36 +248,23 @@ object Dedup {
                          bands: Int = 4, shingleN: Int = 3, minAgree: Int = 8,
                          textCol: String = "text",
                          idCol: String = "doc_id"): DataFrame = {
-    val r = k / bands
-    require(bands * r == k, s"bands ($bands) must divide k ($k)")
-    def sigsOf(df: DataFrame): DataFrame =
-      shingleSets(df, shingleN, textCol, idCol)
-        .where(size(col("shingles")) > 0)
-        .select(col("id"), HE.shingleMinhash(col("shingles"), k).as("sig"))
-    def bandedOf(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-        .withColumn("band_hash", md5(concat_ws(",",
-          transform(slice(col("sig"), col("band") * r + 1, lit(r)),
-            _.cast("string")))))
-    def agree(a: Column, b: Column): Column =
-      size(filter(sequence(lit(0), lit(k - 1)),
-        i => element_at(a, i + 1) === element_at(b, i + 1)))
+    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     // corpus side has ONE consumer — no materialization needed; the
     // batch side feeds two joins, so its signatures persist with stats.
-    val cb = bandedOf(sigsOf(corpus))
-    val bb = bandedOf(SelfJoinMaterialize(sigsOf(batch)))
+    val cb = banded(signatures(corpus, k, shingleN, textCol, idCol), k, bands)
+    val bb = banded(SelfJoinMaterialize(
+      signatures(batch, k, shingleN, textCol, idCol)), k, bands)
     val corpusHit = bb
       .join(cb.select(col("band"), col("band_hash"), col("sig").as("csig")),
         Seq("band", "band_hash"))
-      .where(agree(col("sig"), col("csig")) >= minAgree)
+      .where(agreement(col("sig"), col("csig"), k) >= minAgree)
       .select("id").distinct().withColumn("chit", lit(true))
     val batchHit = bb.select(col("band"), col("band_hash"),
       col("id").as("id_b"), col("sig").as("sig_b"))
       .join(bb.select(col("band"), col("band_hash"),
         col("id").as("id_a"), col("sig").as("sig_a")), Seq("band", "band_hash"))
       .where(col("id_a") < col("id_b") &&
-        agree(col("sig_a"), col("sig_b")) >= minAgree)
+        agreement(col("sig_a"), col("sig_b"), k) >= minAgree)
       .select(col("id_b").as("id")).distinct().withColumn("bhit", lit(true))
     batch.select(col(idCol).as("id"))
       .join(corpusHit, Seq("id"), "left")
@@ -292,7 +279,30 @@ object Dedup {
    * whitespace tokens. */
   def shingleSets(docs: DataFrame, n: Int, textCol: String, idCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
-      array_distinct(TF.shingles(TF.tokens(col(textCol)), n)).as("shingles"))
+      array_distinct(HE.wordShingles(TF.tokens(col(textCol)), n)).as("shingles"))
+
+  /** (id, sig): the k-permutation MinHash of each document's distinct
+   * shingles, null for a document too short to shingle. */
+  private def signatures(docs: DataFrame, k: Int, shingleN: Int, textCol: String,
+                         idCol: String): DataFrame =
+    shingleSets(docs, shingleN, textCol, idCol)
+      .select(col("id"), HE.shingleMinhash(col("shingles"), k).as("sig"))
+
+  /** One (id, sig, band, band_hash) row per band of each signature. A
+   * null signature explodes to no rows: a Filter testing emptiness would
+   * be pushed below the projection and shingle every document again. */
+  private def banded(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
+    val r = k / bands
+    sigs.select(col("id"), col("sig"), explode(when(col("sig").isNotNull,
+      sequence(lit(0), lit(bands - 1)))).as("band"))
+      .withColumn("band_hash", md5(concat_ws(",",
+        transform(slice(col("sig"), col("band") * r + 1, lit(r)), _.cast("string")))))
+  }
+
+  /** How many of the k signature components two signatures share. */
+  private def agreement(a: Column, b: Column, k: Int): Column =
+    size(filter(sequence(lit(0), lit(k - 1)),
+      i => element_at(a, i + 1) === element_at(b, i + 1)))
 
   /**
    * Cross-document PARAGRAPH dedup (the MassiveText/RefinedWeb-style
@@ -386,37 +396,23 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, k: Int = 16, bands: Int = 4,
                       shingleN: Int = 3, minAgree: Int = 8,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val r = k / bands
-    require(bands * r == k, s"bands ($bands) must divide k ($k)")
+    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     // Materialize the signatures: the minhash expressions would otherwise
     // be re-inlined (and recomputed) into every band reference and both
     // self-join sides. Banding itself is a cheap slice+md5 replay.
-    val sigs = SelfJoinMaterialize(
-      shingleSets(docs, shingleN, textCol, idCol)
-        .where(size(col("shingles")) > 0)
-        .select(col("id"),
-          HE.shingleMinhash(col("shingles"), k).as("sig")))
-
-    // Banded explode: one row per (doc, band), keyed by the band's hash.
-    val banded = sigs.select(col("id"), col("sig"),
-      explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .withColumn("band_hash",
-        md5(concat_ws(",",
-          transform(slice(col("sig"), col("band") * r + 1, lit(r)), _.cast("string")))))
-
-    val left = banded.select(col("band"), col("band_hash"),
+    val rows = banded(SelfJoinMaterialize(
+      signatures(docs, k, shingleN, textCol, idCol)), k, bands)
+    val left = rows.select(col("band"), col("band_hash"),
       col("id").as("id_a"), col("sig").as("sig_a"))
-    val right = banded.select(col("band"), col("band_hash"),
+    val right = rows.select(col("band"), col("band_hash"),
       col("id").as("id_b"), col("sig").as("sig_b"))
-    val agree = size(filter(sequence(lit(0), lit(k - 1)),
-      i => element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1)))
 
     left.join(right, Seq("band", "band_hash"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_bands"),
         first(col("sig_a")).as("sig_a"), first(col("sig_b")).as("sig_b"))
-      .withColumn("n_agree", agree.cast("long"))
+      .withColumn("n_agree", agreement(col("sig_a"), col("sig_b"), k).cast("long"))
       .where(col("n_agree") >= minAgree)
       .select("id_a", "id_b", "n_bands", "n_agree")
   }
@@ -463,9 +459,11 @@ object Dedup {
    * docs far. */
   def simhashes(docs: DataFrame, shingleN: Int = 3, textCol: String = "text",
                 idCol: String = "doc_id"): DataFrame =
+    // docs too short to shingle have no hash; the explode drops them
+    // without a Filter that pushdown would fill with a second shingling
     shingleSets(docs, shingleN, textCol, idCol)
-      .where(size(col("shingles")) > 0) // docs too short to shingle have no hash
-      .select(col("id"), HE.shingleSimhash(col("shingles")).as("simhash"))
+      .select(col("id"), explode(when(size(col("shingles")) > 0,
+        array(HE.shingleSimhash(col("shingles"))))).as("simhash"))
 
   /**
    * SimHash near-duplicate pairs within `maxHamming` bit flips, via 4-band

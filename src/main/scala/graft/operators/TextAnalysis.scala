@@ -599,8 +599,8 @@ object TextAnalysis {
     // identical to three per-order trainings — this only removes two
     // corpus scans and two shuffles from the artifact build.
     val cnt = SelfJoinMaterialize(
-      docs.select(explode(concat(toks, TF.shingles(toks, 2),
-          TF.shingles(toks, 3))).as("g"))
+      docs.select(explode(concat(toks, HE.wordShingles(toks, 2),
+          HE.wordShingles(toks, 3))).as("g"))
         .groupBy("g").agg(count(lit(1)).as("c"))
         .withColumn("ord",
           (length(col("g")) - length(replace(col("g"), lit(" "), lit("")))) + 1))
@@ -655,8 +655,8 @@ object TextAnalysis {
                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val toks = TF.tokens(col(textCol))
     val cnt = SelfJoinMaterialize(
-      docs.select(explode(concat(toks, TF.shingles(toks, 2),
-          TF.shingles(toks, 3))).as("g"))
+      docs.select(explode(concat(toks, HE.wordShingles(toks, 2),
+          HE.wordShingles(toks, 3))).as("g"))
         .groupBy("g").agg(count(lit(1)).as("c"))
         .withColumn("ord",
           (length(col("g")) - length(replace(col("g"), lit(" "), lit("")))) + 1))
@@ -946,7 +946,7 @@ object TextAnalysis {
   private def gramScore(docs: DataFrame, n: Int, vocabSize: Int,
                         textCol: String, idCol: String,
                         countName: String): DataFrame = {
-    val grams = TF.shingles(TF.tokens(col(textCol)), n)
+    val grams = HE.wordShingles(TF.tokens(col(textCol)), n)
     val cnt = SelfJoinMaterialize(
       docs.select(explode(grams).as("g"))
         .groupBy("g").agg(count(lit(1)).as("c")))
@@ -988,7 +988,7 @@ object TextAnalysis {
     docs
       .where(size(TF.tokens(col(textCol))) >= n)
       .select(col(idCol).as("id"),
-        TF.shingles(TF.tokens(col(textCol)), n).as("sh"))
+        HE.wordShingles(TF.tokens(col(textCol)), n).as("sh"))
       .select(col("id"), size(col("sh")).cast("long").as("n_shingles"),
         HE.maxMultiplicity(col("sh")).as("top_count"))
       .select(col("id"), col("n_shingles"), col("top_count"),

@@ -153,7 +153,7 @@ class CorpusSpec extends SparkSpec {
       (i, s"assorted text body number ${i % 13} with words ${i % 7} here"))
       .toDF("doc_id", "text")
     val model = Corpus.dsirTrain(fixture, col("doc_id") % 2 === 0, buckets = 256)
-    val grams = graft.functions.TextFunctions.shingles(
+    val grams = graft.functions.HashExpressions.wordShingles(
       graft.functions.TextFunctions.tokens(col("text")), 2)
     val native = fixture.select(col("doc_id"),
       graft.functions.HashExpressions.dsirScore(grams,

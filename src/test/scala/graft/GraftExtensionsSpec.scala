@@ -36,7 +36,7 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT rolling_window_hashes(array('a', 'b', 'c'), 2) AS h")
       .collect()(0).getSeq[Long](0)
     val whColumn = spark.range(1).select(
-      graft.functions.TextFunctions.windowHashes(
+      ComposedText.windowHashes(
         typedLit(Seq("a", "b", "c")), 2).as("h")).collect()(0).getSeq[Long](0)
     assert(wh.length == 2 && wh == whColumn)
   }

@@ -192,7 +192,7 @@ class GraphDeltaSpec extends SparkSpec {
       .filter(k => after(k) == before(k))
     assert(carried.size == stats.filesCarried,
       s"$stats vs physically-identical ${carried.size}")
-    assert(stats.bytesCarried == carried.map(k => before(k)._1).sum)
+    assert(stats.bytesCarried == carried.toSeq.map(k => before(k)._1).sum)
     // and the swapped table IS the post-delta corpus: frame-equal to a
     // from-scratch build (stale carried row or lost insert diverges)
     val s = scratch(touchSubclass = false)

@@ -19,19 +19,19 @@ class HashExpressionsSpec extends SparkSpec {
     (3L, "unique words only appear once here today friends")
   ).toDF("doc_id", "text")
     .select(col("doc_id"),
-      array_distinct(TF.shingles(TF.tokens(col("text")), 2)).as("shingles"))
+      array_distinct(HE.wordShingles(TF.tokens(col("text")), 2)).as("shingles"))
 
   test("native simhash == Column-composed simhash") {
     val both = docs.select(col("doc_id"),
       HE.shingleSimhash(col("shingles")).as("native"),
-      TF.simhash(TF.tokenCodes(col("shingles"))).as("composed")).collect()
+      ComposedText.simhash(TF.tokenCodes(col("shingles"))).as("composed")).collect()
     both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"doc ${r.getLong(0)}"))
   }
 
   test("native minhash == Column-composed minhash") {
     val both = docs.select(col("doc_id"),
       HE.shingleMinhash(col("shingles"), 16).as("native"),
-      TF.minhashSignature(TF.tokenCodes(col("shingles")), 16).as("composed"))
+      ComposedText.minhashSignature(TF.tokenCodes(col("shingles")), 16).as("composed"))
       .collect()
     both.foreach { r =>
       assert(r.getSeq[Long](1).toList == r.getSeq[Long](2).toList,
@@ -66,9 +66,9 @@ class HashExpressionsSpec extends SparkSpec {
     // simhash + minhash + max multiplicity in one pass
     val h = df.select(col("doc_id"),
       HE.shingleSimhash(col("toks")).as("ns"),
-      TF.simhash(TF.tokenCodes(col("toks"))).as("cs"),
+      ComposedText.simhash(TF.tokenCodes(col("toks"))).as("cs"),
       HE.shingleMinhash(col("toks"), 8).as("nm"),
-      TF.minhashSignature(TF.tokenCodes(col("toks")), 8).as("cm"),
+      ComposedText.minhashSignature(TF.tokenCodes(col("toks")), 8).as("cm"),
       HE.maxMultiplicity(col("toks")).as("mx"),
       size(col("toks")).as("n")).collect()
     val byId = rows.toMap
@@ -85,7 +85,7 @@ class HashExpressionsSpec extends SparkSpec {
     Seq(1, 2, 5, 20).foreach { w =>
       val wh = df.select(col("doc_id"),
         HE.windowHashes(col("toks"), w).as("nw"),
-        TF.windowHashes(col("toks"), w).as("cw"),
+        ComposedText.windowHashes(col("toks"), w).as("cw"),
         size(col("toks")).as("n")).collect()
       wh.foreach { r =>
         assert(r.getSeq[Long](1) == r.getSeq[Long](2),
@@ -108,7 +108,7 @@ class HashExpressionsSpec extends SparkSpec {
     Seq(1, 3, 5).foreach { w =>
       val both = texts.select(col("doc_id"),
         HE.windowHashes(col("t"), w).as("native"),
-        TF.windowHashes(col("t"), w).as("composed")).collect()
+        ComposedText.windowHashes(col("t"), w).as("composed")).collect()
       both.foreach { r =>
         assert(r.getSeq[Long](1).toList == r.getSeq[Long](2).toList,
           s"doc ${r.getLong(0)} w=$w")

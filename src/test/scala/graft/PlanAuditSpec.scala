@@ -241,7 +241,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("g09/g10/g11 shapes: broadcast-only one-hops, edge table never shuffled") {
+  test("shingling runs once per document: no emptiness filter re-shingles") {
+    // A Filter on the shingle count (or on a value computed from the
+    // shingles) is pushed below the projection and copies the whole
+    // shingle expression into it; the dedup operators test emptiness in
+    // an explode instead. Cached signatures count once however many
+    // InMemoryRelation nodes read them.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def shinglings(df: DataFrame): Int = {
+      val opt = df.queryExecution.optimizedPlan
+      val cached = opt.collect { case r: InMemoryRelation => r.cacheBuilder }.distinct
+        .map(_.cachedPlan.map(_.simpleString(1000000)).mkString("\n"))
+      val dump = (opt.map(_.simpleString(1000000)) ++ cached).mkString("\n")
+      "word_shingles\\(".r.findAllIn(dump).size
+    }
+    import spark.implicits._
+    // an RDD source, not a local relation the optimizer would evaluate away
+    val docs = spark.sparkContext.parallelize(
+      Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, "short")), 1).toDF("doc_id", "text")
+    val pairs = Dedup.minhashLshPairs(docs, k = 8, bands = 4, minAgree = 1)
+    assert(shinglings(pairs) == 1, pairs.queryExecution.optimizedPlan)
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+    val sh = Dedup.simhashes(docs)
+    assert(shinglings(sh) == 1, sh.queryExecution.optimizedPlan)
+    assert(sh.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    val inc = Dedup.incrementalNearDup(docs, docs.where(col("doc_id") > 1), k = 8)
+    assert(shinglings(inc) == 2, inc.queryExecution.optimizedPlan) // corpus + batch
+  }
+
+  test("g09/g10/g11 shapes: literal-probe one-hops, no join, edge table never shuffled") {
     // The r5/r6 benches recorded these three keys (registry-adjacent in
     // run order) at 3-6x their r4 mins with no code change to their
     // paths — consistent with an external load window. Pin the plan
@@ -263,11 +291,16 @@ class PlanAuditSpec extends SparkSpec {
     for ((name, qg) <- shapes) {
       val res = OneHop.answer(spark, graph, ont, qg,
         closure = None, expandSubclasses = false)
-      val p = plan(res.matches)
-      assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-        s"$name lost its broadcast:\n$p")
-      assert(!p.contains("SortMergeJoin"), s"$name edge table got shuffled:\n$p")
+      // the query part only, as in the g08 case: the cached edge table's
+      // build plan (its denorm broadcast joins) renders inside
+      // InMemoryRelation and says nothing about the lookup
+      val p = plan(res.matches).split("InMemoryTableScan").head
+      assert(!p.contains("Join"), s"$name literal path gained a join:\n$p")
+      assert(!p.contains("Exchange"), s"$name edge table got shuffled:\n$p")
       assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+      // isin: one id folds to `=`, 11+ ids become INSET
+      assert("""set_probe\(|\sIN \(|\sINSET |\s= \w+:\d""".r.findFirstIn(p).nonEmpty,
+        s"$name: no literal id probe on the edge scan:\n$p")
     }
   }
 
@@ -820,6 +853,33 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Generate"), p)
   }
 
+  /** Tokenizer work inside a higher-order function's lambda body that
+   * reads something other than the lambda's own variables: a split,
+   * regex, lower-case or trim of an outer column, re-run once per array
+   * element (the O(tokens²) composed shingles re-split the document per
+   * n-gram this way). Variables of lambdas nested in the body count as
+   * the lambda's own; each nested lambda is checked on its own too. */
+  private def lambdaTokenizers(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    def tokenizer(e: Expression): Boolean = e match {
+      case _: StringSplit | _: Lower => true
+      case _ => val n = e.getClass.getSimpleName
+        n.startsWith("RegExp") || n.startsWith("StringTrim")
+    }
+    plan.flatMap(_.expressions).flatMap(_.collect { case l: LambdaFunction =>
+      val own = l.collect { case f: LambdaFunction => f.arguments }.flatten
+        .map(_.exprId).toSet
+      l.function.collect {
+        case e if tokenizer(e) && e.exists {
+          case _: Attribute => true
+          case v: NamedLambdaVariable => !own(v.exprId)
+          case _ => false
+        } => s"${e.prettyName} in ${l.toString.take(240)}"
+      }
+    }.flatten)
+  }
+
   // ------------------------------------------------------------------
   // BOARD-WIDE SWEEP — the generalization of the p120 lesson. An
   // expensive derived column that fans out downstream gets inlined by
@@ -830,7 +890,8 @@ class PlanAuditSpec extends SparkSpec {
   // before they burn a benchmark: the plan string balloons, or a
   // native expression name appears many times. This sweep walks every
   // registered key and pins both, so the next blowup fails a spec
-  // instead of shipping.
+  // instead of shipping. It also fails on a lambda that re-tokenizes
+  // an outer column per element (lambdaTokenizers).
   //
   // Node dump uses simpleString(1e6) per node: plain toString
   // truncates long expression lists at spark.sql.debug.maxToStringFields
@@ -841,7 +902,7 @@ class PlanAuditSpec extends SparkSpec {
       "max_multiplicity", "rolling_window_hashes", "bpe_encode",
       "bpe_encode_fast", "vocab_score", "backoff_score", "interp_score",
       "dsir_score", "langid_vote", "map_probe", "set_probe",
-      "decode_html_entities",
+      "decode_html_entities", "word_shingles",
       // r21: the URL canonicalizer as ONE node — the sweep now pins the
       // whole family's fan-out (VERDICT r20 #4 done-criterion: <= 5
       // copies family-wide; measured max is p90's 4 = corpus canonical +
@@ -903,6 +964,10 @@ class PlanAuditSpec extends SparkSpec {
           report += s"$name: $nat evaluates $c times (> $cap) — " +
             "an inlined alias is re-evaluating per reference; add an " +
             "explode barrier (langIdApply's dodge) or exempt with a reason"
+      }
+      lambdaTokenizers(df.queryExecution.optimizedPlan).distinct.foreach { e =>
+        report += s"$name: a lambda body re-runs $e once per element — " +
+          "tokenize once, outside the lambda"
       }
     }
     val top = sizes.sorted.reverse.take(10)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{HashExpressions => HE, TextFunctions => TF}
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.functions._
 
@@ -17,10 +17,10 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("shingles: n-grams in order; short docs give empty array") {
-    val s = one("a b c d").select(TF.shingles(TF.tokens(col("text")), 3))
+    val s = one("a b c d").select(HE.wordShingles(TF.tokens(col("text")), 3))
       .as[Seq[String]].head()
     assert(s == Seq("a b c", "b c d"))
-    val empty = one("a b").select(TF.shingles(TF.tokens(col("text")), 3))
+    val empty = one("a b").select(HE.wordShingles(TF.tokens(col("text")), 3))
       .as[Seq[String]].head()
     assert(empty.isEmpty)
   }
@@ -36,16 +36,16 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("minhash signature: component-wise <= any single element's hash") {
     val sig = one("a b c d e f").select(
-      TF.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
+      ComposedText.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
       .as[Seq[Long]].head()
     assert(sig.length == 8)
     assert(sig.forall(v => v >= 0 && v < TF.HashMod))
   }
 
   test("minhash of identical token sets is identical regardless of order") {
-    val a = one("a b c").select(TF.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
+    val a = one("a b c").select(ComposedText.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
       .as[Seq[Long]].head()
-    val b = one("c a b").select(TF.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
+    val b = one("c a b").select(ComposedText.minhashSignature(TF.tokenCodes(TF.tokens(col("text"))), 8))
       .as[Seq[Long]].head()
     assert(a == b)
   }
