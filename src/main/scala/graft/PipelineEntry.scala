@@ -211,6 +211,21 @@ object PipelineEntry {
   private def embs(s: SparkSession, dir: String): DataFrame =
     spread(s.read.parquet(s"$dir/embeddings.parquet"))
 
+  /** The one fixture payload builder: `build` turns each document's
+   * (doc_id, text) into (id, payload) rows, per partition, lazily. */
+  private[graft] def payloads(docs: DataFrame)(
+      build: (Long, String) => IterableOnce[(Long, Array[Byte])]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.flatMap(build.tupled)).toDF("id", "payload")
+  }
+
+  /** A near-dup fixture's variants of doc `d`: the original 0, plus 1
+   * when `a` divides d and 2 when `b` does. */
+  private def variants(d: Long, a: Int, b: Int): Seq[Int] =
+    Seq(0) ++ (if (d % a == 0) Seq(1) else Nil) ++ (if (d % b == 0) Seq(2) else Nil)
+
   /** Shared messy-URL fixture for the web keys (p78 batch, p81
    * streaming — SAME oracle): every 3 consecutive docs are the same
    * page crawled 3 ways (https + mixed-case host; http + www + :80 +
@@ -1150,15 +1165,10 @@ object PipelineEntry {
     // p74: codec/hash/banding break = missing rows, over-eager hash =
     // extra rows). Ids are doc_id*10+variant.
     "p76_audio_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val clips = docs(s, dir).select(col("doc_id")).as[Long]
-        .flatMap { d =>
-          val variants = Seq(0) ++
-            (if (d % 4 == 0) Seq(1) else Nil) ++
-            (if (d % 6 == 0) Seq(2) else Nil)
-          variants.map(v => (d * 10 + v, Multimodal.envelopeWav(d, v)))
-        }.toDF("id", "payload")
-      Dedup.hammingPairs64(Multimodal.audioEnvelopeHashes(s, clips))
+      val clips = payloads(docs(s, dir)) { (d, _) =>
+        variants(d, 4, 6).map(v => (d * 10 + v, Multimodal.envelopeWav(d, v)))
+      }
+      Dedup.hammingPairs64(Multimodal.audioEnvelopeHashes(clips))
         .orderBy("id_a", "id_b")
     }),
 
@@ -1172,16 +1182,11 @@ object PipelineEntry {
     // (video corpora are sparser than image ones, and each payload
     // costs NeardupVideoFrames codec passes). Ids are doc_id*10+variant.
     "p77_video_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val videos = docs(s, dir).select(col("doc_id")).as[Long]
-        .filter(_ % 5 == 0)
-        .flatMap { d =>
-          val variants = Seq(0) ++
-            (if (d % 10 == 0) Seq(1) else Nil) ++
-            (if (d % 15 == 0) Seq(2) else Nil)
-          variants.map(v => (d * 10 + v, Multimodal.neardupAvi(d, v)))
-        }.toDF("id", "payload")
-      Dedup.hammingPairs64(Multimodal.videoFingerprints(s, videos))
+      val videos = payloads(docs(s, dir)) { (d, _) =>
+        if (d % 5 != 0) Nil
+        else variants(d, 10, 15).map(v => (d * 10 + v, Multimodal.neardupAvi(d, v)))
+      }
+      Dedup.hammingPairs64(Multimodal.videoFingerprints(videos))
         .orderBy("id_a", "id_b")
     }),
 
@@ -1250,15 +1255,10 @@ object PipelineEntry {
     // stbl box order) of identical sample bytes — fingerprints match
     // ONLY if extent resolution is exact.
     "p142_mp4_keyframe_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val videos = docs(s, dir).select(col("doc_id")).as[Long]
-        .filter(_ % 5 == 0)
-        .flatMap { d =>
-          val variants = Seq(0) ++
-            (if (d % 10 == 0) Seq(1) else Nil) ++
-            (if (d % 15 == 0) Seq(2) else Nil)
-          variants.map(v => (d * 10 + v, Mp4.neardupMp4(d, v)))
-        }.toDF("id", "payload")
+      val videos = payloads(docs(s, dir)) { (d, _) =>
+        if (d % 5 != 0) Nil
+        else variants(d, 10, 15).map(v => (d * 10 + v, Mp4.neardupMp4(d, v)))
+      }
       Dedup.hammingPairs64(Mp4.keyframeFingerprints(videos))
         .orderBy("id_a", "id_b")
     }),
@@ -2212,7 +2212,7 @@ object PipelineEntry {
       }).toDF("doc_id", "modality", "payload", "width", "height", "format")
         .select(col("doc_id"), col("modality"), col("payload"),
           struct(col("width"), col("height"), col("format")).as("meta"))
-      Multimodal.decodeBatched(s, media).toDF()
+      Multimodal.decodeBatched(media).toDF()
         .select(col("doc_id"), col("width"), col("height"),
           col("n_pixels").as("n_frames"))
         .orderBy("doc_id")
@@ -2231,15 +2231,10 @@ object PipelineEntry {
     // missing rows and an over-eager hash (cross-doc collisions) as
     // extra rows. Ids are doc_id*10+variant.
     "p74_image_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val images = docs(s, dir).select(col("doc_id")).as[Long]
-        .flatMap { d =>
-          val variants = Seq(0) ++
-            (if (d % 5 == 0) Seq(1) else Nil) ++
-            (if (d % 7 == 0) Seq(2) else Nil)
-          variants.map(v => (d * 10 + v, Multimodal.dhashImagePng(d, v)))
-        }.toDF("id", "payload")
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s, images))
+      val images = payloads(docs(s, dir)) { (d, _) =>
+        variants(d, 5, 7).map(v => (d * 10 + v, Multimodal.dhashImagePng(d, v)))
+      }
+      Dedup.hammingPairs64(Multimodal.imageDHashes(images))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2255,16 +2250,11 @@ object PipelineEntry {
     // destructive). Scale shape inherits both parents': one task per
     // segment file, payloads never cross a shuffle.
     "p111_warc_binary" -> ((s, dir) => {
-      import s.implicits._
       import graft.sources.WarcSource
       val out = Spool.fresh("warc-binary", dir)
-      val images = docs(s, dir).select(col("doc_id")).as[Long]
-        .flatMap { d =>
-          val variants = Seq(0) ++
-            (if (d % 5 == 0) Seq(1) else Nil) ++
-            (if (d % 7 == 0) Seq(2) else Nil)
-          variants.map(v => (d * 10 + v, Multimodal.dhashImagePng(d, v)))
-        }.toDF("id", "payload")
+      val images = payloads(docs(s, dir)) { (d, _) =>
+        variants(d, 5, 7).map(v => (d * 10 + v, Multimodal.dhashImagePng(d, v)))
+      }
       WarcSource.export(images, out, docsPerFile = 100, idCol = "id",
         bytesCol = Some("payload"), mime = "image/png")
       val recovered = WarcSource.records(s, out)
@@ -2273,7 +2263,7 @@ object PipelineEntry {
           regexp_extract(col("record_id"), ":doc:(\\d+)>$", 1)
             .cast("long").as("id"),
           col("body_bytes").as("payload"))
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s, recovered))
+      Dedup.hammingPairs64(Multimodal.imageDHashes(recovered))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2483,22 +2473,18 @@ object PipelineEntry {
     // mapPartitions where the bytes land; one task per segment file in
     // between; nothing crosses a shuffle.
     "p118_pdf_extract" -> ((s, dir) => {
-      import s.implicits._
       import graft.sources.WarcSource
       val out = Spool.fresh("warc-pdf", dir)
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          // a third of the crawl is ENCRYPTED (empty-user-password
-          // standard handler, the dominant encrypted class): %3==1
-          // RC4-128, %3==2 AES-128-CBC — the oracle is unchanged, so
-          // decryption must be byte-exact or these docs' text diverges
-          (id,
-            if (id % 3 == 1) Pdf.fixturePdfEncrypted(id, t, aes = false)
-            else if (id % 3 == 2) Pdf.fixturePdfEncrypted(id, t, aes = true)
-            else Pdf.fixturePdf(id, t))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        // a third of the crawl is ENCRYPTED (empty-user-password
+        // standard handler, the dominant encrypted class): %3==1
+        // RC4-128, %3==2 AES-128-CBC — the oracle is unchanged, so
+        // decryption must be byte-exact or these docs' text diverges
+        Some((id,
+          if (id % 3 == 1) Pdf.fixturePdfEncrypted(id, t, aes = false)
+          else if (id % 3 == 2) Pdf.fixturePdfEncrypted(id, t, aes = true)
+          else Pdf.fixturePdf(id, t)))
+      }
       WarcSource.export(pdfs, out, docsPerFile = 100, idCol = "id",
         bytesCol = Some("payload"), mime = "application/pdf")
       val recovered = WarcSource.records(s, out)
@@ -2548,22 +2534,18 @@ object PipelineEntry {
     // quality formula, so every stage (deflate → warc → inflate →
     // operator machine → tokenizer → ratios) is checked end to end.
     "p124_pdf_pipeline" -> ((s, dir) => {
-      import s.implicits._
       import graft.sources.WarcSource
       val out = Spool.fresh("warc-pdfq", dir)
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          // a third of the crawl is ENCRYPTED (empty-user-password
-          // standard handler, the dominant encrypted class): %3==1
-          // RC4-128, %3==2 AES-128-CBC — the oracle is unchanged, so
-          // decryption must be byte-exact or these docs' text diverges
-          (id,
-            if (id % 3 == 1) Pdf.fixturePdfEncrypted(id, t, aes = false)
-            else if (id % 3 == 2) Pdf.fixturePdfEncrypted(id, t, aes = true)
-            else Pdf.fixturePdf(id, t))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        // a third of the crawl is ENCRYPTED (empty-user-password
+        // standard handler, the dominant encrypted class): %3==1
+        // RC4-128, %3==2 AES-128-CBC — the oracle is unchanged, so
+        // decryption must be byte-exact or these docs' text diverges
+        Some((id,
+          if (id % 3 == 1) Pdf.fixturePdfEncrypted(id, t, aes = false)
+          else if (id % 3 == 2) Pdf.fixturePdfEncrypted(id, t, aes = true)
+          else Pdf.fixturePdf(id, t)))
+      }
       WarcSource.export(pdfs, out, docsPerFile = 100, idCol = "id",
         bytesCol = Some("payload"), mime = "application/pdf")
       val recovered = WarcSource.records(s, out)
@@ -2592,16 +2574,12 @@ object PipelineEntry {
     // Scale shape: generate and extract are batched mapPartitions in
     // one task; nothing shuffles.
     "p139_pdf_cid" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, Pdf.fixturePdfCid(id, t,
-            if (id % 3 == 1) Some(false)
-            else if (id % 3 == 2) Some(true)
-            else None))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id, Pdf.fixturePdfCid(id, t,
+          if (id % 3 == 1) Some(false)
+          else if (id % 3 == 2) Some(true)
+          else None)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2643,14 +2621,10 @@ object PipelineEntry {
     // is end-to-end load-bearing. The oracle is p118's closed-form
     // re-typeset: a codec slip anywhere changes text bytes.
     "p146_pdf_filters" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, Pdf.fixturePdfFiltered(id, t, (id % 3).toInt,
-            if (id % 5 == 0) Some(false) else None))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id, Pdf.fixturePdfFiltered(id, t, (id % 3).toInt,
+          if (id % 5 == 0) Some(false) else None)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2663,13 +2637,9 @@ object PipelineEntry {
     // layout). Oracle: the same closed-form CID re-typeset, n_streams
     // now 3 (content + CMap + ObjStm).
     "p147_pdf_objstm" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, Pdf.fixturePdfCidObjStm(id, t))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id, Pdf.fixturePdfCidObjStm(id, t)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2682,13 +2652,9 @@ object PipelineEntry {
     // re-typeset — a hash-round slip, a salt slip, or an unwrap slip
     // yields no text and kills the match.
     "p149_pdf_aes256" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, Pdf.fixturePdfEncryptedV5(id, t, r6 = id % 2 == 0))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id, Pdf.fixturePdfEncryptedV5(id, t, r6 = id % 2 == 0)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2704,14 +2670,11 @@ object PipelineEntry {
     // expansion for ANY text to come out. Oracle: the closed-form
     // re-typeset per lane ((pdf) classic / (cid) ObjStm).
     "p151_pdf_predictor" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, if (id % 4 == 3) Pdf.fixturePdfCidObjStm(id, t, predictor = true)
-               else Pdf.fixturePdfPredictor(id, t, (id % 4).toInt))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id,
+          if (id % 4 == 3) Pdf.fixturePdfCidObjStm(id, t, predictor = true)
+          else Pdf.fixturePdfPredictor(id, t, (id % 4).toInt)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2726,15 +2689,12 @@ object PipelineEntry {
     // run inside ObjStm expansion for ANY text to come out. Oracle:
     // the closed-form re-typeset per lane.
     "p160_pdf_lzw" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, if (id % 5 == 4)
-                 Pdf.fixturePdfCidObjStm(id, t, predictor = true, lzw = true)
-               else Pdf.fixturePdfLzw(id, t, (id % 5).toInt))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id,
+          if (id % 5 == 4)
+            Pdf.fixturePdfCidObjStm(id, t, predictor = true, lzw = true)
+          else Pdf.fixturePdfLzw(id, t, (id % 5).toInt)))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -2774,7 +2734,7 @@ object PipelineEntry {
       val embedded = Pdf.extractImages(pdfs)
         .select((col("id") * 10 + 1 + col("image_idx")).as("id"),
           col("payload"))
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s,
+      Dedup.hammingPairs64(Multimodal.imageDHashes(
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
     }),
@@ -2794,24 +2754,22 @@ object PipelineEntry {
     // closed-form expectedDHash. Oracle: the pair list from the
     // planting rule.
     "p162_pdf_image_raw" -> ((s, dir) => {
-      import s.implicits._
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-      val standalone = base.flatMap { case (id, _) =>
+      val base = docs(s, dir)
+      val standalone = payloads(base) { (id, _) =>
         if (id % 3 == 1) Some((id * 10, Multimodal.dhashImagePng(id, 0)))
         else None
-      }.toDF("id", "payload")
-      val pdfs = base.flatMap { case (id, t) =>
+      }
+      val pdfs = payloads(base) { (id, t) =>
         if (id % 3 == 1)
           Some((id, Pdf.fixturePdfImageRaw(id, t,
             Multimodal.dhashImageRgbBytes(id), 72, 64,
             ((id / 3) % 3).toInt)))
         else None
-      }.toDF("id", "payload")
+      }
       val embedded = Pdf.extractImages(pdfs)
         .select((col("id") * 10 + 1 + col("image_idx")).as("id"),
           col("payload"))
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s,
+      Dedup.hammingPairs64(Multimodal.imageDHashes(
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
     }),
@@ -2829,17 +2787,15 @@ object PipelineEntry {
     // oracle re-derives every field closed-form from the published
     // tables — a frame-length slip desyncs the walk and kills rows.
     "p164_mp3_metadata" -> ((s, dir) => {
-      import s.implicits._
-      val audio = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, Multimodal.generateMp3(
-            nFrames = 2 + (id % 7).toInt,
-            brIdx = 1 + (id % 9).toInt,
-            srIdx = (id % 3).toInt,
-            id3Size = if (id % 3 == 0) (50 + id % 40).toInt else 0,
-            vbr = id % 5 == 0))
-        }).toDF("id", "payload")
-      Multimodal.mp3MetadataFrame(s, audio).orderBy("id")
+      val audio = payloads(docs(s, dir)) { (id, _) =>
+        Some((id, Multimodal.generateMp3(
+          nFrames = 2 + (id % 7).toInt,
+          brIdx = 1 + (id % 9).toInt,
+          srIdx = (id % 3).toInt,
+          id3Size = if (id % 3 == 0) (50 + id % 40).toInt else 0,
+          vbr = id % 5 == 0)))
+      }
+      Multimodal.mp3MetadataFrame(audio).orderBy("id")
     }),
 
     // P169 — canonical-link + OpenGraph extraction feeding
@@ -2945,22 +2901,19 @@ object PipelineEntry {
     // bit — the pairing is exact by construction, not by tolerance.
     // Lanes cycle orientations 2/3/5/6/7/8 over the %3==2 docs.
     "p167_exif_orientation" -> ((s, dir) => {
-      import s.implicits._
       val lanes = Seq(2, 3, 5, 6, 7, 8)
-      val imgs = docs(s, dir).select(col("doc_id")).as[Long]
-        .flatMap { id =>
-          if (id % 3 == 2) {
-            val o = lanes(((id / 3) % 6).toInt)
-            Seq((id * 10, Multimodal.orientJpeg(id, 1)),
-              (id * 10 + 1, Multimodal.orientJpeg(id, o)))
-          } else Nil
-        }.toDF("id", "payload")
-      val normalized = imgs.select(col("id"), col("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.flatMap { case (id, p) =>
-          Multimodal.normalizeOrientation(p).map((id, _))
-        }).toDF("id", "payload")
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s, normalized))
+      val imgs = payloads(docs(s, dir)) { (id, _) =>
+        if (id % 3 == 2) {
+          val o = lanes(((id / 3) % 6).toInt)
+          Seq((id * 10, Multimodal.orientJpeg(id, 1)),
+            (id * 10 + 1, Multimodal.orientJpeg(id, o)))
+        } else Nil
+      }
+      val normalized = Multimodal.decodePayloads(imgs, "id", "payload",
+        "id", "payload")(_.flatMap { case (id, p) =>
+        Multimodal.normalizeOrientation(p).map((id, _))
+      })
+      Dedup.hammingPairs64(Multimodal.imageDHashes(normalized))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2973,17 +2926,15 @@ object PipelineEntry {
     // MPEG frames, so the p164 walk and this one read ONE payload.
     // Oracle: every field from the fixture formulas closed-form.
     "p166_id3_tags" -> ((s, dir) => {
-      import s.implicits._
-      val audio = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val tag = Multimodal.id3v2(
-            ver = if (id % 2 == 0) 4 else 3,
-            title = s"Track $id", artist = s"Artist ${id % 50}",
-            album = s"Album ${id % 20}", enc = (id % 4).toInt)
-          (id, tag ++ Multimodal.generateMp3(nFrames = 2, brIdx = 9,
-            srIdx = 0))
-        }).toDF("id", "payload")
-      Multimodal.id3TagsFrame(s, audio).orderBy("id")
+      val audio = payloads(docs(s, dir)) { (id, _) =>
+        val tag = Multimodal.id3v2(
+          ver = if (id % 2 == 0) 4 else 3,
+          title = s"Track $id", artist = s"Artist ${id % 50}",
+          album = s"Album ${id % 20}", enc = (id % 4).toInt)
+        Some((id, tag ++ Multimodal.generateMp3(nFrames = 2, brIdx = 9,
+          srIdx = 0)))
+      }
+      Multimodal.id3TagsFrame(audio).orderBy("id")
     }),
 
     // P165 — JPEG EXIF metadata (the columns image-corpus curation
@@ -2998,14 +2949,12 @@ object PipelineEntry {
     // the dHash family read one artifact. Oracle: every field from
     // the fixture formulas closed-form.
     "p165_jpeg_exif" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val dt = f"2026:08:${1 + id % 28}%02d ${id % 24}%02d:00:00"
-          (id, Multimodal.jpegWithExif(id, (1 + id % 8).toInt, dt,
-            s"Cam${id % 5}", s"M${id % 7}", id % 2 == 0))
-        }).toDF("id", "payload")
-      Multimodal.jpegExifFrame(s, imgs).orderBy("id")
+      val imgs = payloads(docs(s, dir)) { (id, _) =>
+        val dt = f"2026:08:${1 + id % 28}%02d ${id % 24}%02d:00:00"
+        Some((id, Multimodal.jpegWithExif(id, (1 + id % 8).toInt, dt,
+          s"Cam${id % 5}", s"M${id % 7}", id % 2 == 0)))
+      }
+      Multimodal.jpegExifFrame(imgs).orderBy("id")
     }),
 
     // P163 — crawl-to-PDF-image composition (closes the loop the two
@@ -3050,7 +2999,7 @@ object PipelineEntry {
       val embedded = Pdf.extractImages(recovered)
         .select((col("id") * 10 + 1 + col("image_idx")).as("id"),
           col("payload"))
-      Dedup.hammingPairs64(Multimodal.imageDHashes(s,
+      Dedup.hammingPairs64(Multimodal.imageDHashes(
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
     }),
@@ -3217,17 +3166,13 @@ object PipelineEntry {
     // decryption all compose. Oracle: the closed-form CID re-typeset,
     // n_streams 4 (content + CMap + ObjStm + XRef).
     "p153_pdf_xrefstream" -> ((s, dir) => {
-      import s.implicits._
-      val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, Pdf.fixturePdfXrefStream(id, t, (id % 3) match {
-            case 1 => Some(false)
-            case 2 => Some(true)
-            case _ => None
-          }))
-        })
-        .toDF("id", "payload")
+      val pdfs = payloads(docs(s, dir)) { (id, t) =>
+        Some((id, Pdf.fixturePdfXrefStream(id, t, (id % 3) match {
+          case 1 => Some(false)
+          case 2 => Some(true)
+          case _ => None
+        })))
+      }
       Pdf.extractTexts(pdfs).orderBy("id")
     }),
 
@@ -3243,12 +3188,10 @@ object PipelineEntry {
     // path); exact-byte near-dup rides the content-hash family.
     // Oracle re-derives every field from the fixture's closed form.
     "p152_webp_metadata" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id =>
-          (id, Multimodal.generateWebp(id, (id % 4).toInt))))
-        .toDF("id", "payload")
-      Multimodal.webpMetadataFrame(s, imgs).orderBy("id")
+      val imgs = payloads(docs(s, dir)) { (id, _) =>
+        Some((id, Multimodal.generateWebp(id, (id % 4).toInt)))
+      }
+      Multimodal.webpMetadataFrame(imgs).orderBy("id")
     }),
 
     // P125 — crawl-frontier scheduling (discovery → fetch plan): p122's
@@ -3410,10 +3353,7 @@ object PipelineEntry {
     // exact-div durations, track layout, and sample counts from the
     // fixture arithmetic — a box-offset slip anywhere changes rows.
     "p129_mp4_metadata" -> ((s, dir) => {
-      import s.implicits._
-      val vids = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(d => (d, Mp4.fixtureMp4(d))))
-        .toDF("id", "payload")
+      val vids = payloads(docs(s, dir))((d, _) => Some((d, Mp4.fixtureMp4(d))))
       Mp4.containerMeta(vids).orderBy("id", "track_id")
     }),
 
@@ -3423,10 +3363,7 @@ object PipelineEntry {
     // shared verbatim, so the v1 parse must agree with the v0 parse
     // row-for-row or the hash diverges.
     "p148_mp4_64bit" -> ((s, dir) => {
-      import s.implicits._
-      val vids = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(d => (d, Mp4.fixtureMp4V1(d))))
-        .toDF("id", "payload")
+      val vids = payloads(docs(s, dir))((d, _) => Some((d, Mp4.fixtureMp4V1(d))))
       Mp4.containerMeta(vids).orderBy("id", "track_id")
     }),
 
@@ -3437,12 +3374,9 @@ object PipelineEntry {
     // hash-matching p129's oracle proves byte-exact binary transit
     // into the video-curation front half.
     "p130_warc_video" -> ((s, dir) => {
-      import s.implicits._
       import graft.sources.WarcSource
       val out = Spool.fresh("warc-mp4", dir)
-      val vids = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(d => (d, Mp4.fixtureMp4(d))))
-        .toDF("id", "payload")
+      val vids = payloads(docs(s, dir))((d, _) => Some((d, Mp4.fixtureMp4(d))))
       WarcSource.export(vids, out, docsPerFile = 100, idCol = "id",
         bytesCol = Some("payload"), mime = "video/mp4")
       val recovered = WarcSource.records(s, out)

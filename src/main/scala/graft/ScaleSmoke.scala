@@ -522,17 +522,10 @@ object ScaleSmoke {
           .agg(sum(col("n_kept"))).count())
       // PDF generate + extract at corpus scale: per-row deflate-encode
       // and inflate-decode CPU inside mapPartitions, zero shuffle
-      locally {
-        import spark.implicits._
-        val pdfs = docs.select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            (id, operators.Pdf.fixturePdf(id, t)) })
-          .toDF("id", "payload")
-        time("pdf extract")(
-          operators.Pdf.extractTexts(pdfs)
-            .agg(sum(col("n_chars"))).count())
-      }
+      val pdfs = PipelineEntry.payloads(docs)((id, t) =>
+        Some((id, operators.Pdf.fixturePdf(id, t))))
+      time("pdf extract")(
+        operators.Pdf.extractTexts(pdfs).agg(sum(col("n_chars"))).count())
       // frontier scheduling over ~1M sitemap-discovered urls: one
       // window per host (the politeness domain), 5000 hosts
       val entries = docs.select(

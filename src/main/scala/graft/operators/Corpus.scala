@@ -626,21 +626,21 @@ object Corpus {
   def dsirApply(docs: DataFrame, model: DsirModel,
                 hashMod: Long = 1000003L, acceptScale: Double = 0.25,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val grams = HE.wordShingles(TF.tokens(col(textCol)), 2)
-    val scored = HE.dsirScore(grams,
+    val toks = col("toks")
+    val scored = HE.dsirScore(HE.wordShingles(toks, 2),
       model.ct.toArray, model.cr.toArray, model.tr, model.tt)
-    docs
-      .where(size(TF.tokens(col(textCol))) >= 2)
+    docs.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("toks"))
       // The score rides through a one-element explode: a Generate is a
       // predicate-pushdown barrier, so the acceptance filter below CANNOT
       // be substituted-and-pushed beneath this projection (which would
       // re-evaluate dsir_score 2-3x per row and drag the expensive filter
       // under the source's parallelism spread — the r10 p63/p67 plan
       // defect). dsir_score now runs exactly once per row, post-spread;
-      // PlanAuditSpec pins the single occurrence.
-      .select(col(idCol).as("id"),
-        pmod(idHash(col(idCol)), lit(hashMod)).as("hm"),
-        explode(array(scored)).as("sc"))
+      // PlanAuditSpec pins the single occurrence. The domain test (at
+      // least one bigram) rides the same explode, so the tokens, projected
+      // once, are not split again in a pushed-down Filter.
+      .select(col("id"), pmod(idHash(col("id")), lit(hashMod)).as("hm"),
+        explode(when(size(toks) >= 2, array(scored))).as("sc"))
       .withColumn("w", col("sc.s") / col("sc.n").cast("double"))
       .where(col("hm").cast("double")
         < least(lit(1.0), col("w") * acceptScale) * hashMod)
@@ -869,15 +869,15 @@ object Corpus {
   def classifierFilter(docs: DataFrame, model: DsirModel,
                        threshold: Double = 1.0, textCol: String = "text",
                        idCol: String = "doc_id"): DataFrame = {
-    val grams = HE.wordShingles(TF.tokens(col(textCol)), 2)
-    val scored = HE.dsirScore(grams,
+    val toks = col("toks")
+    val scored = HE.dsirScore(HE.wordShingles(toks, 2),
       model.ct.toArray, model.cr.toArray, model.tr, model.tt)
-    docs
-      .where(size(TF.tokens(col(textCol))) >= 2)
+    docs.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("toks"))
       // one-element explode = Generate barrier, exactly as in dsirApply:
       // keeps the threshold filter from being substituted-and-pushed
-      // below the score projection (the r10 double-eval defect).
-      .select(col(idCol).as("id"), explode(array(scored)).as("sc"))
+      // below the score projection (the r10 double-eval defect), and
+      // carries the domain test so the tokens are split once.
+      .select(col("id"), explode(when(size(toks) >= 2, array(scored))).as("sc"))
       .withColumn("w", col("sc.s") / col("sc.n").cast("double"))
       .where(col("w") >= threshold)
       .select(col("id"), col("sc.n").as("n_grams"),

@@ -251,9 +251,10 @@ object Dedup {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     // corpus side has ONE consumer — no materialization needed; the
     // batch side feeds two joins, so its signatures persist with stats.
-    val cb = banded(signatures(corpus, k, shingleN, textCol, idCol), k, bands)
+    val cb = banded(signatures(shingleSets(corpus, shingleN, textCol, idCol), k),
+      k, bands)
     val bb = banded(SelfJoinMaterialize(
-      signatures(batch, k, shingleN, textCol, idCol)), k, bands)
+      signatures(shingleSets(batch, shingleN, textCol, idCol), k)), k, bands)
     val corpusHit = bb
       .join(cb.select(col("band"), col("band_hash"), col("sig").as("csig")),
         Seq("band", "band_hash"))
@@ -281,12 +282,10 @@ object Dedup {
     docs.select(col(idCol).as("id"),
       array_distinct(HE.wordShingles(TF.tokens(col(textCol)), n)).as("shingles"))
 
-  /** (id, sig): the k-permutation MinHash of each document's distinct
-   * shingles, null for a document too short to shingle. */
-  private def signatures(docs: DataFrame, k: Int, shingleN: Int, textCol: String,
-                         idCol: String): DataFrame =
-    shingleSets(docs, shingleN, textCol, idCol)
-      .select(col("id"), HE.shingleMinhash(col("shingles"), k).as("sig"))
+  /** (id, sig): the k-permutation MinHash of each (id, shingles) row's
+   * distinct shingles, null for a document too short to shingle. */
+  private def signatures(sets: DataFrame, k: Int): DataFrame =
+    sets.select(col("id"), HE.shingleMinhash(col("shingles"), k).as("sig"))
 
   /** One (id, sig, band, band_hash) row per band of each signature. A
    * null signature explodes to no rows: a Filter testing emptiness would
@@ -397,11 +396,16 @@ object Dedup {
                       shingleN: Int = 3, minAgree: Int = 8,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
+    lshPairs(shingleSets(docs, shingleN, textCol, idCol), k, bands, minAgree)
+  }
+
+  /** `minhashLshPairs` over an (id, shingles) frame. */
+  private def lshPairs(sets: DataFrame, k: Int, bands: Int,
+                       minAgree: Int): DataFrame = {
     // Materialize the signatures: the minhash expressions would otherwise
     // be re-inlined (and recomputed) into every band reference and both
     // self-join sides. Banding itself is a cheap slice+md5 replay.
-    val rows = banded(SelfJoinMaterialize(
-      signatures(docs, k, shingleN, textCol, idCol)), k, bands)
+    val rows = banded(SelfJoinMaterialize(signatures(sets, k)), k, bands)
     val left = rows.select(col("band"), col("band_hash"),
       col("id").as("id_a"), col("sig").as("sig_a"))
     val right = rows.select(col("band"), col("band_hash"),
@@ -432,14 +436,14 @@ object Dedup {
   def lshVerifiedPairs(docs: DataFrame, k: Int = 16, bands: Int = 4,
                        shingleN: Int = 3, threshold: Double = 0.8,
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // minAgree = 1: ANY band collision is a candidate (a colliding band
-    // already implies k/bands agreeing components); verification, not the
-    // signature estimate, decides membership. The shingle-set frame below
-    // shares the materialized cache with the signature path inside
-    // minhashLshPairs (same logical plan), so text is shingled once.
-    val cand = minhashLshPairs(docs, k, bands, shingleN, minAgree = 1,
-      textCol, idCol).select("id_a", "id_b")
+    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
+    // One materialized shingle-set frame feeds both the signatures and
+    // the verification joins, so text is shingled once. minAgree = 1:
+    // ANY band collision is a candidate (a colliding band already implies
+    // k/bands agreeing components); verification, not the signature
+    // estimate, decides membership.
     val sets = SelfJoinMaterialize(shingleSets(docs, shingleN, textCol, idCol))
+    val cand = lshPairs(sets, k, bands, minAgree = 1).select("id_a", "id_b")
     val inter = size(array_intersect(col("sa"), col("sb"))).cast("long")
     cand
       .join(sets.select(col("id").as("id_a"), col("shingles").as("sa")), Seq("id_a"))

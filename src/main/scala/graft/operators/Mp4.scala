@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * MP4 / ISO-BMFF container metadata — the one multimodal format whose
@@ -150,27 +149,22 @@ object Mp4 {
    * pass, one output row per TRACK (videos with no parsable moov yield
    * one row with null track fields, so corrupt captures stay visible).
    */
-  def containerMeta(videos: DataFrame, bytesCol: String = "payload",
-                    idCol: String = "id"): DataFrame = {
-    val spark = videos.sparkSession
-    import spark.implicits._
-    videos.select(col(idCol).cast("long").as("id"), col(bytesCol).as("b"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        val m = parse(b)
-        if (m.tracks.isEmpty)
-          Seq((id, m.majorBrand, m.durationMs, 0L,
-            null.asInstanceOf[java.lang.Long], null.asInstanceOf[String],
-            null.asInstanceOf[String], null.asInstanceOf[java.lang.Long],
-            null.asInstanceOf[java.lang.Long]))
-        else m.tracks.map(t => (id, m.majorBrand, m.durationMs,
-          m.tracks.size.toLong, java.lang.Long.valueOf(t.trackId),
-          t.handler, t.codec, java.lang.Long.valueOf(t.nSamples),
-          java.lang.Long.valueOf(t.durationMs)))
-      })
-      .toDF("id", "major_brand", "movie_duration_ms", "n_tracks",
-        "track_id", "handler", "codec", "n_samples", "duration_ms")
-  }
+  def containerMeta(videos: DataFrame, idCol: String = "id",
+                    payloadCol: String = "payload"): DataFrame =
+    Multimodal.decodePayloads(videos, idCol, payloadCol, "id", "major_brand",
+      "movie_duration_ms", "n_tracks", "track_id", "handler", "codec",
+      "n_samples", "duration_ms")(_.flatMap { case (id, b) =>
+      val m = parse(b)
+      if (m.tracks.isEmpty)
+        Seq((id, m.majorBrand, m.durationMs, 0L,
+          null.asInstanceOf[java.lang.Long], null.asInstanceOf[String],
+          null.asInstanceOf[String], null.asInstanceOf[java.lang.Long],
+          null.asInstanceOf[java.lang.Long]))
+      else m.tracks.map(t => (id, m.majorBrand, m.durationMs,
+        m.tracks.size.toLong, java.lang.Long.valueOf(t.trackId),
+        t.handler, t.codec, java.lang.Long.valueOf(t.nSamples),
+        java.lang.Long.valueOf(t.durationMs)))
+    })
 
   // --------------------------------------- keyframe bytes (P142, r17)
 
@@ -182,7 +176,9 @@ object Mp4 {
    * which file bytes are each keyframe, which is all a near-dup
    * fingerprint needs (identical content re-muxed into a different
    * chunk layout moves the bytes but never changes them). One ordered
-   * pass over chunks and samples, O(nSamples). Absent stss means every
+   * pass over chunks and samples, bounded by the payload: the declared
+   * sample count is cut to the samples the bytes can hold (length /
+   * default size, or the size table's length). Absent stss means every
    * sample is sync (the spec default); `maxKeyframes` bounds the walk
    * deterministically (first K in sample order). co64 (64-bit chunk
    * offsets) is consumed alongside stco (r17); negative or
@@ -287,7 +283,12 @@ object Mp4 {
         }
       case _ =>
     }
-    if (!found || stco.isEmpty || nSamples <= 0) return Seq.empty
+    // the stsz count is untrusted 32-bit input too: bound the walk by
+    // the samples the payload can hold, so work stays O(payload bytes)
+    val n =
+      if (defaultSize > 0) math.min(nSamples, bytes.length / defaultSize)
+      else math.min(nSamples, sizes.length.toLong)
+    if (!found || stco.isEmpty || n <= 0) return Seq.empty
     val sync: Long => Boolean =
       if (stss == null) _ => true else stss.toSet.contains
     def sizeOf(sample1: Long): Long =
@@ -302,15 +303,13 @@ object Mp4 {
     var sample = 1L
     var chunk = 1L
     var stscIdx = 0
-    while (chunk <= stco.length && sample <= nSamples &&
-      emitted < maxKeyframes) {
+    while (chunk <= stco.length && sample <= n && emitted < maxKeyframes) {
       while (stscIdx + 1 < stsc.length && stsc(stscIdx + 1)._1 <= chunk)
         stscIdx += 1
-      val perChunk =
-        if (stsc.isEmpty) nSamples else stsc(stscIdx)._2
+      val perChunk = if (stsc.isEmpty) n else stsc(stscIdx)._2
       var off = stco((chunk - 1).toInt)
       var k = 0L
-      while (k < perChunk && sample <= nSamples && emitted < maxKeyframes) {
+      while (k < perChunk && sample <= n && emitted < maxKeyframes) {
         val sz = sizeOf(sample)
         // off >= 0: stco's be32 can never go negative but co64's be64
         // can (a crafted high bit) — emitting it would index the array
@@ -339,30 +338,24 @@ object Mp4 {
    * decode triad documents out. Rows with no resolvable keyframes are
    * dropped (no fingerprint beats a fake one). One mapPartitions pass.
    */
-  def keyframeFingerprints(videos: DataFrame, bytesCol: String = "payload",
-                           idCol: String = "id"): DataFrame = {
-    val spark = videos.sparkSession
-    import spark.implicits._
-    videos.select(col(idCol).cast("long").as("id"), col(bytesCol).as("b"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, b) =>
-          val hs = syncSampleRanges(b).map { case (off, sz) =>
-            md.reset()
-            md.update(b, off.toInt, sz.toInt)
-            val d = md.digest()
-            ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-              ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-              ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-              ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-          }
-          if (hs.isEmpty) None
-          else Some((id, Multimodal.majorityFold64(hs.toArray)))
+  def keyframeFingerprints(videos: DataFrame, idCol: String = "id",
+                           payloadCol: String = "payload"): DataFrame =
+    Multimodal.decodePayloads(videos, idCol, payloadCol, "id", "dhash") { it =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      it.flatMap { case (id, b) =>
+        val hs = syncSampleRanges(b).map { case (off, sz) =>
+          md.reset()
+          md.update(b, off.toInt, sz.toInt)
+          val d = md.digest()
+          ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+            ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+            ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+            ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
         }
+        if (hs.isEmpty) None
+        else Some((id, Multimodal.majorityFold64(hs.toArray)))
       }
-      .toDF("id", "dhash")
-  }
+    }
 
   // ------------------------------------------------------------ fixture
 

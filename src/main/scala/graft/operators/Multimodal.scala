@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,6 +22,10 @@ import org.apache.spark.sql.functions._
  * the (small) extracted features, with the binary column pruned away by
  * Catalyst column pruning (verified in the spec: the scan's ReadSchema
  * excludes `payload` when only features are selected).
+ *
+ * Frame twins: every byte decoder here, in [[Mp4]] and in [[Pdf]] has a
+ * frame twin `(frame, idCol = "id", payloadCol = "payload")` that reads
+ * the session from the frame and runs through `decodePayloads`.
  */
 object Multimodal {
 
@@ -47,6 +53,20 @@ object Multimodal {
   final case class MediaFeatures(doc_id: Long, modality: String, byte_len: Long,
                                  width: Int, height: Int, n_pixels: Long,
                                  payload_hash: String, brightness: Double)
+
+  /** The one seam where a byte decoder meets a frame: `frame`'s
+   * (`idCol` as long, `payloadCol` binary) rows run through `decode` one
+   * partition at a time (so per-partition state, such as a digest, is
+   * built once per partition), and the output columns are named `names`.
+   * Every binary decoder's frame twin goes through here. */
+  private[graft] def decodePayloads[T <: Product : TypeTag](
+      frame: DataFrame, idCol: String, payloadCol: String, names: String*)(
+      decode: Iterator[(Long, Array[Byte])] => Iterator[T]): DataFrame = {
+    val spark = frame.sparkSession
+    import spark.implicits._
+    frame.select(col(idCol).cast("long"), col(payloadCol))
+      .as[(Long, Array[Byte])].mapPartitions(decode).toDF(names: _*)
+  }
 
   /**
    * Build a multimodal frame from the documents table: the text bytes act
@@ -304,20 +324,15 @@ object Multimodal {
   /** Batched frame twin of [[mp3Metadata]]: one row per parseable MP3
    * — (id, bitrate_kbps, is_vbr, sample_rate, channels, n_frames,
    * duration_ms); non-MP3 payloads drop. */
-  def mp3MetadataFrame(spark: SparkSession, audio: DataFrame,
-                       idCol: String = "id",
-                       payloadCol: String = "payload"): DataFrame = {
-    import spark.implicits._
-    audio.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
+  def mp3MetadataFrame(audio: DataFrame, idCol: String = "id",
+                       payloadCol: String = "payload"): DataFrame =
+    decodePayloads(audio, idCol, payloadCol, "id", "bitrate_kbps", "is_vbr",
+      "sample_rate", "channels", "n_frames", "duration_ms")(_.flatMap {
+      case (id, payload) =>
         mp3Metadata(payload).map { case (kbps, vbr, sr, ch, nf, ms) =>
           (id, kbps.toLong, vbr, sr.toLong, ch.toLong, nf, ms)
         }
-      })
-      .toDF("id", "bitrate_kbps", "is_vbr", "sample_rate", "channels",
-        "n_frames", "duration_ms")
-  }
+    })
 
   // --------------------------------- EXIF orientation normalize (P167)
 
@@ -569,17 +584,12 @@ object Multimodal {
 
   /** Batched frame twin of [[id3Tags]]: (id, title, artist, album);
    * tag-less payloads drop. */
-  def id3TagsFrame(spark: SparkSession, audio: DataFrame,
-                   idCol: String = "id",
-                   payloadCol: String = "payload"): DataFrame = {
-    import spark.implicits._
-    audio.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        id3Tags(payload).map { case (t, a, al) => (id, t, a, al) }
-      })
-      .toDF("id", "title", "artist", "album")
-  }
+  def id3TagsFrame(audio: DataFrame, idCol: String = "id",
+                   payloadCol: String = "payload"): DataFrame =
+    decodePayloads(audio, idCol, payloadCol, "id", "title", "artist",
+      "album")(_.flatMap { case (id, payload) =>
+      id3Tags(payload).map { case (t, a, al) => (id, t, a, al) }
+    })
 
   /** ID3v2 fixture writer: a v2.`ver` tag with TIT2/TPE1/TALB text
    * frames in encoding `enc` (0/1/2/3) plus trailing padding, sized
@@ -740,19 +750,12 @@ object Multimodal {
   /** Batched frame twin of [[jpegExif]]: one row per JPEG with a
    * parseable EXIF block — (id, orientation, datetime, make, model);
    * EXIF-less or non-JPEG payloads drop. */
-  def jpegExifFrame(spark: SparkSession, images: DataFrame,
-                    idCol: String = "id",
-                    payloadCol: String = "payload"): DataFrame = {
-    import spark.implicits._
-    images.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        jpegExif(payload).map { case (o, dt, mk, md) =>
-          (id, o.toLong, dt, mk, md)
-        }
-      })
-      .toDF("id", "orientation", "datetime", "make", "model")
-  }
+  def jpegExifFrame(images: DataFrame, idCol: String = "id",
+                    payloadCol: String = "payload"): DataFrame =
+    decodePayloads(images, idCol, payloadCol, "id", "orientation",
+      "datetime", "make", "model")(_.flatMap { case (id, payload) =>
+      jpegExif(payload).map { case (o, dt, mk, md) => (id, o.toLong, dt, mk, md) }
+    })
 
   /** Build an EXIF APP1 segment (fixture writer): TIFF block in the
    * requested byte order with IFD0 entries Make/Model/Orientation/
@@ -1202,17 +1205,11 @@ object Multimodal {
    * payloads are dropped (they have no perceptual content to pair on).
    * Input columns: `idCol` long, `payloadCol` binary.
    */
-  def imageDHashes(spark: SparkSession, images: DataFrame,
-                   idCol: String = "id", payloadCol: String = "payload")
-      : DataFrame = {
-    import spark.implicits._
-    images.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        imageDHash(payload).map(hsh => (id, hsh))
-      })
-      .toDF("id", "dhash")
-  }
+  def imageDHashes(images: DataFrame, idCol: String = "id",
+                   payloadCol: String = "payload"): DataFrame =
+    decodePayloads(images, idCol, payloadCol, "id", "dhash")(_.flatMap {
+      case (id, payload) => imageDHash(payload).map(hsh => (id, hsh))
+    })
 
   // ------------------------------------- WebP container metadata (P152)
 
@@ -1303,20 +1300,15 @@ object Multimodal {
   /** (id, format, width, height, has_alpha, is_animated, n_frames)
    * for every WebP payload — batched per partition like the other
    * binary decoders; non-WebP payloads drop (absent, never wrong). */
-  def webpMetadataFrame(spark: SparkSession, images: DataFrame,
-                        idCol: String = "id",
-                        payloadCol: String = "payload"): DataFrame = {
-    import spark.implicits._
-    images.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
+  def webpMetadataFrame(images: DataFrame, idCol: String = "id",
+                        payloadCol: String = "payload"): DataFrame =
+    decodePayloads(images, idCol, payloadCol, "id", "format", "width",
+      "height", "has_alpha", "is_animated", "n_frames")(_.flatMap {
+      case (id, payload) =>
         webpMetadata(payload).map { case (f, w, h, a, an, nf) =>
           (id, f, w.toLong, h.toLong, a, an, nf.toLong)
         }
-      })
-      .toDF("id", "format", "width", "height", "has_alpha",
-        "is_animated", "n_frames")
-  }
+    })
 
   /** Deterministic WebP fixture (hand-built containers, no encoder):
    * `lane` 0 = simple lossy VP8, 1 = simple lossless VP8L (alpha when
@@ -1577,17 +1569,11 @@ object Multimodal {
   /** (id, dhash) for every decodable PCM16 clip — the audio twin of
    * `imageDHashes`, same batched-per-partition shape, same output
    * column so `Dedup.hammingPairs64` pairs either modality. */
-  def audioEnvelopeHashes(spark: SparkSession, audio: DataFrame,
-                          idCol: String = "id", payloadCol: String = "payload")
-      : DataFrame = {
-    import spark.implicits._
-    audio.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        audioEnvelopeHash(payload).map(hsh => (id, hsh))
-      })
-      .toDF("id", "dhash")
-  }
+  def audioEnvelopeHashes(audio: DataFrame, idCol: String = "id",
+                          payloadCol: String = "payload"): DataFrame =
+    decodePayloads(audio, idCol, payloadCol, "id", "dhash")(_.flatMap {
+      case (id, payload) => audioEnvelopeHash(payload).map(hsh => (id, hsh))
+    })
 
   // ---------------------------------- video near-dup (fingerprint, P77)
 
@@ -1743,26 +1729,22 @@ object Multimodal {
   /** (id, dhash) for every decodable video — the video member of the
    * `imageDHashes` / `audioEnvelopeHashes` family, same output column
    * so `Dedup.hammingPairs64` pairs any modality. */
-  def videoFingerprints(spark: SparkSession, videos: DataFrame,
-                        frameStep: Int = 1,
-                        idCol: String = "id", payloadCol: String = "payload")
-      : DataFrame = {
-    import spark.implicits._
-    videos.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
+  def videoFingerprints(videos: DataFrame, idCol: String = "id",
+                        payloadCol: String = "payload",
+                        frameStep: Int = 1): DataFrame =
+    decodePayloads(videos, idCol, payloadCol, "id", "dhash")(_.flatMap {
+      case (id, payload) =>
         videoFingerprint(payload, frameStep).map(hsh => (id, hsh))
-      })
-      .toDF("id", "dhash")
-  }
+    })
 
   /**
    * Batched decode path: groups each partition's rows into `batchSize`
    * slices and runs the decoder once per batch (the shape a real codec /
    * model-inference integration needs). Returns a typed Dataset.
    */
-  def decodeBatched(spark: SparkSession, media: DataFrame,
+  def decodeBatched(media: DataFrame,
                     batchSize: Int = 64): Dataset[MediaFeatures] = {
+    val spark = media.sparkSession
     import spark.implicits._
     val ds = media.select(col("doc_id"), col("modality"), col("payload"),
       col("meta.width").as("width"), col("meta.height").as("height"),

@@ -3,7 +3,6 @@ package graft.operators
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * Pure-JDK PDF text extraction — the highest-value non-image payload a
@@ -1412,23 +1411,18 @@ object Pdf {
    * Composes directly with `WarcSource.records`' `body_bytes` for
    * `application/pdf` responses (the p111 front door).
    */
-  def extractTexts(pdfs: DataFrame, bytesCol: String = "payload",
-                   idCol: String = "id"): DataFrame = {
-    val spark = pdfs.sparkSession
-    import spark.implicits._
-    pdfs.select(col(idCol).cast("long").as("id"), col(bytesCol).as("b"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        // last-resort backstop for the degrade-to-no-text policy: a
-        // parser bug on one malformed crawl PDF must surface as an
-        // empty row, never as a task-killing exception
-        val r = try parse(b) catch {
-          case scala.util.control.NonFatal(_) => Extracted(false, 0, "")
-        }
-        (id, r.xrefOk, r.nStreams.toLong, r.text.length.toLong, r.text)
-      })
-      .toDF("id", "xref_ok", "n_streams", "n_chars", "text")
-  }
+  def extractTexts(pdfs: DataFrame, idCol: String = "id",
+                   payloadCol: String = "payload"): DataFrame =
+    Multimodal.decodePayloads(pdfs, idCol, payloadCol, "id", "xref_ok",
+      "n_streams", "n_chars", "text")(_.map { case (id, b) =>
+      // last-resort backstop for the degrade-to-no-text policy: a
+      // parser bug on one malformed crawl PDF must surface as an
+      // empty row, never as a task-killing exception
+      val r = try parse(b) catch {
+        case scala.util.control.NonFatal(_) => Extracted(false, 0, "")
+      }
+      (id, r.xrefOk, r.nStreams.toLong, r.text.length.toLong, r.text)
+    })
 
   /** DCT (JPEG) image XObjects of one document (r19 — images are
    * prime crawl payload and the missing edge between the PDF door and
@@ -1545,20 +1539,15 @@ object Pdf {
    * contribute zero rows, never a task-killing exception. Scale
    * shape: per-row CPU inside mapPartitions where the PDF bytes
    * landed; payloads never cross a shuffle. */
-  def extractImages(pdfs: DataFrame, bytesCol: String = "payload",
-                    idCol: String = "id"): DataFrame = {
-    val spark = pdfs.sparkSession
-    import spark.implicits._
-    pdfs.select(col(idCol).cast("long").as("id"), col(bytesCol).as("b"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        val imgs = try extractImageBytes(b) catch {
-          case scala.util.control.NonFatal(_) => Seq.empty[Array[Byte]]
-        }
-        imgs.iterator.zipWithIndex.map { case (p, k) => (id, k.toLong, p) }
-      })
-      .toDF("id", "image_idx", "payload")
-  }
+  def extractImages(pdfs: DataFrame, idCol: String = "id",
+                    payloadCol: String = "payload"): DataFrame =
+    Multimodal.decodePayloads(pdfs, idCol, payloadCol, "id", "image_idx",
+      "payload")(_.flatMap { case (id, b) =>
+      val imgs = try extractImageBytes(b) catch {
+        case scala.util.control.NonFatal(_) => Seq.empty[Array[Byte]]
+      }
+      imgs.iterator.zipWithIndex.map { case (p, k) => (id, k.toLong, p) }
+    })
 
   // ------------------------------------------------------------ fixture
 

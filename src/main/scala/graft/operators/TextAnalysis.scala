@@ -955,9 +955,11 @@ object TextAnalysis {
     val total = if (totalRow.isNullAt(0)) 1L else math.max(1L, totalRow.getLong(0))
     val vmMap: Map[String, Double] =
       top.iterator.map(r => r.getString(0) -> r.getLong(1).toDouble / total).toMap
-    docs
-      .where(size(TF.tokens(col(textCol))) >= n)
-      .select(col(idCol).as("id"), HE.vocabScore(grams, vmMap).as("s"))
+    // tokens projected once; the domain test rides the one-element
+    // explode (see `repetition`), which pushdown cannot re-inline
+    docs.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("toks"))
+      .select(col("id"), explode(when(size(col("toks")) >= n,
+        array(HE.vocabScore(HE.wordShingles(col("toks"), n), vmMap)))).as("s"))
       .select(col("id"), col("s.n").as(countName), col("s.n_oov").as("n_oov"),
         round(col("s.n_oov").cast("double") / col("s.n").cast("double"), 6)
           .as("oov_frac"),
@@ -978,17 +980,16 @@ object TextAnalysis {
    * aggregation. History of this operator's shapes, all value-identical:
    * exploded (id, shingle) groupBy 6.1 s at sf0.1; interpreted
    * sort_array + longest-run HOF fold ~2.9 s; native expression ~0.4 s.
-   * The domain filter tests the cheap token count (shingles exist iff
-   * tokens >= n) so its pushed-down copy never re-runs the shingle
-   * construction — a filter on size(shingles) would re-inline it.
+   * The tokens are projected once, and the domain test (shingles exist
+   * iff tokens >= n) rides a one-element explode: a Filter would be
+   * pushed below the projection with its own copy of the tokenizer.
    * Output: (id, n_shingles, top_count, top_shingle_ratio).
    */
   def repetition(docs: DataFrame, n: Int = 3, textCol: String = "text",
                  idCol: String = "doc_id"): DataFrame =
-    docs
-      .where(size(TF.tokens(col(textCol))) >= n)
-      .select(col(idCol).as("id"),
-        HE.wordShingles(TF.tokens(col(textCol)), n).as("sh"))
+    docs.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("toks"))
+      .select(col("id"), explode(when(size(col("toks")) >= n,
+        array(HE.wordShingles(col("toks"), n)))).as("sh"))
       .select(col("id"), size(col("sh")).cast("long").as("n_shingles"),
         HE.maxMultiplicity(col("sh")).as("top_count"))
       .select(col("id"), col("n_shingles"), col("top_count"),

@@ -489,12 +489,17 @@ object WarcSource {
    * body, body_bytes) — body is null for binary content types,
    * body_bytes always carries the raw payload body.
    */
-  def records(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
+  def records(spark: SparkSession, dir: String): DataFrame =
+    parseFiles(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select(col("path"), col("content"))
+      .load(dir))
+
+  /** The records of a binaryFile frame's (path, content) rows: one
+   * parse per file, gunzipping `.gz` segments first. */
+  private def parseFiles(files: DataFrame): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (path, raw) =>
         val bytes = if (path.endsWith(".gz")) gunzip(raw) else raw
@@ -511,24 +516,16 @@ object WarcSource {
    * schema pinned explicitly under readStream.
    */
   def recordsStream(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.types._
     val binarySchema = StructType(Seq(
       StructField("path", StringType),
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    spark.readStream.format("binaryFile")
+    parseFiles(spark.readStream.format("binaryFile")
       .schema(binarySchema)
       .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, raw) =>
-        val bytes = if (path.endsWith(".gz")) gunzip(raw) else raw
-        parseWarc(path, bytes)
-      })
-      .toDF()
+      .load(dir))
   }
 
   /**

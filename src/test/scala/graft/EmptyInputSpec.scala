@@ -157,9 +157,9 @@ class EmptyInputSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("id", LongType),
         StructField("payload", BinaryType))))
-    assert(Multimodal.imageDHashes(spark, emptyImages).count() == 0)
+    assert(Multimodal.imageDHashes(emptyImages).count() == 0)
     assert(Dedup.hammingPairs64(
-      Multimodal.imageDHashes(spark, emptyImages)).count() == 0)
+      Multimodal.imageDHashes(emptyImages)).count() == 0)
   }
 
   test("batched lookup: a probe matching nothing contributes zero rows, not an error") {
@@ -196,7 +196,7 @@ class EmptyInputSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("id", LongType),
         StructField("payload", BinaryType))))
-    assert(Multimodal.videoFingerprints(spark, emptyMedia).count() == 0)
+    assert(Multimodal.videoFingerprints(emptyMedia).count() == 0)
     // signProject derives its matrix from the data — an empty corpus
     // must yield an empty frame (same schema), not a head() crash
     val proj = Ann.signProject(emptyEmbs, outDim = 4)

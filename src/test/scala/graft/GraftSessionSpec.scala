@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * scratch output goes through `Spool`, so a second checkout never writes
  * into the first one's tree, and `Spool` alone names a `target/` path,
  * tags a corpus and deletes a scratch dir. Per-session state lives in
- * one map, `Fixture`'s memo, so it has one lifecycle. */
+ * one map, `Fixture`'s memo, so it has one lifecycle. A byte decoder
+ * meets a frame in one helper and a fixture builds its payload rows in
+ * one helper, and Bench's baseline keys are `baseline_ref.json`'s. */
 class GraftSessionSpec extends AnyFunSuite {
 
   // whitespace allowed around the dot, so a builder split across lines
@@ -79,5 +82,37 @@ class GraftSessionSpec extends AnyFunSuite {
       })
     if (hits.nonEmpty)
       fail(s"go through graft.Spool (target, tag, once, fresh):\n${hits.mkString("\n")}")
+  }
+
+  /** (file, enclosing def) of every match of `re` in src/main code. */
+  private def mainHits(re: Regex): Seq[String] =
+    sources.filter(_.startsWith("src/main")).flatMap { f =>
+      val src = code(f)
+      re.findAllMatchIn(src).map { m =>
+        val owner = """\bdef\s+(\w+)""".r.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("?")
+        s"${f.getFileName}:$owner"
+      }
+    }
+
+  test("one decoder seam and one fixture payload builder under src/main") {
+    val decoded = mainHits("""\.as\s*\[\s*\(\s*Long\s*,\s*Array\s*\[\s*Byte\s*\]\s*\)\s*\]""".r)
+    assert(decoded == Seq("Multimodal.scala:decodePayloads"),
+      s"decode (id, payload) rows through Multimodal.decodePayloads:\n${decoded.mkString("\n")}")
+    val built = mainHits("""toDF\s*\(\s*"id"\s*,\s*"payload"\s*\)""".r)
+    assert(built == Seq("PipelineEntry.scala:payloads"),
+      s"build (id, payload) fixtures through PipelineEntry.payloads:\n${built.mkString("\n")}")
+    // the decoders read the session from their frame
+    val session = Seq("Multimodal.scala", "Mp4.scala", "Pdf.scala").flatMap { n =>
+      val f = Paths.get("src/main/scala/graft/operators", n)
+      if ("""\bSparkSession\b""".r.findFirstIn(code(f)).isDefined) Some(n) else None
+    }
+    assert(session.isEmpty, s"decoders taking a SparkSession: ${session.mkString(", ")}")
+  }
+
+  test("Bench's baseline keys are baseline_ref.json's queries") {
+    val ref = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get("baseline_ref.json").toFile)
+    assert(Bench.baselineKeys == ref.get("queries").fieldNames().asScala.toSet)
   }
 }

@@ -26,7 +26,7 @@ class MultimodalSpec extends SparkSpec {
       .select("doc_id", "byte_len", "n_pixels", "payload_hash")
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
-    val batched = Multimodal.decodeBatched(spark, m, batchSize = 2)
+    val batched = Multimodal.decodeBatched(m, batchSize = 2)
       .collect().map(f => (f.doc_id, (f.byte_len, f.n_pixels, f.payload_hash)))
       .toMap
     assert(expr == batched)
@@ -34,7 +34,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("batched decode computes the stub brightness deterministically") {
     val m = Multimodal.fromDocuments(docs)
-    val res = Multimodal.decodeBatched(spark, m, batchSize = 1)
+    val res = Multimodal.decodeBatched(m, batchSize = 1)
       .collect().map(f => f.doc_id -> f.brightness).toMap
     val expected = "hello world".getBytes("UTF-8")
     assert(res(0L) == expected.map(_ & 0xff).sum.toDouble / expected.length)
@@ -60,7 +60,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "modality", "payload", "width", "height", "format")
       .select(col("doc_id"), col("modality"), col("payload"),
         struct(col("width"), col("height"), col("format")).as("meta"))
-    val out = Multimodal.decodeBatched(spark, rows, batchSize = 2)
+    val out = Multimodal.decodeBatched(rows, batchSize = 2)
       .collect().map(f => f.doc_id -> f).toMap
     // decoded dims override the (wrong) declared metadata dims
     assert(out(0L).width == 8 && out(0L).height == 5 && out(0L).n_pixels == 40L)
@@ -89,7 +89,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "modality", "payload", "width", "height", "format")
       .select(col("doc_id"), col("modality"), col("payload"),
         struct(col("width"), col("height"), col("format")).as("meta"))
-    val out = Multimodal.decodeBatched(spark, rows, batchSize = 2)
+    val out = Multimodal.decodeBatched(rows, batchSize = 2)
       .collect().map(f => f.doc_id -> f).toMap
     // decoded channels/rate/frames override the (wrong) declared metadata
     assert(out(0L).width == 1 && out(0L).height == 8000 && out(0L).n_pixels == 400L)
@@ -136,7 +136,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "modality", "payload", "width", "height", "format")
       .select(col("doc_id"), col("modality"), col("payload"),
         struct(col("width"), col("height"), col("format")).as("meta"))
-    val out = Multimodal.decodeBatched(spark, rows, batchSize = 2)
+    val out = Multimodal.decodeBatched(rows, batchSize = 2)
       .collect().map(f => f.doc_id -> f).toMap
     // decoded dims + frame count override the (wrong) declared metadata
     assert(out(0L).width == 32 && out(0L).height == 24 && out(0L).n_pixels == 3L)
@@ -189,7 +189,7 @@ class MultimodalSpec extends SparkSpec {
         (if (d % 7 == 0) Seq(2) else Nil)
       variants.map(v => (d * 10 + v, Multimodal.dhashImagePng(d, v)))
     }.toDF("id", "payload")
-    val pairs = Dedup.hammingPairs64(Multimodal.imageDHashes(spark, images))
+    val pairs = Dedup.hammingPairs64(Multimodal.imageDHashes(images))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val expected = (0L until 80L).flatMap { d =>
       val vs = Seq(0) ++
@@ -244,7 +244,7 @@ class MultimodalSpec extends SparkSpec {
         (if (d % 6 == 0) Seq(2) else Nil)
       variants.map(v => (d * 10 + v, Multimodal.envelopeWav(d, v)))
     }.toDF("id", "payload")
-    val pairs = Dedup.hammingPairs64(Multimodal.audioEnvelopeHashes(spark, clips))
+    val pairs = Dedup.hammingPairs64(Multimodal.audioEnvelopeHashes(clips))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val expected = (0L until 60L).flatMap { d =>
       val vs = Seq(0) ++
@@ -311,7 +311,7 @@ class MultimodalSpec extends SparkSpec {
         (if (d % 15 == 0) Seq(2) else Nil)
       variants.map(v => (d * 10 + v, Multimodal.neardupAvi(d, v)))
     }.toDF("id", "payload")
-    val pairs = Dedup.hammingPairs64(Multimodal.videoFingerprints(spark, videos))
+    val pairs = Dedup.hammingPairs64(Multimodal.videoFingerprints(videos))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val expected = (0L until 60L).filter(_ % 5 == 0).flatMap { d =>
       val vs = Seq(0) ++
@@ -498,6 +498,78 @@ class MultimodalSpec extends SparkSpec {
     val moov = be(8L + inner.length) ++ cc("moov") ++ inner
     Mp4.parse(moov) // must not throw
     assert(Mp4.parse(moov).tracks.isEmpty)
+  }
+
+  test("mp4 hardening: a huge stsz sample count is bounded by the payload") {
+    import graft.operators.Mp4
+    // moov/trak/mdia{hdlr vide, minf/stbl{stss, stsz default=1
+    // count=2^32-1, stco [0]}}: 120 bytes declaring four billion samples
+    def be(v: Long): Array[Byte] = Array(((v >> 24) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def box(typ: String, body: Array[Byte]*): Array[Byte] = {
+      val b = body.flatten.toArray
+      be(8L + b.length) ++ typ.getBytes("ISO-8859-1") ++ b
+    }
+    def movie(syncSample: Long): Array[Byte] = box("moov", box("trak",
+      box("mdia", box("hdlr", be(0), be(0), "vide".getBytes("ISO-8859-1")),
+        box("minf", box("stbl",
+          box("stss", be(0), be(1), be(syncSample)),
+          box("stsz", be(0), be(1), be(0xFFFFFFFFL)),
+          box("stco", be(0), be(1), be(0)))))))
+    val hostile = movie(0L) // sync sample 0 names no sample
+    assert(hostile.length == 120)
+    val t0 = System.nanoTime()
+    assert(Mp4.syncSampleRanges(hostile).isEmpty)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 1.0, s"$secs s")
+    // sample 1 is the file's first byte: the bounded walk still finds it
+    assert(Mp4.syncSampleRanges(movie(1L)) == Seq((0L, 1L)))
+  }
+
+  test("decoder twins: (frame, idCol, payloadCol) order, output schemas kept") {
+    import graft.operators.{Mp4, Pdf}
+    // non-default column names, passed positionally
+    val in = Seq((1, Mp4.fixtureMp4(1L)), (2, Multimodal.generateWebp(2L, 0)),
+      (3, Pdf.fixturePdf(3L, "three words here"))).toDF("key", "blob")
+    val twins = Seq(
+      (Multimodal.mp3MetadataFrame(in, "key", "blob"),
+        "id BIGINT NOT NULL,bitrate_kbps BIGINT NOT NULL,is_vbr BOOLEAN NOT NULL," +
+        "sample_rate BIGINT NOT NULL,channels BIGINT NOT NULL," +
+        "n_frames BIGINT NOT NULL,duration_ms BIGINT NOT NULL"),
+      (Multimodal.id3TagsFrame(in, "key", "blob"),
+        "id BIGINT NOT NULL,title STRING,artist STRING,album STRING"),
+      (Multimodal.jpegExifFrame(in, "key", "blob"),
+        "id BIGINT NOT NULL,orientation BIGINT NOT NULL,datetime STRING," +
+        "make STRING,model STRING"),
+      (Multimodal.imageDHashes(in, "key", "blob"),
+        "id BIGINT NOT NULL,dhash BIGINT NOT NULL"),
+      (Multimodal.webpMetadataFrame(in, "key", "blob"),
+        "id BIGINT NOT NULL,format STRING,width BIGINT NOT NULL," +
+        "height BIGINT NOT NULL,has_alpha BOOLEAN NOT NULL," +
+        "is_animated BOOLEAN NOT NULL,n_frames BIGINT NOT NULL"),
+      (Multimodal.audioEnvelopeHashes(in, "key", "blob"),
+        "id BIGINT NOT NULL,dhash BIGINT NOT NULL"),
+      (Multimodal.videoFingerprints(in, "key", "blob"),
+        "id BIGINT NOT NULL,dhash BIGINT NOT NULL"),
+      (Mp4.containerMeta(in, "key", "blob"),
+        "id BIGINT NOT NULL,major_brand STRING,movie_duration_ms BIGINT NOT NULL," +
+        "n_tracks BIGINT NOT NULL,track_id BIGINT,handler STRING,codec STRING," +
+        "n_samples BIGINT,duration_ms BIGINT"),
+      (Mp4.keyframeFingerprints(in, "key", "blob"),
+        "id BIGINT NOT NULL,dhash BIGINT NOT NULL"),
+      (Pdf.extractTexts(in, "key", "blob"),
+        "id BIGINT NOT NULL,xref_ok BOOLEAN NOT NULL,n_streams BIGINT NOT NULL," +
+        "n_chars BIGINT NOT NULL,text STRING"),
+      (Pdf.extractImages(in, "key", "blob"),
+        "id BIGINT NOT NULL,image_idx BIGINT NOT NULL,payload BINARY"))
+    twins.foreach { case (df, ddl) => assert(df.schema.toDDL == ddl) }
+    // each twin read the right column: the rows each format yields
+    assert(Mp4.containerMeta(in, "key", "blob").where(col("major_brand") === "isom")
+      .select("id").distinct().as[Long].collect().toSeq == Seq(1L))
+    assert(Multimodal.webpMetadataFrame(in, "key", "blob").select("id").as[Long]
+      .collect().toSeq == Seq(2L))
+    assert(Pdf.extractTexts(in, "key", "blob").where(col("n_chars") > 0)
+      .select("id").as[Long].collect().toSeq == Seq(3L))
   }
 
   test("mp3: frame walk, ID3v2 skip, VBR flag, truncation and junk degrades") {
@@ -689,7 +761,7 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq(
       (1L, Multimodal.generateWebp(1L, 3)),
       (2L, Array[Byte](1, 2, 3))).toDF("id", "payload")
-    val rows = Multimodal.webpMetadataFrame(spark, df).collect()
+    val rows = Multimodal.webpMetadataFrame(df).collect()
     assert(rows.length == 1 && rows(0).getLong(0) == 1L &&
       rows(0).getBoolean(5) && rows(0).getLong(6) == 3L, rows.toSeq)
   }

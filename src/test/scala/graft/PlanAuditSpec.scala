@@ -267,6 +267,38 @@ class PlanAuditSpec extends SparkSpec {
     assert(sh.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     val inc = Dedup.incrementalNearDup(docs, docs.where(col("doc_id") > 1), k = 8)
     assert(shinglings(inc) == 2, inc.queryExecution.optimizedPlan) // corpus + batch
+    // signatures and verification sets share one shingle-set cache;
+    // drained first so that only this call's caches are counted
+    OperatorCaches.drainMaterialized()
+    val ver = Dedup.lshVerifiedPairs(docs, k = 8, bands = 4, threshold = 0.5)
+    assert(shinglings(ver) == 1, ver.queryExecution.optimizedPlan)
+    assert(ver.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      Seq((1L, 2L, 0.5)))
+  }
+
+  test("tokenizing runs once per document: the domain test rides an explode") {
+    // A Filter on the token count is pushed below the projection with its
+    // own split; the scorers project the tokens once and drop documents
+    // outside the domain in a one-element explode instead.
+    import spark.implicits._
+    def splits(df: DataFrame): Int = "split\\(".r.findAllIn(
+      df.queryExecution.optimizedPlan.map(_.simpleString(1000000)).mkString("\n")).size
+    val docs = spark.sparkContext.parallelize(
+      Seq((1L, "a b c a b c"), (2L, "x y z"), (3L, "one")), 1).toDF("doc_id", "text")
+    val rep = TextAnalysis.repetition(docs, n = 2)
+    assert(splits(rep) == 1, rep.queryExecution.optimizedPlan)
+    assert(rep.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+      .toSeq == Seq((1L, 5L, 2L), (2L, 2L, 1L)))
+    val bi = TextAnalysis.bigramScore(docs, vocabSize = 4)
+    assert(splits(bi) == 1, bi.queryExecution.optimizedPlan)
+    assert(bi.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    val model = Corpus.classifierTrain(docs, col("doc_id") === 1L, buckets = 8)
+    val cf = Corpus.classifierFilter(docs, model, threshold = 0.0)
+    assert(splits(cf) == 1, cf.queryExecution.optimizedPlan)
+    assert(cf.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    val ds = Corpus.dsirApply(docs, model, acceptScale = 1e9)
+    assert(splits(ds) == 1, ds.queryExecution.optimizedPlan)
+    assert(ds.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
   test("g09/g10/g11 shapes: literal-probe one-hops, no join, edge table never shuffled") {
